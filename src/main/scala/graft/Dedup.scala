@@ -19,7 +19,7 @@ import graft.functions.VectorFunctions
   * scale, each round one shuffle (join on the edge list) + one partial
   * aggregate. The loop is driver-COORDINATED but data never leaves the
   * cluster (same structure GraphX/GraphFrames use); lineage is cut per
-  * round with localCheckpoint so plans stay bounded.
+  * round ([[Lineage.cut]]) so plans stay bounded.
   *
   * The DuckDB oracle computes the same fixpoint as a recursive CTE
   * (transitive closure + min over reachable set) — an independent
@@ -111,8 +111,8 @@ object Dedup {
     // (4 corpus passes, measured ~0.95 s of q_ngram_jaccard's 1.2 s at
     // sf0.1; at 100 TB, 4 corpus text re-scans vs one slim (id, shs, sz)
     // materialization).
-    val lb = base(left).localCheckpoint(eager = false)
-    val rb = if (sameFrame) lb else base(right).localCheckpoint(eager = false)
+    val lb = Lineage.cut(base(left))
+    val rb = if (sameFrame) lb else Lineage.cut(base(right))
     // self-join: the a<b predicate canonicalizes and halves the space;
     // bipartite: every qualifying (left, right) pair is kept as-is
     val orient =
@@ -200,7 +200,7 @@ object Dedup {
     val t = minC
     // ONE plan instance feeds the prefix side, the index side, and both
     // verify joins (the round-14 shared-instance lesson: fresh subtrees
-    // re-execute the shingle scan) — and it is localCheckpoint'd (round
+    // re-execute the shingle scan) — and its lineage is cut (round
     // 17, per the verdict's A/B ask): the shared instance prevented
     // re-ANALYSIS but the scan + shingle kernel still re-EXECUTED in up
     // to four sibling subtrees; materializing the slim (id, shs, sz)
@@ -209,12 +209,11 @@ object Dedup {
     // pays ~0.4 s materialization), identical results — and at 100 TB
     // the avoided work is four corpus-text re-scans, which dwarfs the
     // one slim materialization
-    val base = docs
+    val base = Lineage.cut(docs
       .select(col("doc_id"),
         call_function("shingle_hashes", col("text"), lit(MinHash.GramLen)).as("shs"))
       .select(col("doc_id"), col("shs"), size(col("shs")).cast("long").as("sz"))
-      .filter(col("sz") > 0)
-      .localCheckpoint(eager = false)
+      .filter(col("sz") > 0))
     val prefLen = (col("sz") - ceil(col("sz") * lit(t)) + 1).cast("int")
     // per-doc df-ascending order: bounded by doc length (the per-doc
     // collect/sort bound of F11/F30), never a corpus structure. ONE
@@ -255,11 +254,10 @@ object Dedup {
         val sh = base.select(col("doc_id"), col("sz"), explode(col("shs")).as("shh"))
         // global df per shingle: partial-agg collapsed, hot = one row
         val df = sh.groupBy(col("shh")).agg(count(lit(1)).as("__df"))
-        sh.join(df, Seq("shh"))
+        Lineage.cut(sh.join(df, Seq("shh"))
           .groupBy(col("doc_id"), col("sz"))
           .agg(expr("transform(sort_array(collect_list(struct(__df, shh))), p -> p.shh)")
-            .as("ord"))
-          .localCheckpoint(eager = false)
+            .as("ord")))
       }
     val inner = ordAll
       .select(col("doc_id").as("inner_id"), col("sz").as("sa"),
@@ -359,15 +357,15 @@ object Dedup {
     * self-join for mutuality detection — edges are near-dup-sparse, not
     * corpus-quadratic, by the prefix filter), two weight lookups keyed
     * on doc_id, and one distinct per label; the corpus-sized work is
-    * [[containmentPairs]] itself. The edge list is localCheckpoint'd
+    * [[containmentPairs]] itself. The edge list is cut
     * once and feeds both sides of the mutual self-join (the round-14
     * shared-instance lesson).
     */
   def containmentVerdicts(s: SparkSession, docs: DataFrame, minC: Double,
       weight: org.apache.spark.sql.Column): DataFrame = {
-    val e = containmentPairs(s, docs, minC)
-      .select(col("inner_id"), col("outer_id"))
-      .localCheckpoint(eager = false) // slim; feeds both mutual-join sides
+    // slim; feeds both mutual-join sides
+    val e = Lineage.cut(containmentPairs(s, docs, minC)
+      .select(col("inner_id"), col("outer_id")))
     val rev = e.select(col("outer_id").as("inner_id"),
       col("inner_id").as("outer_id"), lit(true).as("__mut"))
     val w = docs.select(col("doc_id"), weight.cast("long").as("__w"))
@@ -559,10 +557,10 @@ object Dedup {
   private def paragraphLabeled(withId: DataFrame)(
       ndOf: DataFrame => DataFrame): DataFrame = {
     val withFp = withId.withColumn("__fp", md5(col("para_text")))
-    val reps = withFp.groupBy(col("__fp"))
+    // feeds the pair join AND the join-back
+    val reps = Lineage.cut(withFp.groupBy(col("__fp"))
       .agg(min(col("para_id")).as("rep_id"),
-        expr("min_by(para_text, para_id)").as("text"))
-      .localCheckpoint(eager = false) // feeds the pair join AND the join-back
+        expr("min_by(para_text, para_id)").as("text")))
     val ndReps = ndOf(reps.select(col("rep_id").as("doc_id"), col("text")))
       .distinct().withColumn("__nd", lit(true))
     withFp
@@ -847,7 +845,7 @@ object Dedup {
     * is bounded by construction, so its quadratic-in-band cost is capped.
     */
   def editDistancePairsQGram(s: SparkSession, docs: DataFrame, maxDist: Int,
-      q: Int = 4, checkpointDir: Option[String] = None): DataFrame = {
+      q: Int = 4): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
     require(q >= 2, s"q must be >= 2, got $q")
     VectorFunctions.register(s)
@@ -856,22 +854,12 @@ object Dedup {
     // back-joins, so it keeps a LAZY lineage cut (one corpus scan, the
     // sibling subtrees read the materialized blocks — without it the
     // plan re-scans the corpus per reference, 4→12 parquet scans
-    // measured). Two round-21 changes: (a) `ng` (the positional gram
-    // count) is arithmetic — charQgramHashes emits one hash per byte
-    // position, so |G| = max(0, bytelen−q+1) and the round-20 shape's
+    // measured). `ng` (the positional gram count, round 21) is
+    // arithmetic — charQgramHashes emits one hash per byte position, so
+    // |G| = max(0, bytelen−q+1) and the round-20 shape's
     // size(char_qgram_hashes(text)) was a full corpus hash+sort pass
-    // spent computing a subtraction; (b) `checkpointDir` (VERDICT r20
-    // item 8) switches the cut to a RELIABLE checkpoint for cluster
-    // runs — localCheckpoint blocks are executor-local with truncated
-    // lineage, so on a real cluster one lost executor kills the job
-    // irrecoverably; with a reliable dir every cut survives executor
-    // loss (the connectedComponents `cut` contract, same trade: one
-    // distributed-FS write per cut).
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    val base = cut(docs
+    // spent computing a subtraction.
+    val base = Lineage.cut(docs
       .select(col("doc_id"), col("text"), octet_length(col("text")).cast("long").as("len"))
       .withColumn("ng", greatest(lit(0L), col("len") - lit((q - 1).toLong))))
     // |G| = max(0, bytelen−q+1); smallness decided on ng, zone on bytes
@@ -879,7 +867,7 @@ object Dedup {
     val shortZone = docs.filter(octet_length(col("text")) <= (q - 1) + qd + maxDist)
     // Corpus gram-frequency fit (optimization round 21, guide §2.3/§2.4):
     // ONE bounded map-aggregate pass (`qgram_freq_agg`) replaces the
-    // explode-one-row-per-occurrence → groupBy → localCheckpoint →
+    // explode-one-row-per-occurrence → groupBy → lineage cut →
     // count() → collect() chain whenever the vocabulary fits the prefix-
     // kernel budget — each task ships a ≤1 MB key/count map instead of
     // ~8× the corpus bytes of gram rows, and the vocab-size probe and the
@@ -896,8 +884,8 @@ object Dedup {
     val fit = if (fitRow.isNullAt(0)) null else fitRow.getStruct(0)
     lazy val gx = big.select(col("doc_id"),
       explode(call_function("char_qgram_hashes", col("text"), lit(q))).as("gh"))
-    lazy val dfreq = gx.groupBy(col("gh")).agg(count(lit(1)).as("freq"))
-      .localCheckpoint(eager = false) // sized once, reused by join or pull
+    // sized once, reused by join or pull
+    lazy val dfreq = Lineage.cut(gx.groupBy(col("gh")).agg(count(lit(1)).as("freq")))
     lazy val vocab = dfreq.count()
     // Prefix VALUES per doc: the distinct grams among the doc's qd+1
     // smallest (freq, gram) occurrence keys, via the bounded-heap
@@ -1096,11 +1084,9 @@ object Dedup {
   def connectedComponents(s: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxIters: Int = 25, checkEvery: Int = 2,
       contractAbove: Long = DefaultContractAbove,
-      checkpointDir: Option[String] = None,
       localFinishMaxEdges: Long = DefaultLocalFinishEdges): DataFrame =
     connectedComponentsHybridWithRounds(s, nodes, edges, maxIters, checkEvery,
-      contractAbove, checkpointDir,
-      localFinishMaxEdges = localFinishMaxEdges)._1
+      contractAbove, localFinishMaxEdges = localFinishMaxEdges)._1
 
   /** Edge lists at or above this size get label-contracted between
     * convergence blocks; below it the rewrite's two joins + distinct cost
@@ -1209,8 +1195,8 @@ object Dedup {
     * convergence block, standing in for the executor loss local[n]
     * cannot produce — the spec drops every persisted block here and
     * asserts the reliable-checkpoint loop completes with correct labels
-    * (its rounds live as FILES under checkpointDir, not as executor
-    * blocks) while the default localCheckpoint loop dies irrecoverably.
+    * (its rounds live as FILES under the checkpoint directory, not as
+    * executor blocks) while the default local loop dies irrecoverably.
     * Never set outside tests — and fenced so it CANNOT fire outside
     * them: the hook is honored only when scalatest is on the classpath
     * (round-10 ADVICE: a leaked assignment — a spec failing before its
@@ -1249,30 +1235,18 @@ object Dedup {
     * DedupSpec forces contraction on planted graphs and asserts labels
     * identical to the uncontracted run.
     *
-    * Fault tolerance (`checkpointDir`, round 8): the default lineage cut
-    * is `localCheckpoint` — blocks live on EXECUTORS with their lineage
-    * truncated, so on a real cluster losing ANY executor mid-loop loses
-    * blocks that can never be recomputed and kills the job irrecoverably.
-    * Fine on local[n] and for short loops; for a long-running 100 TB run,
-    * pass a reliable `checkpointDir` (HDFS/S3) and every cut becomes a
-    * reliable `checkpoint()` — each round's labels and the contracted
-    * edge list survive executor loss at the cost of one distributed-FS
-    * write per cut. Labels are bit-identical either way (DedupSpec).
-    * Recovery semantics: with a reliable dir the loop holds NO state in
-    * executor block storage — every block's inputs re-read from the
-    * checkpoint files, so losing any (or every) executor mid-loop costs
-    * only a recompute-from-files of the current block. Round9OpsSpec
+    * Fault tolerance: every round's labels and the contracted edge list
+    * go through [[Lineage.cut]], so with a checkpoint directory set the
+    * loop holds no state in executor block storage. Round9OpsSpec
     * simulates total block loss between blocks and asserts the reliable
-    * loop completes with correct labels while the localCheckpoint loop
-    * fails irrecoverably — the documented trade, now exercised.
+    * loop completes with correct labels while the local loop fails.
     */
   def connectedComponentsWithRounds(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 25, checkEvery: Int = 2,
       contractAbove: Long = DefaultContractAbove,
-      checkpointDir: Option[String] = None,
       localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
     val (lbls, iter, converged, _) = minLabelCore(s, nodes, edges, maxIters,
-      checkEvery, contractAbove, checkpointDir, localFinishMaxEdges)
+      checkEvery, contractAbove, localFinishMaxEdges)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds — " +
@@ -1296,17 +1270,12 @@ object Dedup {
   private def minLabelCore(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int, checkEvery: Int,
       contractAbove: Long,
-      checkpointDir: Option[String],
       localFinishMaxEdges: Long = DefaultLocalFinishEdges)
       : (DataFrame, Int, Boolean, DataFrame) = {
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = eager)
-      else df.localCheckpoint(eager = eager)
     // materialize the caller's edge plan ONCE and mirror from the cut —
     // a union of plan + swapped plan would execute the (often expensive:
     // LSH bands, prefix-filter joins) edge build twice in the same job
-    val e0 = cut(edges.select(col("a_id").as("u"), col("b_id").as("v")),
+    val e0 = Lineage.cut(edges.select(col("a_id").as("u"), col("b_id").as("v")),
       eager = true)
     val nE = e0.count() // counts the blocks the eager cut just materialized
     // bounded local finish (optimization round 20, [[DefaultLocalFinishEdges]]):
@@ -1365,7 +1334,7 @@ object Dedup {
     // 1-step-collapsed mega-component sheds its edges before the block
     // loop ever runs) and after each non-converged block.
     def contract(lbls: DataFrame): Unit = {
-      sym = cut(sym
+      sym = Lineage.cut(sym
         .join(lbls.select(col("u").as("cu"), col("lbl").as("clu")),
           col("u") === col("cu"))
         .join(lbls.select(col("u").as("cv"), col("lbl").as("clv")),
@@ -1382,7 +1351,7 @@ object Dedup {
     // shallow graphs (the near-dup norm) that is one fewer driver round
     // (the A/B against an eager seed sits inside ambient noise; lazy is
     // kept for the job-count argument)
-    var labels = cut(step(nodes.select(col("doc_id").as("u"), col("doc_id").as("lbl"))),
+    var labels = Lineage.cut(step(nodes.select(col("doc_id").as("u"), col("doc_id").as("lbl"))),
       eager = false)
     if (symBig) contract(labels)
     var converged = false
@@ -1395,7 +1364,7 @@ object Dedup {
         stepped = step(stepped)
         if ((iter + i) % 2 == 0) stepped = shortcut(stepped)
       }
-      val next = cut(stepped, eager = false)
+      val next = Lineage.cut(stepped, eager = false)
       // labels only decrease: no change across k steps ⇒ fixpoint (a
       // state stable under neighbor-min alone is already per-component
       // constant at the min id; the shortcut can only reach it sooner)
@@ -1444,13 +1413,12 @@ object Dedup {
   def connectedComponentsHybridWithRounds(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 25, checkEvery: Int = 2,
       contractAbove: Long = DefaultContractAbove,
-      checkpointDir: Option[String] = None,
       starSwitchAfter: Int = 3,
       localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
     require(starSwitchAfter >= 1, s"starSwitchAfter must be >= 1, got $starSwitchAfter")
     val (lbls, iter, converged, e0) = minLabelCore(s, nodes, edges,
       math.min(starSwitchAfter, maxIters), checkEvery, contractAbove,
-      checkpointDir, localFinishMaxEdges)
+      localFinishMaxEdges)
     if (converged)
       (lbls.select(col("u").as("doc_id"), col("lbl").as("cluster_id")), iter)
     else {
@@ -1468,8 +1436,7 @@ object Dedup {
       // first rounds collapse the bulk distributed, and the residual
       // that remains usually fits the pull budget
       connectedComponentsStarWithRounds(s, nodes,
-        e2.unionByName(ptr), maxIters, checkpointDir,
-        localFinishMaxEdges) match {
+        e2.unionByName(ptr), maxIters, localFinishMaxEdges) match {
         case (starLbls, starRounds) => (starLbls, iter + starRounds)
       }
     }
@@ -1503,12 +1470,7 @@ object Dedup {
     */
   def connectedComponentsStarWithRounds(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None,
       localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
     // canonical undirected edges: (u < v), self-loops dropped. NO initial
     // distinct: duplicate input edges cannot change a groupBy-min and the
     // first large-star's own distinct dedups the set — at 250M edges the
@@ -1517,10 +1479,10 @@ object Dedup {
     // the one corner effect is an already-star-forest input costing one
     // extra confirmation round, since the raw multiset's signature
     // differs from its deduped rewrite)
-    var e = cut(edges
+    var e = Lineage.cut(edges
       .select(least(col("a_id"), col("b_id")).as("u"),
         greatest(col("a_id"), col("b_id")).as("v"))
-      .filter(col("u") =!= col("v")))
+      .filter(col("u") =!= col("v")), eager = true)
     def signature(df: DataFrame): (Long, Long) = {
       // bit_xor: overflow-free, order-independent, exact over a DISTINCT
       // edge set. Every per-round state (eS) is distinct by build; the
@@ -1544,9 +1506,9 @@ object Dedup {
     var converged = sig._1 == 0L
     while (!converged && iter < maxIters) {
       fireBlockLossHook(s) // same executor-loss simulation hook as the
-      // min-label loop: with a reliable checkpointDir every round's
+      // min-label loop: with a checkpoint directory every round's
       // inputs re-read from files, so total block loss costs a recompute
-      // (Round13OpsSpec); with localCheckpoint it is fatal, as documented
+      // (Round13OpsSpec); with local cuts it is fatal, as documented
       // large-star: (v, m(u)) for every v ∈ Γ(u), v > u; m ≤ u < v keeps
       // the canonical orientation for free
       val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -1559,12 +1521,12 @@ object Dedup {
       // x itself to m(x) = min parent; m < n after the self-loop filter
       val dirx = eL.select(col("v").as("x"), col("u").as("p"))
       val minsS = dirx.groupBy("x").agg(min(col("p")).as("m"))
-      val eS = cut(dirx.join(minsS, Seq("x"))
+      val eS = Lineage.cut(dirx.join(minsS, Seq("x"))
         .select(col("m"), col("p").as("n"))
         .unionByName(minsS.select(col("m"), col("x").as("n")))
         .filter(col("m") =!= col("n"))
         .select(col("m").as("u"), col("n").as("v"))
-        .distinct())
+        .distinct(), eager = true)
       val nextSig = signature(eS)
       converged = nextSig == sig
       sig = nextSig

@@ -82,7 +82,7 @@ object Graft {
     * edge list (duplicates chain — A≈B≈C is one group, same reason the
     * Jaccard path clusters). doc_id → cluster_id (min doc_id in the
     * component); singletons label themselves. Same CC machinery (and
-    * the same reliable-checkpoint option story) as [[dedupGroups]].
+    * the same [[Lineage.cut]] durability) as [[dedupGroups]].
     */
   def editDedupGroups(spark: SparkSession, docs: DataFrame, maxDist: Int = 2,
       atScale: Boolean = false, q: Int = 4): DataFrame =
@@ -272,17 +272,10 @@ object Graft {
     * pre-tokenized text, the F52 ⊕ F33 law extended to the whole
     * manifest); defaults to whitespace tokens, the graded contract.
     *
-    * `doCheckpoint` (round 19, advice): the salted copies frame feeds
-    * both sides of the manifest join, so by default it is
-    * localCheckpoint'd LAZILY (eager = false — no job at construction;
-    * the first action materializes it, the second side reuses it: the
-    * mix18 cert's 55→31 s win either way). Ownership: the checkpoint
-    * blocks live until the SparkSession ends or the executor storage
-    * evicts them — a caller building MANY manifests in one session who
-    * wants deterministic release should pass `doCheckpoint = false`
-    * and manage its own persist/unpersist around the returned frame;
-    * note lineage truncation also makes executor loss during the job
-    * non-recomputable (acceptable for a manifest job you just re-run).
+    * The salted copies frame feeds both sides of the manifest join, so
+    * it is cut lazily ([[Lineage.cut]]): no job at construction, the
+    * first action materializes it and the second side reuses it (the
+    * mix18 cert's 55→31 s win, round 19).
     */
   /** `fill` (optimization round 21): a caller who has ALREADY materialized
     * `TextOps.tokenBudgetMix(docs, budgets, ...)` — e.g. to derive epoch
@@ -296,7 +289,6 @@ object Graft {
   def mixManifest(docs: DataFrame, budgets: Map[String, Long],
       epochsMicros: Map[String, Long], nShards: Int, seed: Long = 0L,
       tokenCount: Option[org.apache.spark.sql.Column] = None,
-      doCheckpoint: Boolean = true,
       fill: Option[DataFrame] = None)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, concat, lit, size, split}
@@ -320,11 +312,9 @@ object Graft {
     // ReusedExchange, 18 parquet scans in the un-checkpointed plan);
     // at corpus scale that is 2× the corpus passes. Intra-query reuse,
     // the F19c pattern (round 18); LAZY since round 19 (advice) so
-    // construction runs no job — see the doCheckpoint scaladoc.
-    val salted0 = copies.withColumn("copy_id",
-      concat(col("doc_id").cast("string"), lit(":"), col("epoch")))
-    val salted =
-      if (doCheckpoint) salted0.localCheckpoint(eager = false) else salted0
+    // construction runs no job.
+    val salted = Lineage.cut(copies.withColumn("copy_id",
+      concat(col("doc_id").cast("string"), lit(":"), col("epoch"))))
     salted.join(
         TextOps.shuffleShards(salted, nShards, seed, idCol = "copy_id"),
         Seq("copy_id"))
@@ -388,10 +378,8 @@ object Graft {
     * to its centroid. See [[Similarity.prototypeDiversify]].
     */
   def diversify(spark: SparkSession, emb: DataFrame, dropMillionths: Long,
-      k: Int = 0, iters: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame =
-    Similarity.prototypeDiversify(spark, emb, dropMillionths, k, iters,
-      checkpointDir = checkpointDir)
+      k: Int = 0, iters: Int = 2): DataFrame =
+    Similarity.prototypeDiversify(spark, emb, dropMillionths, k, iters)
 
   def splitByGroup(labeled: DataFrame, testMillionths: Long,
       groupCol: String = "cluster_id", seed: Long = 0L): DataFrame =
@@ -769,7 +757,7 @@ object Graft {
     *    importance model.
     */
   final case class DsirKeep(target: DataFrame, buckets: Int = 1024,
-      seed: Long = 0L, checkpointDir: Option[String] = None,
+      seed: Long = 0L,
       rawReference: Option[DataFrame] = None,
       preFit: Option[TextOps.DsirModel] = None) {
     require(buckets > 0, s"buckets must be positive, got $buckets")
@@ -778,7 +766,7 @@ object Graft {
       val ref = rawReference.getOrElse(throw new IllegalArgumentException(
         "DsirKeep needs `rawReference` (the frozen raw-model fit corpus) " +
           "in a streaming pipeline — the pool fit needs the whole pool"))
-      TextOps.dsirFit(ref, target, buckets, seed, checkpointDir)
+      TextOps.dsirFit(ref, target, buckets, seed)
     }
   }
 
@@ -787,7 +775,7 @@ object Graft {
       * importance model — the F46c "last month's model" serving path:
       * no fit corpora; `target` is never touched when `preFit` is set. */
     def frozen(model: TextOps.DsirModel): DsirKeep =
-      DsirKeep(null, model.buckets, model.seed, None, None, Some(model))
+      DsirKeep(null, model.buckets, model.seed, None, Some(model))
   }
 
   /** Calibrated per-source quality gate (F44 wired into curation — round
@@ -1052,7 +1040,7 @@ object Graft {
     * the pipeline already holds (d1 and the CC labels — the two
     * expensive stages); the later gates are row filters cheap enough
     * that re-executing them per count BEATS checkpointing each stage:
-    * measured at the 50k-doc stress, per-stage localCheckpoints made the
+    * measured at the 50k-doc stress, per-stage lineage cuts made the
     * audited run ~60% SLOWER (full-width text rows forced to materialize
     * where a count() scans column-pruned), so the lazy form is the
     * shipped one. The audit's cost is one count job per gate, paid only
@@ -1256,10 +1244,10 @@ object Graft {
     val audit = counts.zip(counts.head._2 +: counts.map(_._2)).map {
       case ((name, kept), prev) => StageCount(name, kept, prev - kept)
     }
-    val survivors = stages.last._2.localCheckpoint(eager = false)
+    val survivors = Lineage.cut(stages.last._2)
     val ledger = curationLedger(stages.init :+ (stages.last._1 -> survivors))
-    val manifest = mixManifest(survivors, budgets, epochsMicros, nShards,
-      seed, tokenCount).localCheckpoint(eager = false)
+    val manifest = Lineage.cut(mixManifest(survivors, budgets, epochsMicros,
+      nShards, seed, tokenCount))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("pos"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -1578,8 +1566,7 @@ object Graft {
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     // consumed by CC's node list, CC's edge list, AND the later semi-joins
     // — checkpoint so the exact-dedup join runs once, not 3+ times
-    val d1 = base.join(reps1, Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = false)
+    val d1 = Lineage.cut(base.join(reps1, Seq("doc_id"), "left_semi"))
     val cc = Dedup.connectedComponents(spark, d1,
       Dedup.jaccardEdgesOf(spark, d1, minJaccard))
     val d2 = d1.join(
@@ -1666,8 +1653,8 @@ object Graft {
       // the loaded model.
       if (dk.rawReference.isEmpty && dk.preFit.isEmpty)
         d3d.join(
-          TextOps.dsirResample(d3d, dk.target, dk.buckets, dk.seed,
-            dk.checkpointDir).select("doc_id"),
+          TextOps.dsirResample(d3d, dk.target, dk.buckets, dk.seed)
+            .select("doc_id"),
           Seq("doc_id"), "left_semi")
       else
         d3d.filter(dk.model.keepCol(col("text"), col("doc_id")))

@@ -140,16 +140,15 @@ object MinHash {
     VectorFunctions.registered(docs)
     // gram-less docs have NULL signatures — they can never near-dup, and
     // banding them would put every short doc in the same bucket.
-    // localCheckpoint: this subtree (scan + md5 + the 32-perm minhash
+    // lineage cut: this subtree (scan + md5 + the 32-perm minhash
     // kernel) feeds the band join AND three expansion joins — without the
     // checkpoint Spark re-executes it up to 6× (ReuseExchange only dedupes
     // the identically-shaped a/b shuffles). Lazy form: materialized on the
     // first action, (doc_id, tkey, sig) ≈ 300 B/doc — far smaller than
     // the corpus it replaces re-scanning.
-    val sigs = docs.select(col("doc_id"), md5(col("text")).as("tkey"),
+    val sigs = Lineage.cut(docs.select(col("doc_id"), md5(col("text")).as("tkey"),
         call_function("minhash_sig", col("text"), lit(NumPerms), lit(GramLen)).as("sig"))
-      .filter(col("sig").isNotNull)
-      .localCheckpoint(eager = false)
+      .filter(col("sig").isNotNull))
     // exact-dup pre-pass: identical texts have identical signatures, so
     // ONE representative per distinct text enters banding — on a
     // duplicate-heavy crawl this is what keeps band buckets bounded (k
@@ -296,13 +295,12 @@ object MinHash {
   private def simhashRepPairs(docs: org.apache.spark.sql.DataFrame,
       maxHamming: Int): (DataFrame, DataFrame) = {
     VectorFunctions.register(docs.sparkSession)
-    // localCheckpoint: the scan + md5 + simhash kernel feed the band join
+    // lineage cut: the scan + md5 + simhash kernel feed the band join
     // AND the expansion joins — lazy cut so Spark does not re-execute the
     // subtree per consumer (the candidatePairs precedent)
-    val sigs = docs.filter(col("text").isNotNull)
+    val sigs = Lineage.cut(docs.filter(col("text").isNotNull)
       .select(col("doc_id"), md5(col("text")).as("tkey"),
-        call_function("simhash64", col("text")).as("sig"))
-      .localCheckpoint(eager = false)
+        call_function("simhash64", col("text")).as("sig")))
     // sig is a pure function of text, so first() within a tkey group is
     // deterministic
     val groups = sigs.groupBy(col("tkey")).agg(first(col("sig")).as("sig"))

@@ -357,7 +357,7 @@ object Multimodal {
   /** The shared pair machinery over ANY (doc_id, sig) frame. */
   private[graft] def sigNearDupPairs(raw: DataFrame,
       maxHamming: Int): DataFrame = {
-    val sigs = raw.localCheckpoint(eager = false)
+    val sigs = Lineage.cut(raw)
     val groups = sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("rep"))
     val repPairs = MinHash.hammingPairs64(
       groups.select(col("rep").as("doc_id"), col("sig")), maxHamming)
@@ -736,7 +736,7 @@ object Multimodal {
     * list (unhashable records label themselves). */
   private[graft] def sigDedupGroups(spark: SparkSession, ids: DataFrame,
       raw: DataFrame, maxHamming: Int): DataFrame = {
-    val sigs = raw.localCheckpoint(eager = false)
+    val sigs = Lineage.cut(raw)
     val groups = sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("rep"))
     val repPairs = MinHash.hammingPairs64(
       groups.select(col("rep").as("doc_id"), col("sig")), maxHamming)
@@ -1020,7 +1020,7 @@ object Multimodal {
       verifyHamming: Int): DataFrame = {
     require(verifyHamming >= 0 && verifyHamming <= 63,
       s"verifyHamming must be in [0, 63], got $verifyHamming")
-    val sigs = raw.localCheckpoint(eager = false)
+    val sigs = Lineage.cut(raw)
     // Rep-collapse is per (sig, sig2) PAIR, not per sig alone, so several
     // reps sharing one primary sig can re-enter hammingPairs64 and share
     // every band key. The re-expansion is bounded by the secondary
@@ -1053,9 +1053,8 @@ object Multimodal {
   def mediaDedupGroupsVerified(spark: SparkSession,
       records: Dataset[MediaRecord], maxHamming: Int = 3,
       verifyHamming: Int = 6): DataFrame = {
-    val slim = mediaSigs2(records)
-      .select(col("id").as("doc_id"), col("modality"), col("sig"), col("sig2"))
-      .localCheckpoint(eager = false)
+    val slim = Lineage.cut(mediaSigs2(records)
+      .select(col("id").as("doc_id"), col("modality"), col("sig"), col("sig2")))
     HashedModalities.toSeq.sorted.map { m =>
       sigDedupGroupsVerified(spark,
         slim.filter(col("modality") === m).select(col("doc_id")),
@@ -1132,10 +1131,9 @@ object Multimodal {
       maxHamming: Int = 3, verifyHamming: Int = 6)
       : (Dataset[MediaRecord], Seq[Graft.StageCount], DataFrame) = {
     import spark.implicits._
-    val recs = records.localCheckpoint(eager = false)
-    val slim = mediaSigs2(recs)
-      .select(col("id").as("doc_id"), col("modality"), col("sig"), col("sig2"))
-      .localCheckpoint(eager = false)
+    val recs = Lineage.cut(records)
+    val slim = Lineage.cut(mediaSigs2(recs)
+      .select(col("id").as("doc_id"), col("modality"), col("sig"), col("sig2")))
     def reps(g: DataFrame): DataFrame =
       g.filter(col("doc_id") === col("cluster_id")).select(col("doc_id"))
     val nIn = slim.count()
@@ -1144,10 +1142,11 @@ object Multimodal {
       ("video_neardup", "video"))
     val byModality = stageNames.map { case (stage, m) =>
       val sub = slim.filter(col("modality") === m)
-      val groups = sigDedupGroupsVerified(spark, sub.select(col("doc_id")),
+      val groups = Lineage.cut(sigDedupGroupsVerified(spark,
+        sub.select(col("doc_id")),
         sub.filter(col("sig").isNotNull)
           .select(col("doc_id"), col("sig"), col("sig2")),
-        maxHamming, verifyHamming).localCheckpoint(eager = false)
+        maxHamming, verifyHamming))
       val dropped = sub.select(col("doc_id"))
         .join(reps(groups), Seq("doc_id"), "left_anti")
       (stage, reps(groups), dropped, sub.count() - reps(groups).count())

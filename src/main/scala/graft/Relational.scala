@@ -310,12 +310,12 @@ object Relational {
     * DELIBERATE double-scan (round-15 ADVICE): the survivor branch and
     * the might-contain branch each re-run `big`'s subtree. That is the
     * chosen trade, not an oversight — the repo's shared-subtree
-    * localCheckpoint convention (simhashRepPairs) materializes SMALL
+    * [[Lineage.cut]] convention (simhashRepPairs) materializes SMALL
     * frames, but `big` here is the corpus by contract: checkpointing
     * 100 TB to executor disk to save a second columnar scan (with the
     * bloom probe and column pruning pushed to both scans) costs more
     * than it saves at every scale that matters. Callers whose `big` is
-    * an expensive derived frame (not a scan) should localCheckpoint it
+    * an expensive derived frame (not a scan) should cut it
     * themselves before calling.
     */
   def bloomAntiJoin(big: DataFrame, bigKey: String, keys: DataFrame,

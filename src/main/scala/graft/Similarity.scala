@@ -1019,9 +1019,9 @@ object Similarity {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got $k, $iters")
     VectorFunctions.register(embs.sparkSession)
     val probe = KmeansModel(Seq.empty)
-    val q = embs.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"), probe.quantCol(col(vecCol)).as("q"))
-      .localCheckpoint(eager = false) // reused iters + 1 times
+    // reused iters + 1 times
+    val q = Lineage.cut(embs.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("id"), probe.quantCol(col(vecCol)).as("q")))
     val init = q
       .withColumn("h",
         conv(substring(md5(col("id").cast("string")), 1, 8), 16, 10)
@@ -1179,27 +1179,21 @@ object Similarity {
     * dist = score), so NO corpus-sized — and no cluster-sized — window
     * partition exists for any cluster-size distribution. The assigned
     * frame feeds the calibration's three subtrees once via
-    * `localCheckpoint` (or reliable `checkpointDir`, the round-17
-    * fault-tolerance convention).
+    * [[Lineage.cut]].
     */
   def prototypeDiversify(s: SparkSession, emb: DataFrame,
       dropMillionths: Long, k: Int = 0, iters: Int = 2,
-      vecCol: String = "embedding", idCol: String = "vec_id",
-      checkpointDir: Option[String] = None): DataFrame = {
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(dropMillionths >= 0L && dropMillionths <= 1000000L,
       s"dropMillionths must be in [0, 1e6], got $dropMillionths")
     val nonNull = emb.filter(col(vecCol).isNotNull)
     val kk = if (k > 0) k else
       math.ceil(math.sqrt(nonNull.count().toDouble)).toInt.max(1)
     val model = kmeansFitExact(nonNull, kk, iters, vecCol, idCol)
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    val assignedRaw = nonNull
+    val assigned = Lineage.cut(nonNull
       .select(col(idCol), model.bestCol(col(vecCol)).as("best"))
       .select(col(idCol), col("best.i").as("cluster"),
-        col("best.d").as("dist_sq"))
-    val assigned =
-      if (checkpointDir.isDefined) assignedRaw.checkpoint(eager = false)
-      else assignedRaw.localCheckpoint(eager = false)
+        col("best.d").as("dist_sq")))
     TextOps.scoreCalibration(assigned, "dist_sq", sourceCol = "cluster",
       idCol = idCol)
       .select(col(idCol), col("cluster"),
@@ -1259,20 +1253,11 @@ object Similarity {
     * measured the literal form ~17× slower than broadcast already at
     * k = 64 on the FIT side's repeated passes; the broadcast join form is
     * the scale path whenever k itself is large. The assigned frame is
-    * localCheckpoint'd so the self-join's two sides share one assignment
-    * pass instead of recomputing the kernel per side.
-    *
-    * Fault tolerance (`checkpointDir`, round 17 — the
-    * connectedComponents escape hatch applied to the assignment cache):
-    * localCheckpoint blocks die with their executor, killing the job
-    * between the assignment pass and the pair join on a real cluster;
-    * a reliable dir makes the cache replayable FILES, identical output
-    * (Round17OpsSpec pins equality). The dir also flows into the CC
-    * loop's own cuts.
+    * cut ([[Lineage.cut]]) so the self-join's two sides share one
+    * assignment pass instead of recomputing the kernel per side.
     */
   def semanticClustersClustered(s: SparkSession, emb: DataFrame,
-      minCos: Double, k: Int = 0, iters: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minCos: Double, k: Int = 0, iters: Int = 2): DataFrame = {
     val kEff =
       if (k > 0) k
       else {
@@ -1281,13 +1266,9 @@ object Similarity {
         math.ceil(math.sqrt(n.toDouble)).toInt
       }
     val model = kmeansFitExact(emb, kEff, iters)
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    val assigned = normedOf(s, emb.filter(col("embedding").isNotNull))
-      .withColumn("kc", model.assignCol(col("embedding")))
     // both join sides share ONE assignment pass
-    val n =
-      if (checkpointDir.isDefined) assigned.checkpoint(eager = false)
-      else assigned.localCheckpoint(eager = false)
+    val n = Lineage.cut(normedOf(s, emb.filter(col("embedding").isNotNull))
+      .withColumn("kc", model.assignCol(col("embedding"))))
     val a = n.select(col("kc"), col("vec_id").as("a_id"),
       col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
     val b = n.select(col("kc"), col("vec_id").as("b_id"),
@@ -1296,7 +1277,7 @@ object Similarity {
       .filter(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")) >= minCos)
       .select(col("a_id"), col("b_id"))
     val cc = Dedup.connectedComponents(s, emb.select(col("vec_id").as("doc_id")),
-      within, checkpointDir = checkpointDir)
+      within)
     Dedup.withClusterSize(cc)
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("cluster_size"))
       .orderBy(col("vec_id"))

@@ -2848,7 +2848,7 @@ object TextOps {
     * Scale: the LM fit is one ≤ 3·buckets pull; scoring is the F19d
     * codegen explode; the per-language rank is the F44 cascade — no
     * corpus-sized window for any language-size distribution. The scored
-    * frame is localCheckpoint'd before calibration (round 18, VERDICT
+    * frame is cut ([[Lineage.cut]]) before calibration (round 18, VERDICT
     * r17 item 6): scoreCalibration references its input ~3× (range,
     * run-count, and row-level joins), and each reference would re-run
     * the full scoring explode — the checkpoint pays the corpus pass
@@ -2877,11 +2877,10 @@ object TextOps {
       |            ELSE 'tail' END AS bucket
       |FROM p ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = documents(s, d)
-    val scored = lmTrigramScores(docs)
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      // lazy (round 19, advice): no job at construction; the first
-      // calibration reference materializes it, the other ~2 reuse it
-      .localCheckpoint(eager = false)
+    // lazy (round 19, advice): no job at construction; the first
+    // calibration reference materializes it, the other ~2 reuse it
+    val scored = Lineage.cut(lmTrigramScores(docs)
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
     scoreCalibration(scored, "nll_micros", sourceCol = "lang")
       .select(col("doc_id"), col("lang"),
         col("score").cast("long").as("nll_micros"), col("pct_millionths"),
@@ -2910,9 +2909,8 @@ object TextOps {
       maxOrder: Int = 5, typeBudget: Long = 1024, buckets: Int = 1024)
       : org.apache.spark.sql.DataFrame = {
     val order = lmAutoOrder(docs, maxOrder, typeBudget, buckets)
-    val scored = lmNgramScores(docs, order, buckets)
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint(eager = false)
+    val scored = Lineage.cut(lmNgramScores(docs, order, buckets)
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
     scoreCalibration(scored, "nll_micros", sourceCol = "lang")
       .select(col("doc_id"), col("lang"),
         col("score").cast("long").as("nll_micros"), col("pct_millionths"),
@@ -3129,26 +3127,18 @@ object TextOps {
     * kmeans_best_q boundary); past that, put it in a broadcast frame.
     * Feed the weights to [[dsirResample]] — DSIR's published consumption
     * is exactly importance RESAMPLING (composed there, round 17).
-    *
-    * Fault tolerance (`checkpointDir`, round 17 — the
-    * connectedComponents escape hatch applied to the fit-side cache):
-    * the gram frame feeds the raw fit AND the scoring pass through a
-    * `localCheckpoint`, whose blocks die with their executor; on a real
-    * cluster pass a reliable dir and the cache becomes replayable FILES,
-    * identical output (Round17OpsSpec pins equality).
+    * Every pass is a single scan, so no lineage cut is taken.
     */
   def dsirWeights(raw: org.apache.spark.sql.DataFrame,
-      target: org.apache.spark.sql.DataFrame, buckets: Int = 1024,
-      checkpointDir: Option[String] = None)
+      target: org.apache.spark.sql.DataFrame, buckets: Int = 1024)
       : org.apache.spark.sql.DataFrame =
-    dsirRatios(raw, target, buckets, checkpointDir)._2
+    dsirRatios(raw, target, buckets)._2
 
   /** The shared DSIR fit: both bucket models, the micro-quantized ratio
     * table, and the scored raw frame — [[dsirWeights]] returns the
     * frame, [[dsirFit]] additionally freezes the table + anchor. */
   private def dsirRatios(raw: org.apache.spark.sql.DataFrame,
-      target: org.apache.spark.sql.DataFrame, buckets: Int,
-      checkpointDir: Option[String])
+      target: org.apache.spark.sql.DataFrame, buckets: Int)
       : (IndexedSeq[Long], org.apache.spark.sql.DataFrame) = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     functions.VectorFunctions.register(raw.sparkSession)
@@ -3161,11 +3151,7 @@ object TextOps {
     // F46c serving kernel, already spec-pinned ≡ the interpreted fold).
     // The old shape exploded one row per gram (md5 hex chain each) and
     // shuffled them TWICE (fit groupBy + scoring groupBy) behind a
-    // localCheckpoint; the checkpointDir escape hatch is now vestigial
-    // for this path (no cached gram frame exists — every pass is a
-    // single scan) and is kept only to pin the checkpoint root for
-    // callers composing with checkpoint-using stages downstream.
-    checkpointDir.foreach(raw.sparkSession.sparkContext.setCheckpointDir)
+    // localCheckpoint.
     def fit(df: org.apache.spark.sql.DataFrame): (IndexedSeq[Long], Long) = {
       val flat = df.filter(col("text").isNotNull)
         .agg(call_function("gram_bucket_counts", col("text"),
@@ -3279,9 +3265,9 @@ object TextOps {
     * dsirWeights convention). */
   def dsirFit(rawRef: org.apache.spark.sql.DataFrame,
       target: org.apache.spark.sql.DataFrame, buckets: Int = 1024,
-      seed: Long = 0L, checkpointDir: Option[String] = None): DsirModel = {
+      seed: Long = 0L): DsirModel = {
     functions.VectorFunctions.register(rawRef.sparkSession) // gram_sum kernel
-    val (lr, w) = dsirRatios(rawRef, target, buckets, checkpointDir)
+    val (lr, w) = dsirRatios(rawRef, target, buckets)
     val m = w.agg(max(col("logratio_micros"))).head().getLong(0)
     DsirModel(buckets, lr, m, seed)
   }
@@ -3366,9 +3352,9 @@ object TextOps {
     */
   def dsirResample(raw: org.apache.spark.sql.DataFrame,
       target: org.apache.spark.sql.DataFrame, buckets: Int = 1024,
-      seed: Long = 0L, checkpointDir: Option[String] = None)
+      seed: Long = 0L)
       : org.apache.spark.sql.DataFrame =
-    resampleByLogWeight(dsirWeights(raw, target, buckets, checkpointDir),
+    resampleByLogWeight(dsirWeights(raw, target, buckets),
       "doc_id", "logratio_micros", seed)
 
   /** The generic log-space weighted Bernoulli behind [[dsirResample]]:
@@ -3387,7 +3373,7 @@ object TextOps {
     // the anchor pull and the draw share ONE materialization of the
     // (usually expensive — a full DSIR scoring pass) weight frame; the
     // checkpointed rows are slim (id + weight), the d1 discipline
-    val base = df.localCheckpoint(eager = false)
+    val base = Lineage.cut(df)
     val mRow = base.agg(max(col(logWeightCol).cast("long"))).head()
     require(!mRow.isNullAt(0),
       s"resampleByLogWeight: no row with a non-NULL $logWeightCol — the " +
@@ -3566,10 +3552,10 @@ object TextOps {
   def ngramDecontamOf(train: org.apache.spark.sql.DataFrame,
       eval: org.apache.spark.sql.DataFrame, w: Int = 10,
       maxBroadcastWindows: Long = 2000000L): org.apache.spark.sql.DataFrame = {
-    val evalWins = eval
+    // sized once, reused by the join
+    val evalWins = Lineage.cut(eval
       .select(explode(call_function("window_md5s", col("text"), lit(w))).as("wh"))
-      .distinct()
-      .localCheckpoint(eager = false) // sized once, reused by the join
+      .distinct())
     val evalSide =
       if (evalWins.count() <= maxBroadcastWindows) broadcast(evalWins) else evalWins
     val trainWins = train.select(col("doc_id"),
@@ -4280,7 +4266,7 @@ object TextOps {
     // materializes the lazily-cut fill, and the manifest's semi-join
     // reuses the same blocks instead of re-running the bucketed prefix
     // sum from scratch (the fill output is corpus-kept-rows slim)
-    val fill = tokenBudgetMix(docs, budgets).localCheckpoint(eager = false)
+    val fill = Lineage.cut(tokenBudgetMix(docs, budgets))
     val keptTots = fill
       .groupBy(col("source")).agg(sum(col("n_toks")).as("t"))
       .collect() // one row per source — the bounded-alphabet pull
@@ -4452,10 +4438,10 @@ object TextOps {
     val ndTot = nd.values.sum
     val priorMicros = labels.map(l =>
       math.floor(math.log(nd(l) * 1.0 / ndTot) * 1e6).toLong)
-    val counts = seed
+    // vocab rank + in-vocab pull share it
+    val counts = Lineage.cut(seed
       .select(col("label"), explode(split(col("text"), " ")).as("term"))
-      .groupBy(col("label"), col("term")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // vocab rank + in-vocab pull share it
+      .groupBy(col("label"), col("term")).agg(count(lit(1)).as("c")))
     val vocab = counts.groupBy(col("term")).agg(sum(col("c")).as("tc"))
       .orderBy(col("tc").desc, col("term"))
       .limit(vocabN)

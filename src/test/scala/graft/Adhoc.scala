@@ -433,19 +433,22 @@ object Adhoc {
       val edges = clique.unionByName(chain).localCheckpoint(eager = true)
       println(s"edges: ${edges.count()}")
       // rep 1/2: the default localCheckpoint loop; rep 3: the reliable
-      // checkpointDir option (round 8) at the same 50M edges — measures
+      // loop under a checkpoint directory at the same 50M edges — measures
       // what executor-loss fault tolerance COSTS (a distributed-FS write
       // per cut; here local disk stands in for HDFS/S3)
       val ckptDir = java.nio.file.Files.createTempDirectory("megacc_ckpt").toString
       for (rep <- 1 to 3) {
-        val dir = if (rep == 3) Some(ckptDir) else None
+        def run() = {
+          val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges)
+          (rounds, Dedup.withClusterSize(cc)
+            .groupBy(col("cluster_size")).count()
+            .orderBy(col("cluster_size"))
+            .as[(Long, Long)].collect().toSeq)
+        }
         val t0 = System.nanoTime()
-        val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          checkpointDir = dir)
-        val sizes = Dedup.withClusterSize(cc)
-          .groupBy(col("cluster_size")).count()
-          .orderBy(col("cluster_size"))
-          .as[(Long, Long)].collect().toSeq
+        val (rounds, sizes) =
+          if (rep == 3) SparkSpec.withCheckpointDir(spark, ckptDir)(run())
+          else run()
         val secs = (System.nanoTime() - t0) / 1e9
         val label = if (rep == 3) "reliable_ckpt" else s"rep=$rep"
         println(f"ADHOC megacc $label rounds=$rounds secs=$secs%.2f sizes=$sizes")
@@ -1530,9 +1533,10 @@ object Adhoc {
       // chain) groups = 250M clique edges + 1,495 chain edges — one
       // decade past megacc's 50M, the breadth×depth mix at the volume
       // where per-round edge shuffle is the 100 TB cost model. Reps:
-      // default localCheckpoint loop, then the reliable checkpointDir
-      // loop (the fault-tolerant 100 TB configuration) at the same
-      // volume. rounds × edge-volume accounting printed for BASELINE.md.
+      // default localCheckpoint loop, then the reliable loop under a
+      // checkpoint directory (the fault-tolerant 100 TB configuration) at
+      // the same volume. rounds × edge-volume accounting printed for
+      // BASELINE.md.
       import spark.implicits._
       val n = 10000
       val span = 20000L // group id stride: clique at +0, chain at +n
@@ -1554,14 +1558,17 @@ object Adhoc {
       println(s"edges: ${edges.count()}")
       val ckptDir = java.nio.file.Files.createTempDirectory("megacc5_ckpt").toString
       for (rep <- 1 to 2) {
-        val dir = if (rep == 2) Some(ckptDir) else None
+        def run() = {
+          val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges)
+          (rounds, Dedup.withClusterSize(cc)
+            .groupBy(col("cluster_size")).count()
+            .orderBy(col("cluster_size"))
+            .as[(Long, Long)].collect().toSeq)
+        }
         val t0 = System.nanoTime()
-        val (cc, rounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          checkpointDir = dir)
-        val sizes = Dedup.withClusterSize(cc)
-          .groupBy(col("cluster_size")).count()
-          .orderBy(col("cluster_size"))
-          .as[(Long, Long)].collect().toSeq
+        val (rounds, sizes) =
+          if (rep == 2) SparkSpec.withCheckpointDir(spark, ckptDir)(run())
+          else run()
         val secs = (System.nanoTime() - t0) / 1e9
         val label = if (rep == 2) "reliable_ckpt" else "default"
         println(f"ADHOC megacc5 $label rounds=$rounds secs=$secs%.2f sizes=$sizes")

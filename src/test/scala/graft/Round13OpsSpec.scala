@@ -281,9 +281,11 @@ class Round13OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("ccstar_loss_ckpt")
-      val (df, _) = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-        checkpointDir = Some(dir), localFinishMaxEdges = 0L)
-      val labels = df.as[(Long, Long)].collect().toMap
+      val labels = withCheckpointDir(dir) {
+        val (df, _) = Dedup.connectedComponentsStarWithRounds(spark, nodes,
+          edges, localFinishMaxEdges = 0L)
+        df.as[(Long, Long)].collect().toMap
+      }
       assert(labels.size == 200 && labels(149L) == 0L && labels(199L) == 150L,
         "reliable-checkpoint star CC must label correctly despite block loss")
     } finally Dedup.testBlockLossHook = None

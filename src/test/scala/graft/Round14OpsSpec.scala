@@ -350,10 +350,11 @@ class Round14OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("cchybrid_loss_ckpt")
-      val (df, rounds) = Dedup.connectedComponentsHybridWithRounds(
-        spark, nodes, edges, checkpointDir = Some(dir), starSwitchAfter = 4,
-        localFinishMaxEdges = 0L)
-      val labels = df.as[(Long, Long)].collect().toMap
+      val (labels, rounds) = withCheckpointDir(dir) {
+        val (df, rounds) = Dedup.connectedComponentsHybridWithRounds(
+          spark, nodes, edges, starSwitchAfter = 4, localFinishMaxEdges = 0L)
+        (df.as[(Long, Long)].collect().toMap, rounds)
+      }
       assert(rounds > 4 && labels.size == 200 && labels(199L) == 0L,
         s"hybrid reliable-checkpoint run mislabeled (rounds=$rounds)")
     } finally Dedup.testBlockLossHook = None

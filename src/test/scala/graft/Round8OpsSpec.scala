@@ -62,13 +62,13 @@ class Round8OpsSpec extends SparkSpec {
     val chain = spark.range(2000, 2059)
       .select($"id".as("a_id"), ($"id" + 1).as("b_id"))
     val edges = star.unionByName(chain)
-    def labelsOf(ckpt: Option[String]): Map[Long, Long] =
+    def labels(): Map[Long, Long] =
       Dedup.connectedComponents(spark, nodes, edges,
-        contractAbove = 1L, checkpointDir = ckpt, localFinishMaxEdges = 0L)
+        contractAbove = 1L, localFinishMaxEdges = 0L)
         .as[(Long, Long)].collect().toMap
     val dir = tmpDir("cc_reliable_ckpt")
-    val reliable = labelsOf(Some(dir))
-    assert(reliable == labelsOf(None), "reliable checkpoint changed the labels")
+    val reliable = withCheckpointDir(dir)(labels())
+    assert(reliable == labels(), "reliable checkpoint changed the labels")
     assert(reliable(1999L) == 0L && reliable(2059L) == 2000L)
     // and it really went through the reliable path: checkpoint files exist
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

@@ -151,9 +151,9 @@ class Round9OpsSpec extends SparkSpec {
     // test hook fires at the top of every convergence block and drops
     // EVERY persisted block in the session — exactly what an executor
     // crash does to localCheckpoint state. The reliable path must finish
-    // with correct labels (its rounds live as files under checkpointDir);
-    // the default localCheckpoint path must die, proving the gap the
-    // option exists to close is real.
+    // with correct labels (its rounds live as files under the checkpoint
+    // directory); the default localCheckpoint path must die, proving the
+    // gap a checkpoint directory closes is real.
     val nodes = spark.range(0, 400).select($"id".as("doc_id"))
     val star = spark.range(1, 150).select(lit(0L).as("a_id"), $"id".as("b_id"))
     val chain = spark.range(150, 399)
@@ -167,9 +167,10 @@ class Round9OpsSpec extends SparkSpec {
     }
     try {
       val dir = tmpDir("cc_loss_ckpt")
-      val labels = Dedup.connectedComponents(spark, nodes, edges,
-        checkpointDir = Some(dir), localFinishMaxEdges = 0L)
-        .as[(Long, Long)].collect().toMap
+      val labels = withCheckpointDir(dir) {
+        Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
+          .as[(Long, Long)].collect().toMap
+      }
       assert(labels(149L) == 0L && labels(399L) == 150L,
         "reliable-checkpoint CC must label correctly despite block loss")
       assert(labels.size == 400)
