@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.io.{DataOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, DataOutputStream, File, FileOutputStream}
 import java.math.BigInteger
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -265,7 +265,7 @@ object KinesisSink {
       dir.mkdirs()
       val f = new File(dir, s"$fileTag.krf")
       val append = f.exists()
-      val out = new DataOutputStream(new FileOutputStream(f, append))
+      val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f, append)))
       try records.map { r =>
         val pk = r.partitionKey.getBytes(UTF_8)
         out.writeInt(pk.length); out.write(pk)

@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   * sink's in-executor retry loop.
   *
   *   dir list (A4, maxFilesPerTrigger = batch-size knob)
-  *     → decode JSON lines (B1) → validate/quarantine (B2)
+  *     → JSON scan, one parse per line (B1): event fields + `raw`,
+  *       the corrupt-record column (set only when a line did not parse)
+  *     → validate/quarantine (B2): the identity-field check is pushed
+  *       into the scan as IsNotNull(event_id), IsNotNull(user_id)
   *     → partition-key assignment (B3)
   *     → shard routing + batching + retry (B4–B6, in KinesisSink)
   *   checkpointed (B7), scheduled by Trigger (B8), metered (B9).
@@ -30,19 +33,36 @@ object Pipeline {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** A4 + B1: watch a directory of JSON-lines files. Reading as `text`
-    * first keeps malformed lines (from_json yields null) so B2 can
-    * quarantine instead of silently dropping.
+  /** The scan's schema: the event fields plus `raw`, Spark's corrupt-record
+    * column, which holds a line's text when it is not well-formed JSON of
+    * this schema and is null otherwise.
+    */
+  private val scanSchema: StructType = rawEventSchema.add("raw", StringType)
+  private val scanOptions = Map("columnNameOfCorruptRecord" -> "raw")
+
+  /** Re-packs the scan's flat columns as the `(raw, ev)` frame that
+    * [[decoded]] and [[quarantined]] take.
+    */
+  private def packed(scan: DataFrame): DataFrame =
+    scan.select(col("raw"), struct(rawEventSchema.fieldNames.toSeq.map(col): _*).as("ev"))
+
+  /** A4 + B1: watch a directory of JSON-lines files. Spark's JSON file
+    * source parses each line once, straight from its bytes; a malformed
+    * line keeps its text in `raw` (its fields null or partial) so B2 can
+    * quarantine it instead of silently dropping it. Blank lines carry no
+    * record and are skipped by the reader.
     */
   def fileSource(spark: SparkSession, bucketDir: String, maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
+    packed(spark.readStream
+      .schema(scanSchema)
+      .options(scanOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(bucketDir)
-      .select(col("value").as("raw"),
-        from_json(col("value"), rawEventSchema).as("ev"))
+      .json(bucketDir))
 
-  /** B2: split decoded vs quarantined. A record is valid when the JSON
-    * parsed and carries the required identity fields.
+  /** B2: split decoded vs quarantined. A record is valid when it carries
+    * the required identity fields. On a [[fileSource]] frame `ev` is never
+    * null, so the predicate folds to IsNotNull(event_id) AND
+    * IsNotNull(user_id), which the JSON scan takes as pushed filters.
     */
   def validFilter = col("ev").isNotNull &&
     col("ev.event_id").isNotNull && col("ev.user_id").isNotNull
@@ -56,8 +76,14 @@ object Pipeline {
       col("ev.value").as("value"),
       col("ev.props").as("props"))
 
+  /** The lines that fail [[validFilter]], as text: a malformed line's
+    * original text, or, for well-formed JSON that lacks `event_id` or
+    * `user_id` (its `raw` is null), the parsed record re-serialized as
+    * `to_json(ev)`, null fields omitted. Blank lines never reach the
+    * frame from [[fileSource]] or [[backfill]], so none is quarantined.
+    */
   def quarantined(src: DataFrame): DataFrame =
-    src.filter(!validFilter).select(col("raw"))
+    src.filter(!validFilter).select(coalesce(col("raw"), to_json(col("ev"))).as("raw"))
 
   /** B3: partition-key assignment — user_id keys the stream so one user's
     * events land in one shard (ordering per key, the Kinesis contract).
@@ -131,8 +157,7 @@ object Pipeline {
     */
   def backfill(spark: SparkSession, bucketDir: String, streamDir: String,
       numShards: Int = 4, tag: String = "backfill"): Long = {
-    val src = spark.read.text(bucketDir)
-      .select(col("value").as("raw"), from_json(col("value"), rawEventSchema).as("ev"))
+    val src = packed(spark.read.schema(scanSchema).options(scanOptions).json(bucketDir))
     val keyed = withPartitionKey(decoded(src))
     val n = keyed.count()
     KinesisSink.deliver(keyed, numShards,

@@ -3,6 +3,10 @@ package graft
 import java.io.{File, PrintWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+
 import graft.pipeline.Pipeline
 
 /** E10: the exactly-once file→Kinesis pipeline, including resume from the
@@ -25,6 +29,14 @@ class PipelineSpec extends SparkSpec {
         """"event_id":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
       }.toSeq
 
+  private def quarantineLines(quarantineDir: String): Seq[String] =
+    new File(quarantineDir).listFiles().filter(_.getName.startsWith("batch="))
+      .flatMap(d => d.listFiles().filter(_.getName.endsWith(".txt")))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }.toSeq
+
   test("pipeline decodes, quarantines, delivers, and resumes without dupes") {
     val bucket = tmpDir("bucket"); val stream = tmpDir("stream")
     val quarantine = tmpDir("quar"); val checkpoint = tmpDir("ckpt")
@@ -37,10 +49,7 @@ class PipelineSpec extends SparkSpec {
 
     val ids1 = deliveredIds(stream)
     assert(ids1.sorted == (1L to 5L), s"delivered: $ids1")
-    val quarFiles = new File(quarantine).listFiles().filter(_.getName.startsWith("batch="))
-    val quarLines = quarFiles.flatMap(d => d.listFiles().filter(_.getName.endsWith(".txt")))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
-    assert(quarLines.toSeq == Seq("not json at all"))
+    assert(quarantineLines(quarantine) == Seq("not json at all"))
 
     // restart with no new input: nothing re-delivered
     val q2 = Pipeline.run(spark, bucket, stream, quarantine, checkpoint, numShards = 4)
@@ -83,5 +92,47 @@ class PipelineSpec extends SparkSpec {
     val n = Pipeline.backfill(spark, bucket, stream, numShards = 2, tag = "bf")
     assert(n == 9)
     assert(deliveredIds(stream).sorted == (1L to 9L))
+  }
+
+  test("quarantine keeps a malformed line's text and re-serializes well-formed JSON lacking an id") {
+    val bucket = tmpDir("bucket_q"); val stream = tmpDir("stream_q")
+    val quarantine = tmpDir("quar_q"); val checkpoint = tmpDir("ckpt_q")
+    val notJson = "not json at all"
+    val truncated = """{"event_id":102,"ts":"2024-01-01T00:00:00Z","""
+    val noUser = """{"event_id": 103, "extra": true, "event_type": "click"}"""
+    val badType = """{"event_id":"x","ts":"2024-01-01T00:00:00Z","user_id":5}"""
+    writeLines(bucket, "obj-001.jsonl", Seq(
+      eventJson(1, user = 1), notJson, eventJson(2, user = 2), truncated,
+      noUser, "", badType, eventJson(3, user = 0)))
+
+    Pipeline.run(spark, bucket, stream, quarantine, checkpoint, numShards = 2)
+      .awaitTermination()
+
+    assert(deliveredIds(stream).sorted == Seq(1L, 2L, 3L))
+    // malformed lines (not JSON, truncated, type-mismatched) keep their
+    // original text; the well-formed line without user_id has no corrupt
+    // record, so it is quarantined as to_json(ev): schema order, unknown
+    // fields dropped, null fields omitted. The JSON reader skips the blank
+    // line, so no empty quarantine row appears.
+    assert(quarantineLines(quarantine).sorted == Seq(
+      notJson, truncated, badType, """{"event_id":103,"event_type":"click"}""").sorted)
+  }
+
+  test("runV2 parses each line once, in the scan, with the id checks pushed into it") {
+    val bucket = tmpDir("bucket_plan"); val stream = tmpDir("stream_plan")
+    val checkpoint = tmpDir("ckpt_plan")
+    writeLines(bucket, "obj-001.jsonl", (1L to 4L).map(i => eventJson(i, user = i)) :+ "garbage")
+    val q = Pipeline.runV2(spark, bucket, stream, checkpoint, numShards = 2)
+    q.awaitTermination()
+    assert(deliveredIds(stream).sorted == (1L to 4L))
+
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    assert(parses.isEmpty, s"from_json in the executed plan:\n$plan")
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one file scan:\n$plan")
+    val pushed = scans.head.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("IsNotNull(event_id)") && pushed.contains("IsNotNull(user_id)"),
+      s"pushed filters: $pushed")
   }
 }
