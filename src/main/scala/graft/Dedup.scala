@@ -153,6 +153,14 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
+  /** Shingle vocabularies at or under this size take the
+    * `freq_order_values` kernel path in [[containmentPairs]] — the df
+    * table rides as a driver-held literal (≤ 1 MB plan payload, the
+    * PrefixKernelMaxVocab class). Word-shingle vocabularies grow with
+    * the corpus, so at 100 TB the explode + join shape is the expected
+    * (and exact-identical) path. */
+  val ContainmentKernelMaxVocab: Long = 1L << 16
+
   /** F47 (round 16): near-CONTAINMENT detection — every ORDERED doc pair
     * (inner, outer) whose word-3-gram containment
     * c(inner → outer) = |S(inner) ∩ S(outer)| / |S(inner)| ≥ `minC`
@@ -185,15 +193,15 @@ object Dedup {
     * + a per-doc bounded re-sort over the corpus, all linear.
     * Candidates verify with the same codegen `sorted_intersect_count`
     * merge over the hash-sorted full arrays.
+    *
+    * Input contract (as [[TextOps.lmBigramScores]]): `doc_id` is assumed
+    * UNIQUE. The kernel path orders each INPUT ROW's shingles, while the
+    * explode + df-join fallback regroups by (doc_id, sz) and so merges
+    * rows that share an id — with duplicate ids the two paths emit
+    * different pairs, and which one runs depends on the vocabulary size.
+    * The documents contract has unique ids; a caller with duplicates
+    * must pre-aggregate.
     */
-  /** Shingle vocabularies at or under this size take the
-    * `freq_order_values` kernel path in [[containmentPairs]] — the df
-    * table rides as a driver-held literal (≤ 1 MB plan payload, the
-    * PrefixKernelMaxVocab class). Word-shingle vocabularies grow with
-    * the corpus, so at 100 TB the explode + join shape is the expected
-    * (and exact-identical) path. */
-  val ContainmentKernelMaxVocab: Long = 1L << 16
-
   def containmentPairs(s: SparkSession, docs: DataFrame, minC: Double): DataFrame = {
     require(minC > 0.0 && minC <= 1.0, s"minC must be in (0, 1], got $minC")
     VectorFunctions.register(s)
@@ -240,7 +248,7 @@ object Dedup {
     //     ReusedExchange).
     val fitRow = base
       .agg(call_function("long_freq_agg", col("shs"),
-        lit(ContainmentKernelMaxVocab.toInt)).as("ft"))
+        lit(DriverPull.budget(ContainmentKernelMaxVocab).toInt)).as("ft"))
       .head()
     val fit = if (fitRow.isNullAt(0)) null else fitRow.getStruct(0)
     val ordAll =
@@ -879,7 +887,7 @@ object Dedup {
     // identical output.
     val fitRow = big
       .agg(call_function("qgram_freq_agg", col("text"), lit(q),
-        lit(PrefixKernelMaxVocab.toInt)).as("ft"))
+        lit(DriverPull.budget(PrefixKernelMaxVocab).toInt)).as("ft"))
       .head()
     val fit = if (fitRow.isNullAt(0)) null else fitRow.getStruct(0)
     lazy val gx = big.select(col("doc_id"),
@@ -922,7 +930,7 @@ object Dedup {
       } else null
     def topValsJoin = {
       val dfreqSide =
-        if (vocab <= maxBroadcastGrams) broadcast(dfreq) else dfreq
+        if (vocab <= DriverPull.budget(maxBroadcastGrams)) broadcast(dfreq) else dfreq
       gx.join(dfreqSide, Seq("gh"))
         .select(col("doc_id"),
           struct((-col("freq")).as("nf"), expr("~gh").as("ngh")).as("p"))
@@ -1083,10 +1091,9 @@ object Dedup {
     */
   def connectedComponents(s: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxIters: Int = 25, checkEvery: Int = 2,
-      contractAbove: Long = DefaultContractAbove,
-      localFinishMaxEdges: Long = DefaultLocalFinishEdges): DataFrame =
+      contractAbove: Long = DefaultContractAbove): DataFrame =
     connectedComponentsHybridWithRounds(s, nodes, edges, maxIters, checkEvery,
-      contractAbove, localFinishMaxEdges = localFinishMaxEdges)._1
+      contractAbove)._1
 
   /** Edge lists at or above this size get label-contracted between
     * convergence blocks; below it the rewrite's two joins + distinct cost
@@ -1110,12 +1117,12 @@ object Dedup {
     * are bit-identical to the loops' fixpoint (min node id per
     * component; union-find tracks set minima exactly) — pinned by
     * Round20OptSpec against the forced-distributed run on chains,
-    * cliques, random graphs, and forced-contraction shapes. Pass
-    * `localFinishMaxEdges = 0` to force the distributed loop (the loop-
-    * mechanics specs and the megacc stresses do). Contract (shared with
-    * the loops): edges connect ids present in `nodes` — endpoints
-    * outside the node frame would seed labels the propagation loops
-    * never had.
+    * cliques, random graphs, and forced-contraction shapes. The cap is
+    * read through [[DriverPull.budget]]; the loop-mechanics specs force
+    * the distributed loop with [[DriverPull.forcingFallbacks]]. Contract
+    * (shared with the loops): edges connect ids present in `nodes` —
+    * endpoints outside the node frame would seed labels the propagation
+    * loops never had.
     */
   val DefaultLocalFinishEdges: Long = 1L << 18
 
@@ -1243,10 +1250,9 @@ object Dedup {
     */
   def connectedComponentsWithRounds(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 25, checkEvery: Int = 2,
-      contractAbove: Long = DefaultContractAbove,
-      localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
+      contractAbove: Long = DefaultContractAbove): (DataFrame, Int) = {
     val (lbls, iter, converged, _) = minLabelCore(s, nodes, edges, maxIters,
-      checkEvery, contractAbove, localFinishMaxEdges)
+      checkEvery, contractAbove)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIters rounds — " +
@@ -1269,9 +1275,7 @@ object Dedup {
     */
   private def minLabelCore(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int, checkEvery: Int,
-      contractAbove: Long,
-      localFinishMaxEdges: Long = DefaultLocalFinishEdges)
-      : (DataFrame, Int, Boolean, DataFrame) = {
+      contractAbove: Long): (DataFrame, Int, Boolean, DataFrame) = {
     // materialize the caller's edge plan ONCE and mirror from the cut —
     // a union of plan + swapped plan would execute the (often expensive:
     // LSH bands, prefix-filter joins) edge build twice in the same job
@@ -1282,7 +1286,7 @@ object Dedup {
     // an edge set that fits the pull budget is solved in one driver
     // union-find + one broadcast map-back — labels identical, tens of
     // driver rounds saved; the pull reads the just-materialized blocks
-    if (nE <= localFinishMaxEdges) {
+    if (nE <= DriverPull.budget(DefaultLocalFinishEdges)) {
       val pulled = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
       return (localFinishLabels(s, nodes, pulled), 0, true, e0)
     }
@@ -1413,12 +1417,10 @@ object Dedup {
   def connectedComponentsHybridWithRounds(s: SparkSession, nodes: DataFrame,
       edges: DataFrame, maxIters: Int = 25, checkEvery: Int = 2,
       contractAbove: Long = DefaultContractAbove,
-      starSwitchAfter: Int = 3,
-      localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
+      starSwitchAfter: Int = 3): (DataFrame, Int) = {
     require(starSwitchAfter >= 1, s"starSwitchAfter must be >= 1, got $starSwitchAfter")
     val (lbls, iter, converged, e0) = minLabelCore(s, nodes, edges,
-      math.min(starSwitchAfter, maxIters), checkEvery, contractAbove,
-      localFinishMaxEdges)
+      math.min(starSwitchAfter, maxIters), checkEvery, contractAbove)
     if (converged)
       (lbls.select(col("u").as("doc_id"), col("lbl").as("cluster_id")), iter)
     else {
@@ -1436,7 +1438,7 @@ object Dedup {
       // first rounds collapse the bulk distributed, and the residual
       // that remains usually fits the pull budget
       connectedComponentsStarWithRounds(s, nodes,
-        e2.unionByName(ptr), maxIters, localFinishMaxEdges) match {
+        e2.unionByName(ptr), maxIters) match {
         case (starLbls, starRounds) => (starLbls, iter + starRounds)
       }
     }
@@ -1469,8 +1471,7 @@ object Dedup {
     * BASELINE.md entry for the numbers per graph shape.
     */
   def connectedComponentsStarWithRounds(s: SparkSession, nodes: DataFrame,
-      edges: DataFrame, maxIters: Int = 50,
-      localFinishMaxEdges: Long = DefaultLocalFinishEdges): (DataFrame, Int) = {
+      edges: DataFrame, maxIters: Int = 50): (DataFrame, Int) = {
     // canonical undirected edges: (u < v), self-loops dropped. NO initial
     // distinct: duplicate input edges cannot change a groupBy-min and the
     // first large-star's own distinct dedups the set — at 250M edges the
@@ -1497,7 +1498,7 @@ object Dedup {
     // the signature already counted the materialized canonical edges —
     // a set inside the pull budget is solved driver-side in one
     // union-find + broadcast map-back, labels identical (Round20OptSpec)
-    if (sig._1 > 0L && sig._1 <= localFinishMaxEdges) {
+    if (sig._1 > 0L && sig._1 <= DriverPull.budget(DefaultLocalFinishEdges)) {
       val pulled = e.collect().map(r => (r.getLong(0), r.getLong(1)))
       return (localFinishLabels(s, nodes, pulled)
         .select(col("u").as("doc_id"), col("lbl").as("cluster_id")), 0)

@@ -51,19 +51,6 @@ object Graft {
 
   // ---- convenience façade over the training-data-pipeline operators ----
 
-  /** Near-dup dedup groups: every doc labeled with its connected
-    * component's min doc_id (edges = exact n-gram Jaccard ≥ minJaccard).
-    */
-  def dedupGroups(spark: SparkSession, dir: String,
-      minJaccard: Double = 0.6): DataFrame =
-    Dedup.connectedComponents(spark, Tables.documents(spark, dir),
-      Dedup.jaccardEdges(spark, dir, minJaccard))
-
-  /** Banded-LSH near-dup candidate pairs with MinHash-estimated Jaccard. */
-  def nearDupPairs(spark: SparkSession, dir: String,
-      minEst: Double = 0.5): DataFrame =
-    MinHash.candidatePairs(Tables.documents(spark, dir), minEst)
-
   /** Edit-distance near-dup pairs (F24) over any (doc_id, text) frame —
     * BYTE-level Levenshtein (≡ char level on ASCII; the DuckDB dialect).
     * `atScale = false` is the length-banded path — right for small or
@@ -82,7 +69,7 @@ object Graft {
     * edge list (duplicates chain — A≈B≈C is one group, same reason the
     * Jaccard path clusters). doc_id → cluster_id (min doc_id in the
     * component); singletons label themselves. Same CC machinery (and
-    * the same [[Lineage.cut]] durability) as [[dedupGroups]].
+    * the same [[Lineage.cut]] durability) as [[Dedup.connectedComponents]].
     */
   def editDedupGroups(spark: SparkSession, docs: DataFrame, maxDist: Int = 2,
       atScale: Boolean = false, q: Int = 4): DataFrame =
@@ -184,14 +171,6 @@ object Graft {
       increment: DataFrame, minJaccard: Double = 0.6): DataFrame =
     Dedup.dedupIncrement(spark, corpus, increment, minJaccard)
 
-  /** F18b: weighted Bernoulli sampling — keep each row w.p. min(1,
-    * weight/scale), deterministic (md5-integer draw, pure integer test)
-    * and engine/partitioning-exact; appends the exact `p_millionths`
-    * Horvitz–Thompson factor. */
-  def weightedSample(df: DataFrame, idCol: String, weightCol: String,
-      scale: Long): DataFrame =
-    TextOps.weightedBernoulli(df, idCol, weightCol, scale)
-
   /** F30: duplicated-span removal (Lee et al. ExactSubstr dedup at
     * token-window granularity) — every token inside a corpus-duplicated
     * `windowTokens`-gram is removed; returns (doc_id, clean_text,
@@ -207,14 +186,6 @@ object Graft {
   def dedupKeepBest(spark: SparkSession, docs: DataFrame, minJaccard: Double,
       weight: org.apache.spark.sql.Column): DataFrame =
     Dedup.dedupKeepBest(spark, docs, minJaccard, weight)
-
-  /** F18c: weighted sampling WITHOUT replacement, k per stratum — the
-    * Efraimidis–Spirakis A-ES scheme over the same deterministic md5
-    * draw; per-group top-k on the bounded-heap `collect_top_k`
-    * aggregate, never a window sort. */
-  def weightedTopK(df: DataFrame, groupCol: String, idCol: String,
-      weightCol: String, k: Int): DataFrame =
-    TextOps.weightedTopKPerGroup(df, groupCol, idCol, weightCol, k)
 
   /** F33: token-budget mix construction — subsample each source to a
     * token budget in the deterministic md5 fill order (mixtures are
@@ -385,15 +356,9 @@ object Graft {
       groupCol: String = "cluster_id", seed: Long = 0L): DataFrame =
     Dedup.splitByGroup(labeled, testMillionths, groupCol, seed)
 
-  /** F2c: SimHash near-dup pairs at ≤ `maxHamming` bit flips — exact
-    * recall via Manku pigeonhole banding; one codegen popcount verify
-    * per band collision. */
-  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    MinHash.simhashPairsOf(docs, maxHamming)
-
   /** F2c GROUPS (round 14): SimHash dedup clusters — connected components
     * over the banded hamming pair list, because near-dup pairs CHAIN
-    * (same lesson as [[dedupGroups]]/[[editDedupGroups]]); doc_id →
+    * (same lesson as [[editDedupGroups]]); doc_id →
     * cluster_id (min doc_id in the component), singletons label
     * themselves. */
   def simhashDedupGroups(spark: SparkSession, docs: DataFrame,
@@ -428,43 +393,13 @@ object Graft {
     streaming.StreamOps.nearDupSuppressAllBands(docs, minEst,
       allowUnsafeChain = allowUnsafeChain)
 
-  /** Embedding near-dup candidates via banded sign-LSH (single codegen
-    * signature pass; the only shuffle is the band-key equi-join).
-    */
-  def lshNearDupPairs(spark: SparkSession, emb: DataFrame,
-      minCos: Double = 0.35, nHint: Long = 0L): DataFrame =
-    Similarity.lshCandidates(spark, emb, minCos, nHint = nHint)
-
-  /** Gopher/C4-style per-doc repetition quality signals. */
-  def repetitionSignals(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qRepetition.fn(spark, dir)
-
-  /** PII match counts + md5-pinned redacted text per doc. */
-  def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qPiiRedact.fn(spark, dir)
-
   /** The `writeStream.format(...)` name of the Kinesis-semantics
     * DataSourceV2 sink (options: baseDir, numShards).
     */
   val KinesisSinkFormat: String = classOf[pipeline.KinesisTableProvider].getName
 
-  /** Exact brute-force cosine top-k pairs (correctness baseline; the scale
-    * paths are lshCandidates / ivfKMeans).
-    */
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame =
-    Similarity.qCosineTopk.fn(spark, dir)
-
-  /** IVF ANN with MLlib-KMeans centroids and nprobe cells per query.
-    * One-shot (fits per call); for repeated query batches over one corpus
-    * use [[annFit]]/[[annProbe]] so the k-means fit is paid once.
-    */
-  def annSearch(spark: SparkSession, emb: DataFrame, k: Int = 16,
-      nprobe: Int = 0, topK: Int = 10,
-      queryPred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): DataFrame =
-    Similarity.ivfKMeans(spark, emb, k, nprobe, topK, queryPred)
-
   /** Fit the IVF cell structure once (eager k-means); probe it with
-    * [[annProbe]] as many times as needed. The iterative fit runs on a
+    * [[Similarity.ivfProbe]] as many times as needed. The iterative fit runs on a
     * bounded deterministic sample (`fitSample`, round 10 — sub-bound
     * corpora are untouched; `<= 0` forces the full-corpus fit) and the
     * full corpus is assigned in one broadcast pass. */
@@ -479,19 +414,6 @@ object Graft {
     * when-to-refit guidance (centroid drift). */
   def annAssign(fitted: Similarity.IvfFitted, newVecs: DataFrame): Similarity.IvfFitted =
     Similarity.ivfAssign(fitted, newVecs)
-
-  /** Probe a fitted IVF index — no k-means work, just the broadcast cell
-    * ranking plus the cell equi-join. */
-  def annProbe(fitted: Similarity.IvfFitted,
-      queryPred: org.apache.spark.sql.Column, nprobe: Int = 0,
-      topK: Int = 10): DataFrame =
-    Similarity.ivfProbe(fitted, queryPred, nprobe, topK)
-
-  /** Probe with external (non-corpus) query vectors — (q_id, embedding)
-    * rows; the serving-lookup shape where IVF beats LSH. */
-  def annProbeVectors(fitted: Similarity.IvfFitted, queries: DataFrame,
-      nprobe: Int = 0, topK: Int = 10): DataFrame =
-    Similarity.ivfProbeVectors(fitted, queries, nprobe, topK)
 
   /** Re-open an index persisted with `annFit(...).save(dir)` — the
     * cross-job serving shape: one indexing job fits and saves, later
@@ -533,26 +455,6 @@ object Graft {
   def annLoadCompressed(spark: SparkSession, dir: String): Pq.IvfPqIndex =
     Pq.ivfPqLoad(spark, dir)
 
-  /** Duplicated-substring signal: per-doc count/fraction of 10-token
-    * windows occurring more than once in the corpus.
-    */
-  def duplicatedSubstrings(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qDupSubstrings.fn(spark, dir)
-
-  /** Token-window chunking (size 32 / stride 24) — training/RAG sequence
-    * prep. */
-  def chunkDocuments(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qChunking.fn(spark, dir)
-
-  /** Stratified deterministic hash sampling for training-mix
-    * construction. */
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qStratifiedSample.fn(spark, dir)
-
-  /** Unigram-LM quality score (avg NLL + rare-token count) per doc. */
-  def lmQuality(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qLmQuality.fn(spark, dir)
-
   /** DSIR importance weights (F46, round 16): per raw doc, the integer-
     * micro log-likelihood ratio of the target hashed-n-gram model vs the
     * raw model. Feed to [[TextOps.weightedBernoulli]] (resampling — the
@@ -561,29 +463,6 @@ object Graft {
   def dsirWeights(raw: DataFrame, target: DataFrame,
       buckets: Int = 1024): DataFrame =
     TextOps.dsirWeights(raw, target, buckets)
-
-  /** Gap sessionization on transformWithState event-time timers. */
-  def sessionizeTimers(events: org.apache.spark.sql.Dataset[streaming.StreamOps.Ev],
-      gapMillis: Long = 600000L) =
-    streaming.StreamOps.sessionizeTws(events, gapMillis)
-
-  /** Semantic dedup: connected components over the embedding-cosine
-    * near-dup graph (exact edges; swap in lshNearDupPairs at scale). */
-  def semanticDedupClusters(spark: SparkSession, dir: String): DataFrame =
-    Similarity.qSemanticDedup.fn(spark, dir)
-
-  /** Per-shard Kinesis ingress pacing (1000 rec/s + 1 MiB/s). */
-  def shardThrottle(): pipeline.KinesisSink.ShardThrottle =
-    new pipeline.KinesisSink.ShardThrottle()
-
-  /** Executor-resident `throttleFor` for `KinesisSink.deliver`: bucket
-    * state is keyed by (scope, shard) on the executor JVM and survives
-    * across tasks and micro-batches — a throttle constructed in the
-    * closure itself would arrive serialized with a full bucket every
-    * batch. The V2 sink gets the same via its throttle options.
-    */
-  def shardThrottleFor(scope: String): Int => Option[pipeline.KinesisSink.ShardThrottle] =
-    shard => Some(pipeline.KinesisSink.ShardThrottle.resident(scope, shard))
 
   /** Quality-gate knobs for [[curateCorpus]]: token-count bounds and the
     * stopword lexicon/ratio a real curation run tunes per corpus.

@@ -912,12 +912,8 @@ object Multimodal {
     }.toDF("doc_id", "sig")
   }
 
-  /** F57b: video near-dup pairs — the shared img17-certified machinery. */
-  def videoNearDupPairs(records: Dataset[MediaRecord],
-      maxHamming: Int = 3): DataFrame =
-    sigNearDupPairs(videoHashes(records), maxHamming)
-
-  /** F57b groups: the video sibling — same linear rep+star CC shape. */
+  /** F57b groups: the video sibling of the image dedup groups — same
+    * linear rep+star CC shape. */
   def videoDedupGroups(spark: SparkSession, records: Dataset[MediaRecord],
       maxHamming: Int = 3): DataFrame = {
     import spark.implicits._

@@ -343,10 +343,9 @@ object Pq {
   /** Probe an IVF-PQ index with arbitrary (q_id, embedding) query
     * vectors: centroid cell ranking and the cell equi-join are exactly
     * [[Similarity.ivfProbeVectors]]'s plan (broadcast centroids; probe
-    * side broadcast when ≤ `maxBroadcastProbes` rows with the
-    * parallelism veto), but candidates are scored by `pq_adc` against
-    * the m-byte codes — the corpus-side scan reads codes, not
-    * embeddings. With `rerank = Some(corpus)` the PQ top-(refine·topK)
+    * side broadcast under [[Similarity.broadcastProbes]]' guard), but
+    * candidates are scored by `pq_adc` against the m-byte codes — the
+    * corpus-side scan reads codes, not embeddings. With `rerank = Some(corpus)` the PQ top-(refine·topK)
     * per query is re-scored by exact cosine against the full embeddings
     * (a broadcast of the tiny survivor set into one corpus scan) and
     * the exact top-`topK` returned as (q_id, n_id, cos_sim, rn);
@@ -357,8 +356,7 @@ object Pq {
   def ivfPqProbeVectors(index: IvfPqIndex, queries: DataFrame,
       nprobe: Int = 0, topK: Int = 10, refine: Int = 4,
       rerank: Option[DataFrame] = None, assertUnique: Boolean = false,
-      qHint: Long = 0L,
-      maxBroadcastProbes: Long = Similarity.DefaultMaxBroadcastProbes): DataFrame = {
+      qHint: Long = 0L): DataFrame = {
     val s = index.assigned.sparkSession
     VectorFunctions.register(s)
     val q = queries.select(col("q_id").as("vec_id"), col("embedding"))
@@ -368,11 +366,6 @@ object Pq {
     }
     val qd = q.dropDuplicates("vec_id")
     val np = if (nprobe > 0) nprobe else Similarity.autoNprobe(index.k)
-    val hintable = maxBroadcastProbes > 0 &&
-      Similarity.adequateStreamParallelism(index.assigned)
-    val nq = if (!hintable) Long.MaxValue
-      else if (qHint > 0) qHint
-      else q.count()
     // THIN probe rows — (q_id, cell) only. The query itself enters the
     // candidate join as a per-query ADC LOOKUP TABLE (`pq_lut`: m·ksub
     // codeword partial dots of the NORMALIZED query — the codes encode
@@ -382,8 +375,7 @@ object Pq {
     // `pq_adc_lut` — m array loads + adds instead of dim multiply-adds
     // (16.2 s direct → 13.7 s LUT at pq1m's 1M corpus, BASELINE.md) —
     // while the corpus-side scan still reads only the m-byte codes.
-    val doBroadcast =
-      hintable && Similarity.shouldBroadcastProbes(nq, np, maxBroadcastProbes)
+    val broadcastNq = Similarity.broadcastProbes(index.assigned, q, np, qHint)
     // Residual (IVFADC) scoring decomposes ⟨nq, x̂⟩ = ⟨nq, rc(cell)⟩ +
     // ⟨nq, r̂⟩: the first term is computed HERE on the thin probe frame
     // (nq·nprobe rows, one dim-width dot each against the broadcast
@@ -407,7 +399,7 @@ object Pq {
               dot(col("q_emb"), col("rc")) / when(qn > 0, qn).otherwise(lit(1.0)),
               lit(0.0)).as("qcent"))
       } else probes0.select(col("q_id"), col("cell"))
-    val probeSide = if (doBroadcast) broadcast(probes) else probes
+    val probeSide = if (broadcastNq.isDefined) broadcast(probes) else probes
     val luts = qd
       .withColumn("__qn", sqrt(dot(col("embedding"), col("embedding"))))
       .select(col("vec_id").as("q_id"),
@@ -420,7 +412,7 @@ object Pq {
     // probe decision plus a bytes cap (a 16 KB/row table at ksub 256
     // would turn the row-count guard into GBs)
     val lutSide =
-      if (doBroadcast && nq * index.model.m.toLong * index.model.ksub * 8L <= MaxLutBroadcastBytes)
+      if (broadcastNq.exists(_ * index.model.m.toLong * index.model.ksub * 8L <= MaxLutBroadcastBytes))
         broadcast(luts)
       else luts
     // no distinct(): each corpus vector lives in exactly ONE cell and

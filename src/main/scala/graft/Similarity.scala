@@ -546,7 +546,7 @@ object Similarity {
     * probe batch; measured at 1M vectors / k=1000 / nprobe 25 off a
     * saved index: 27.4 s SMJ vs 6.2 s broadcast (BASELINE.md round 10) —
     * the exact shuffle IVF exists to avoid. 200k rows ≈ 50 MB at dim 64
-    * (scale the knob down for wide embeddings: bytes ≈ rows × 4·dim).
+    * (bytes ≈ rows × 4·dim, so wide embeddings want a lower cap).
     * Queries above the cap keep the planner's choice — a corpus-sized
     * query batch amortizes its shuffle and must not be driver-broadcast.
     */
@@ -558,6 +558,20 @@ object Similarity {
   private[graft] def shouldBroadcastProbes(nQueries: Long, nprobe: Int,
       maxProbes: Long): Boolean =
     maxProbes > 0 && nQueries <= maxProbes / math.max(1, nprobe)
+
+  /** The probe-side broadcast guard of every probe entry point: the
+    * query count when the probe side is to be broadcast, else None. The
+    * [[DefaultMaxBroadcastProbes]] budget first, then the free
+    * parallelism veto, then the sizing — `qHint` when the caller knows
+    * the batch size (the fit's nHint pattern), else ONE count of
+    * `queries` with the predicate pushed to the index scan. */
+  private[graft] def broadcastProbes(assigned: DataFrame, queries: DataFrame,
+      nprobe: Int, qHint: Long): Option[Long] = {
+    val cap = DriverPull.budget(DefaultMaxBroadcastProbes)
+    if (cap <= 0 || !adequateStreamParallelism(assigned)) None
+    else Some(if (qHint > 0) qHint else queries.count())
+      .filter(shouldBroadcastProbes(_, nprobe, cap))
+  }
 
   /** Broadcasting the probe side streams the corpus AT ITS EXISTING
     * partitioning — which is the whole point (no corpus shuffle) when
@@ -628,24 +642,14 @@ object Similarity {
     * against one [[ivfFit]] result.
     */
   def ivfProbe(fitted: IvfFitted, queryPred: Column, nprobe: Int = 0,
-      topK: Int = 10, qHint: Long = 0L,
-      maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+      topK: Int = 10, qHint: Long = 0L): DataFrame = {
     VectorFunctions.register(fitted.assigned.sparkSession)
     val np = resolveNprobe(fitted, nprobe)
     val queries = fitted.assigned.filter(queryPred)
       .select(col("vec_id"), col("embedding"))
-    // the parallelism veto is free — check it before paying the sizing
-    // count (ONE count with the predicate pushed to the index scan;
-    // `qHint` — the fit's nHint pattern — skips it when the caller knows
-    // the batch size, `maxBroadcastProbes = 0` disables the hint)
-    val hintable = maxBroadcastProbes > 0 && adequateStreamParallelism(fitted.assigned)
-    val nq = if (!hintable) Long.MaxValue
-      else if (qHint > 0) qHint
-      else queries.count()
     rankProbed(fitted, probeCells(fitted.centroids, queries, np), topK,
       excludeSelf = true,
-      broadcastProbes = hintable &&
-        shouldBroadcastProbes(nq, np, maxBroadcastProbes))
+      broadcastProbes = broadcastProbes(fitted.assigned, queries, np, qHint).isDefined)
   }
 
   /** Probe a fitted IVF index with ARBITRARY query vectors — a
@@ -670,8 +674,7 @@ object Similarity {
     * count job — the debug/test mode).
     */
   def ivfProbeVectors(fitted: IvfFitted, queries: DataFrame, nprobe: Int = 0,
-      topK: Int = 10, assertUnique: Boolean = false, qHint: Long = 0L,
-      maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+      topK: Int = 10, assertUnique: Boolean = false, qHint: Long = 0L): DataFrame = {
     VectorFunctions.register(queries.sparkSession)
     val q = queries.select(col("q_id").as("vec_id"), col("embedding"))
     if (assertUnique) {
@@ -680,18 +683,12 @@ object Similarity {
         "each query vector needs a unique id (cell ranking groups by it)")
     }
     val np = resolveNprobe(fitted, nprobe)
-    // parallelism veto first (free); the sizing count runs on the RAW
-    // frame (an upper bound — counting the deduplicated one would
-    // execute the dedup shuffle twice)
-    val hintable = maxBroadcastProbes > 0 && adequateStreamParallelism(fitted.assigned)
-    val nq = if (!hintable) Long.MaxValue
-      else if (qHint > 0) qHint
-      else q.count()
+    // the sizing count runs on the RAW frame (an upper bound — counting
+    // the deduplicated one would execute the dedup shuffle twice)
     rankProbed(fitted,
       probeCells(fitted.centroids, q.dropDuplicates("vec_id"), np),
       topK, excludeSelf = false,
-      broadcastProbes = hintable &&
-        shouldBroadcastProbes(nq, np, maxBroadcastProbes))
+      broadcastProbes = broadcastProbes(fitted.assigned, q, np, qHint).isDefined)
   }
 
   /** One-shot IVF ANN: [[ivfFit]] + [[ivfProbe]] in a single call — the
@@ -738,29 +735,29 @@ object Similarity {
     */
   def exactCosineEdges(s: SparkSession, emb: DataFrame, minCos: Double): DataFrame = {
     VectorFunctions.register(s)
-    // bounded probe-pull: one CollectLimit job; the +1 row proves overflow
-    val budgetRows = (MaxCosKernelFloats / 8).toInt // dim ≥ 8 in any real corpus
-    val pulled = emb.select(col("vec_id"), col("embedding"))
-      .limit(budgetRows + 1).collect()
-    val nFloats = pulled.iterator
-      .map(r => if (r.isNullAt(1)) 0L else r.getSeq[Float](1).length.toLong).sum
-    if (pulled.length <= budgetRows && nFloats <= MaxCosKernelFloats) {
-      val valid = pulled.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      val ids = valid.map(_.getLong(0)).toSeq
-      val vecs = valid.map(_.getSeq[Float](1).toSeq).toSeq
-      emb.select(col("vec_id").as("a_id"),
-        explode(call_function("cos_edges_above", col("vec_id"), col("embedding"),
-          lit(minCos), typedLit(ids), typedLit(vecs))).as("b_id"))
-    } else {
-      // deliberately NOT [[spread]]: this plan is materialized by the CC
-      // loop's eager checkpoint, and the A/B (round 12) measured spread
-      // 2× SLOWER there (7.5 vs 3.3 s at sf0.1) — the repartition ahead of
-      // the non-equi join flips/fragments the join inside the checkpoint
-      // materialization instead of widening useful parallelism
-      val n = normedOf(s, emb)
-      side(n, "a").join(side(n, "b"), col("a_id") < col("b_id"))
-        .filter(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")) >= minCos)
-        .select(col("a_id"), col("b_id"))
+    // sized by floats before any vector leaves the executors: one
+    // (rows, floats) aggregate, then the pull only when both fit
+    val pulled = DriverPull.collect(emb.select(col("vec_id"), col("embedding")),
+      maxRows = (MaxCosKernelFloats / 8).toInt, // dim ≥ 8 in any real corpus
+      weight = Some((coalesce(size(col("embedding")), lit(0)), MaxCosKernelFloats)))
+    pulled match {
+      case Some(rows) =>
+        val valid = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        val ids = valid.map(_.getLong(0)).toSeq
+        val vecs = valid.map(_.getSeq[Float](1).toSeq).toSeq
+        emb.select(col("vec_id").as("a_id"),
+          explode(call_function("cos_edges_above", col("vec_id"), col("embedding"),
+            lit(minCos), typedLit(ids), typedLit(vecs))).as("b_id"))
+      case None =>
+        // deliberately NOT [[spread]]: this plan is materialized by the CC
+        // loop's eager checkpoint, and the A/B (round 12) measured spread
+        // 2× SLOWER there (7.5 vs 3.3 s at sf0.1) — the repartition ahead
+        // of the non-equi join flips/fragments the join inside the
+        // checkpoint materialization instead of widening useful parallelism
+        val n = normedOf(s, emb)
+        side(n, "a").join(side(n, "b"), col("a_id") < col("b_id"))
+          .filter(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")) >= minCos)
+          .select(col("a_id"), col("b_id"))
     }
   }
 

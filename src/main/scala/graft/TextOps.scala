@@ -1845,6 +1845,12 @@ object TextOps {
       .orderBy(col("lang"), col("key_micros").desc, col("doc_id"))
   }
 
+  /** Query-term frames at or under this many distinct terms ride the
+    * `term_tf_counts` kernel path in [[bm25Scores]] (driver-held table,
+    * tens of KB — the domainGate literal-list class); larger frames keep
+    * the explode + broadcast-join shape. */
+  val MaxLiteralQueryTerms: Int = 4096
+
   /** F29 (round 14): BM25 relevance scoring — the retrieval primitive
     * behind search-based decontamination and example mining over a
     * training corpus. Per doc: Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 −
@@ -1865,18 +1871,21 @@ object TextOps {
     * |terms|·|docs| rows); df and the N/avgdl stats are term-count- and
     * scalar-sized; the final per-doc sum is a long agg with map-side
     * partials. No window, no driver loop.
+    *
+    * Input contract (as [[lmBigramScores]]): `doc_id` is assumed UNIQUE.
+    * The kernel path counts tf per INPUT ROW, while the explode + join
+    * fallback groups by (doc_id, term, dl) and so merges rows that share
+    * an id — with duplicate ids the two paths' df, idf and scores
+    * differ, and which one runs depends on the distinct-term count. The
+    * documents contract has unique ids; a caller with duplicates must
+    * pre-aggregate.
     */
-  /** Query-term frames at or under this many distinct terms ride the
-    * `term_tf_counts` kernel path in [[bm25Scores]] (driver-held table,
-    * tens of KB — the domainGate literal-list class); larger frames keep
-    * the explode + broadcast-join shape. */
-  val MaxLiteralQueryTerms: Int = 4096
-
   def bm25Scores(docs: org.apache.spark.sql.DataFrame,
       terms: org.apache.spark.sql.DataFrame, k1: Double = 1.25,
       b: Double = 0.75): org.apache.spark.sql.DataFrame = {
     graft.functions.VectorFunctions.registered(docs)
-    val base = docs.filter(col("text").isNotNull)
+    val texts = docs.filter(col("text").isNotNull)
+    val base = texts
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("toks"),
         size(col("toks")).cast("long").as("dl"))
@@ -1892,27 +1901,27 @@ object TextOps {
     // driver-held TermTable and each doc's (dl, per-term tf) is ONE
     // `term_tf_counts` byte walk — the retired shape exploded every
     // corpus token (tokens × corpus rows at scale) just to broadcast-
-    // join ~5 terms and re-aggregate by (doc, term). An oversized term
-    // frame keeps the explode + join shape, identical output.
-    val pulledTerms = terms.select(col("term")).distinct()
-      .limit(MaxLiteralQueryTerms + 1).collect()
-    val tf =
-      if (pulledTerms.length <= MaxLiteralQueryTerms) {
-        val termArr = pulledTerms.filter(!_.isNullAt(0)).map(_.getString(0)).sorted
-        base.select(col("doc_id"),
-            call_function("term_tf_counts",
-              concat_ws(" ", col("toks")), typedLit(termArr.toSeq)).as("r"))
+    // join ~5 terms and re-aggregate by (doc, term). The kernel walks
+    // the text itself (its tokens are split(text, ' ')'s, so dl agrees).
+    // An oversized term frame keeps the explode + join shape, identical
+    // output.
+    val tf = DriverPull.collect(terms.select(col("term")).distinct(),
+        MaxLiteralQueryTerms) match {
+      case Some(pulled) =>
+        val termArr = pulled.filter(!_.isNullAt(0)).map(_.getString(0)).sorted.toSeq
+        texts.select(col("doc_id"),
+            call_function("term_tf_counts", col("text"), typedLit(termArr)).as("r"))
           .select(col("doc_id"), col("r.dl").as("dl"),
             posexplode(col("r.tf")).as(Seq("__ti", "tf")))
           .filter(col("tf") > 0)
-          .withColumn("term",
-            element_at(typedLit(termArr.toSeq), col("__ti") + 1))
+          .withColumn("term", element_at(typedLit(termArr), col("__ti") + 1))
           .select(col("doc_id"), col("term"), col("dl"), col("tf"))
-      } else base
+      case None => base
         .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
         .join(broadcast(terms.select(col("term")).distinct()), Seq("term"))
         .groupBy(col("doc_id"), col("term"), col("dl"))
         .agg(count(lit(1)).as("tf"))
+    }
     val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf6 = trunc6(log(
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) +
@@ -3528,6 +3537,10 @@ object TextOps {
     contaminationScanAC(documents(s, d), screenPhrases)
   }
 
+  /** Distinct eval windows [[ngramDecontamOf]] broadcasts at most: 2M
+    * hashes ≈ 160 MB of driver heap. */
+  val MaxBroadcastWindows: Long = 2000000L
+
   /** F22 core: n-gram eval-set decontamination — per training doc, the
     * count/fraction of its `w`-token windows that also occur anywhere in
     * the eval corpus (the published GPT-3/PaLM-style leakage screen:
@@ -3545,19 +3558,19 @@ object TextOps {
     * driver, not downgrade the plan. The distinct window set is therefore
     * checkpointed and counted up front — ONE eager job at call time, on
     * the side that is small by contract — and above
-    * `maxBroadcastWindows` (default 2M hashes ≈ 160 MB of driver heap)
-    * the semi-join falls back to a shuffle: identical output, spec-pinned
-    * in Round7OpsSpec.
+    * [[MaxBroadcastWindows]] (read through [[DriverPull.budget]]) the
+    * semi-join falls back to a shuffle: identical output, spec-pinned in
+    * Round7OpsSpec.
     */
   def ngramDecontamOf(train: org.apache.spark.sql.DataFrame,
-      eval: org.apache.spark.sql.DataFrame, w: Int = 10,
-      maxBroadcastWindows: Long = 2000000L): org.apache.spark.sql.DataFrame = {
+      eval: org.apache.spark.sql.DataFrame, w: Int = 10): org.apache.spark.sql.DataFrame = {
     // sized once, reused by the join
     val evalWins = Lineage.cut(eval
       .select(explode(call_function("window_md5s", col("text"), lit(w))).as("wh"))
       .distinct())
     val evalSide =
-      if (evalWins.count() <= maxBroadcastWindows) broadcast(evalWins) else evalWins
+      if (evalWins.count() <= DriverPull.budget(MaxBroadcastWindows)) broadcast(evalWins)
+      else evalWins
     val trainWins = train.select(col("doc_id"),
       explode(call_function("window_md5s", col("text"), lit(w))).as("wh"))
     val nw = trainWins.groupBy(col("doc_id")).agg(count(lit(1)).as("n_windows"))

@@ -1963,8 +1963,8 @@ case class TermTfCounts(child: Expression, table: TermTable)
   * explode + groupBy shape, which spills gracefully.
   */
 final class QgramFreqMap(val maxVocab: Int) {
-  require(maxVocab >= 1, s"qgram_freq_agg: maxVocab must be >= 1, got $maxVocab")
-  var overflow: Boolean = false
+  require(maxVocab >= 0, s"qgram_freq_agg: maxVocab must be >= 0, got $maxVocab")
+  var overflow: Boolean = maxVocab == 0 // a 0 cap fits nothing, not even an empty input
   private var cap = 1 << 10
   private var keys = new Array[Long](cap)
   private var counts = new Array[Long](cap) // counts(i) == 0 ⇔ slot empty
@@ -2052,16 +2052,17 @@ final class QgramFreqMap(val maxVocab: Int) {
   * array<bigint> column's elements as one partial-aggregated pass (the
   * [[QgramFreqAgg]] buffer aimed at the containment join's shingle
   * document-frequency fit): returns struct(keys ASC, freqs), NULL when
-  * the distinct vocabulary exceeds `max_vocab` anywhere — the caller's
-  * signal to build the explode + groupBy table instead. Buffers stay
+  * the distinct vocabulary exceeds `max_vocab` anywhere (always at
+  * `max_vocab` 0) — the caller's signal to build the explode + groupBy
+  * table instead. Buffers stay
   * ≤ max_vocab × 16 B by construction. NULL arrays contribute nothing.
   */
 case class LongFreqAgg(child: Expression, maxVocab: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[QgramFreqMap] {
 
-  require(maxVocab >= 1 && maxVocab <= (1 << 24),
-    s"long_freq_agg: max_vocab must be in [1, 2^24], got $maxVocab")
+  require(maxVocab >= 0 && maxVocab <= (1 << 24),
+    s"long_freq_agg: max_vocab must be in [0, 2^24], got $maxVocab")
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true
@@ -2166,10 +2167,10 @@ case class FreqOrderValues(child: Expression, table: GramFreqTable)
   * table [[graft.Dedup.editDistancePairsQGram]] previously built by
   * exploding one row PER GRAM OCCURRENCE (~8× the corpus bytes) into a
   * groupBy and then pulling it. NULL result ⇔ the distinct vocabulary
-  * exceeded `max_vocab` somewhere (update or merge) — the caller's signal
-  * to run the explode + groupBy shape instead; the bound is also what
-  * keeps every aggregation buffer ≤ max_vocab × 16 B (spill-safe by
-  * construction, never by spilling). Gram hash = charQgramHashes' exact
+  * exceeded `max_vocab` somewhere (update or merge), or `max_vocab` is
+  * 0 — the caller's signal to run the explode + groupBy shape instead;
+  * the bound is also what keeps every aggregation buffer ≤ max_vocab ×
+  * 16 B (spill-safe by construction, never by spilling). Gram hash = charQgramHashes' exact
   * per-position hash; NULL texts contribute nothing.
   */
 case class QgramFreqAgg(child: Expression, q: Int, maxVocab: Int,
@@ -2177,8 +2178,8 @@ case class QgramFreqAgg(child: Expression, q: Int, maxVocab: Int,
   extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[QgramFreqMap] {
 
   require(q >= 2, s"qgram_freq_agg: q must be >= 2, got $q")
-  require(maxVocab >= 1 && maxVocab <= (1 << 24),
-    s"qgram_freq_agg: max_vocab must be in [1, 2^24], got $maxVocab")
+  require(maxVocab >= 0 && maxVocab <= (1 << 24),
+    s"qgram_freq_agg: max_vocab must be in [0, 2^24], got $maxVocab")
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true

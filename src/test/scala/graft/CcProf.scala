@@ -38,17 +38,17 @@ object CcProf {
         ("f21_exact", emb.select(col("vec_id").as("doc_id")), exactEdges))
       for ((name, nodes, edges) <- shapes; rep <- 1 to 3) {
         var t0 = System.nanoTime()
-        val (a, rA) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          localFinishMaxEdges = 0L)
+        val (a, rA) = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsWithRounds(spark, nodes, edges))
         a.count(); val tA = (System.nanoTime() - t0) / 1e9
         t0 = System.nanoTime()
-        val (b, rB) = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-          localFinishMaxEdges = 0L)
+        val (b, rB) = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsStarWithRounds(spark, nodes, edges))
         b.count(); val tB = (System.nanoTime() - t0) / 1e9
         for (sw <- Seq(2, 4, 8)) {
           t0 = System.nanoTime()
-          val (h, rH) = Dedup.connectedComponentsHybridWithRounds(spark, nodes,
-            edges, starSwitchAfter = sw, localFinishMaxEdges = 0L)
+          val (h, rH) = DriverPull.forcingFallbacks(Dedup.connectedComponentsHybridWithRounds(spark, nodes,
+            edges, starSwitchAfter = sw))
           h.count(); val tH = (System.nanoTime() - t0) / 1e9
           val diff = h.exceptAll(a).count() + b.exceptAll(a).count()
           println(f"CCPROF shape=$name rep=$rep minlabel r=$rA $tA%.2f star r=$rB $tB%.2f hybrid_sw$sw r=$rH $tH%.2f diff=$diff")
@@ -64,9 +64,8 @@ object CcProf {
         val g = MinHash.simhashDedupGroups(spark, docs, 3)
         g.count()
         val tG = (System.nanoTime() - t0) / 1e9
-        val (_, rS) = Dedup.connectedComponentsHybridWithRounds(spark,
-          docs.select(col("doc_id")), pairs.select(col("a_id"), col("b_id")),
-          localFinishMaxEdges = 0L)
+        val (_, rS) = DriverPull.forcingFallbacks(Dedup.connectedComponentsHybridWithRounds(spark,
+          docs.select(col("doc_id")), pairs.select(col("a_id"), col("b_id"))))
         println(f"CCPROF simhash rep=$rep pairs=$np pairs_s=$tP%.2f groups_s=$tG%.2f cc_rounds=$rS")
       }
       spark.stop()
@@ -81,8 +80,8 @@ object CcProf {
       val ne = t(s"lsh_edges_count_$rep") { edges.count() }
       val nodes = emb.select(col("vec_id").as("doc_id"))
       val (cc, rounds) = t(s"cc_$rep") {
-        val r = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-          localFinishMaxEdges = 0L)
+        val r = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsWithRounds(spark, nodes, edges))
         (r._1.localCheckpoint(eager = true), r._2)
       }
       println(s"CCPROF rounds=$rounds edges=$ne")
@@ -97,8 +96,8 @@ object CcProf {
       // round-13 A/B: the Kiveris two-phase (large-star/small-star)
       // formulation on the SAME graph
       val (ccStar, starRounds) = t(s"cc_star_$rep") {
-        val r = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-          localFinishMaxEdges = 0L)
+        val r = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsStarWithRounds(spark, nodes, edges))
         (r._1.localCheckpoint(eager = true), r._2)
       }
       println(s"CCPROF star_rounds=$starRounds")
@@ -108,8 +107,8 @@ object CcProf {
       // round-14: the hybrid at several switch points on the same graph
       for (sw <- Seq(2, 4, 6)) {
         val (ccH, hRounds) = t(s"cc_hybrid_sw${sw}_$rep") {
-          val r = Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges,
-            starSwitchAfter = sw, localFinishMaxEdges = 0L)
+          val r = DriverPull.forcingFallbacks(Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges,
+            starSwitchAfter = sw))
           (r._1.localCheckpoint(eager = true), r._2)
         }
         val hDiff = ccH.select(col("doc_id"), col("cluster_id"))
@@ -130,13 +129,13 @@ object CcProf {
       .localCheckpoint(eager = true)
     for (rep <- 1 to 2) {
       val (ccA, rA) = t(s"deep_minlabel_$rep") {
-        val r = Dedup.connectedComponentsWithRounds(spark, deepNodes, deepEdges,
-          maxIters = 200, localFinishMaxEdges = 0L)
+        val r = DriverPull.forcingFallbacks(Dedup.connectedComponentsWithRounds(spark, deepNodes, deepEdges,
+          maxIters = 200))
         (r._1.localCheckpoint(eager = true), r._2)
       }
       val (ccB, rB) = t(s"deep_star_$rep") {
-        val r = Dedup.connectedComponentsStarWithRounds(spark, deepNodes,
-          deepEdges, localFinishMaxEdges = 0L)
+        val r = DriverPull.forcingFallbacks(Dedup.connectedComponentsStarWithRounds(spark, deepNodes,
+          deepEdges))
         (r._1.localCheckpoint(eager = true), r._2)
       }
       val dd = ccB.exceptAll(ccA).count()

@@ -98,9 +98,9 @@ class DedupSpec extends SparkSpec {
     val n = 300
     val nodes = (1L to n.toLong).toDF("doc_id")
     val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val cc = Dedup.connectedComponents(spark, nodes, edges,
-        localFinishMaxEdges = 0L) // force the loop: this test IS the shortcut
-      .as[(Long, Long)].collect().toMap
+    val cc = DriverPull.forcingFallbacks { // force the loop: this test IS the shortcut
+      Dedup.connectedComponents(spark, nodes, edges).as[(Long, Long)].collect().toMap
+    }
     assert(cc.size == n && cc.values.toSet == Set(1L),
       "the whole chain must collapse to the min id")
   }
@@ -116,21 +116,23 @@ class DedupSpec extends SparkSpec {
     val clique = (for (a <- 41L to 55L; b <- (a + 1) to 55L) yield (a, b))
     val pair = Seq((60L, 61L))
     val edges = (chain ++ clique ++ pair).toDF("a_id", "b_id")
-    val plain = Dedup.connectedComponents(spark, nodes, edges,
-        contractAbove = Long.MaxValue, localFinishMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
-    val contracted = Dedup.connectedComponents(spark, nodes, edges,
-        contractAbove = 0L, localFinishMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val plain = DriverPull.forcingFallbacks {
+      Dedup.connectedComponents(spark, nodes, edges, contractAbove = Long.MaxValue)
+        .as[(Long, Long)].collect().toMap
+    }
+    val contracted = DriverPull.forcingFallbacks {
+      Dedup.connectedComponents(spark, nodes, edges, contractAbove = 0L)
+        .as[(Long, Long)].collect().toMap
+    }
     assert(contracted == plain,
       s"contraction changed labels: ${contracted.toSet -- plain.toSet}")
     assert(plain(39L) == 1L && plain(55L) == 41L && plain(61L) == 60L &&
       plain(70L) == 70L)
     // rounds: contraction must not slow convergence
-    val (_, rPlain) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-      contractAbove = Long.MaxValue, localFinishMaxEdges = 0L)
-    val (_, rContr) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-      contractAbove = 0L, localFinishMaxEdges = 0L)
+    val (_, rPlain) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges, contractAbove = Long.MaxValue))
+    val (_, rContr) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges, contractAbove = 0L))
     assert(rContr <= rPlain, s"contracted rounds $rContr > plain $rPlain")
   }
 
@@ -140,22 +142,21 @@ class DedupSpec extends SparkSpec {
     val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("a_id", "b_id")
     // diameter 11 path cannot converge in 3 min-label rounds — the pure
     // propagation loop must throw, never return wrong labels
-    assertThrows[IllegalStateException](
-      Dedup.connectedComponentsWithRounds(spark, nodes, edges, maxIters = 3,
-        localFinishMaxEdges = 0L)._1.collect())
+    assertThrows[IllegalStateException](DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges, maxIters = 3)._1.collect()))
     // the round-14 hybrid facade SOLVES the same budget instead: the star
     // hand-off converges the path inside the 3-round star budget, with
     // correct labels (strictly better, never wrong)
-    val labels = Dedup.connectedComponents(spark, nodes, edges, maxIters = 3,
-        localFinishMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val labels = DriverPull.forcingFallbacks {
+      Dedup.connectedComponents(spark, nodes, edges, maxIters = 3)
+        .as[(Long, Long)].collect().toMap
+    }
     assert(labels.size == n && labels.values.toSet == Set(1L))
     // and when even the star budget is too small, the hybrid still throws
     // rather than returning a non-fixpoint
     val big = (1L to 300L).toDF("doc_id")
     val bigEdges = (1L until 300L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    assertThrows[IllegalStateException](
-      Dedup.connectedComponents(spark, big, bigEdges, maxIters = 2,
-        localFinishMaxEdges = 0L).collect())
+    assertThrows[IllegalStateException](DriverPull.forcingFallbacks(
+      Dedup.connectedComponents(spark, big, bigEdges, maxIters = 2).collect()))
   }
 }

@@ -1,0 +1,102 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions._
+
+/** [[DriverPull]]: one budget for every size-gated driver pull. The
+  * graded queries whose forks it decides return the same rows with every
+  * budget forced to 0 (the distributed fallbacks) as on their default
+  * paths; the cosine probe sizes a corpus by floats before any vector
+  * reaches the driver; and `src/main` holds no overflow probe outside the
+  * helper and none of the retired cap parameters.
+  */
+class DriverPullSpec extends SparkSpec {
+
+  Seq("q_bm25_topk", "q_f47_containment", "q_edit_dedup_groups",
+      "q_f21_semantic_dedup", "q_f40b_rrf_bm25_dense").foreach { name =>
+    test(s"$name returns the same rows with every fallback forced") {
+      def run() = Golden.canon(SparkEntry.queries(name)(spark, sf001))
+      val plain = run()
+      val forced = DriverPull.forcingFallbacks(run())
+      assert(plain.size > 1, s"$name returned no rows")
+      assert(forced == plain, s"$name: the forced fallbacks changed the result")
+    }
+  }
+
+  /** Sums the serialized task results of the jobs `body` runs — every
+    * byte those jobs sent to the driver. A marker job run afterwards
+    * drains the listener queue (events arrive in order) and is not
+    * counted. */
+  private def resultBytes(body: => Unit): Long = {
+    val marker = "driver-pull-spec-drain"
+    val bytes = new AtomicLong(0L)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.job.description") == marker) markerJob = js.jobId
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (markerJob < 0 && te.taskMetrics != null) bytes.addAndGet(te.taskMetrics.resultSize)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobId == markerJob) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener queue did not drain")
+    } finally sc.removeSparkListener(listener)
+    bytes.get
+  }
+
+  test("the cosine probe sizes an over-budget corpus without pulling its vectors") {
+    // 300 × 4,096 floats = 1.23 M floats against the 2^19 kernel budget,
+    // inside the row budget: only a float count can turn it away. A
+    // row-bounded probe pulls all 300 vectors, ~4.9 MB (hashed floats,
+    // so the compressed task results stay that size).
+    val dim = 4096
+    val emb = spark.range(0, 300, 1, 4).select(col("id").as("vec_id"),
+      expr(s"transform(sequence(0, ${dim - 1}), " +
+        "j -> cast((xxhash64(id, j) % 1000003) / 1000003.0 AS FLOAT))").as("embedding"))
+    assert(300L * dim > Similarity.MaxCosKernelFloats)
+    var edges: org.apache.spark.sql.DataFrame = null
+    val pulled = resultBytes { edges = Similarity.exactCosineEdges(spark, emb, 0.9) }
+    assert(pulled < 64L * 1024, s"$pulled bytes reached the driver while sizing the corpus")
+    assert(!edges.queryExecution.analyzed.toString.contains("cos_edges_above"),
+      "an over-budget corpus must take the join shape")
+  }
+
+  private def mainSources: Seq[Path] =
+    Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq
+
+  private def hits(p: Path, pattern: scala.util.matching.Regex): Seq[String] =
+    Files.readAllLines(p).asScala.zipWithIndex.collect {
+      case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+    }.toSeq
+
+  test("no overflow probe outside DriverPull and no per-method cap parameter") {
+    val probe = """\+ 1\)\.collect\(\)""".r
+    val (helper, rest) = mainSources.partition(_.getFileName.toString == "DriverPull.scala")
+    assert(helper.size == 1, "the DriverPull helper is missing")
+    // the pattern really matches the helper's own probe
+    assert(hits(helper.head, probe).nonEmpty)
+    val strayProbes = rest.flatMap(hits(_, probe))
+    assert(strayProbes.isEmpty,
+      strayProbes.mkString("overflow probe outside DriverPull.collect:\n", "\n", ""))
+    val capParam = """\b(localFinishMaxEdges|maxBroadcastProbes|maxBroadcastWindows)\s*:""".r
+    val strayCaps = mainSources.flatMap(hits(_, capParam))
+    assert(strayCaps.isEmpty,
+      strayCaps.mkString("cap parameter instead of DriverPull.budget:\n", "\n", ""))
+  }
+}

@@ -192,8 +192,8 @@ class Round10OpsSpec extends SparkSpec {
       val pred = col("vec_id") < 25
       val on = Similarity.ivfProbe(fitted, pred, nprobe = 3, topK = 5)
         .collect().map(_.toString).sorted.toSeq
-      val off = Similarity.ivfProbe(fitted, pred, nprobe = 3, topK = 5,
-        maxBroadcastProbes = 0).collect().map(_.toString).sorted.toSeq
+      val off = DriverPull.forcingFallbacks(Similarity.ivfProbe(fitted, pred,
+        nprobe = 3, topK = 5).collect().map(_.toString).sorted.toSeq)
       val hinted = Similarity.ivfProbe(fitted, pred, nprobe = 3, topK = 5,
         qHint = 25).collect().map(_.toString).sorted.toSeq
       assert(on == off, "broadcast hint must not change probe results")

@@ -252,11 +252,10 @@ class Round13OpsSpec extends SparkSpec {
     val edges = (chain ++ clique ++ random).toDF("a_id", "b_id")
     val nodes = ((0L until 300L) ++ (400L until 412L) ++ (500L until 700L))
       .toDF("doc_id")
-    val a = Dedup.connectedComponents(spark, nodes, edges,
-        localFinishMaxEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val (starDf, rounds) = Dedup.connectedComponentsStarWithRounds(spark, nodes,
-      edges, localFinishMaxEdges = 0L)
+    val a = DriverPull.forcingFallbacks(Dedup.connectedComponents(spark, nodes, edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (starDf, rounds) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsStarWithRounds(spark, nodes, edges))
     val b = starDf.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a == b, s"label divergence (two-phase rounds=$rounds)")
     assert(rounds > 0 && rounds < 15, s"unexpected round count $rounds")
@@ -282,8 +281,8 @@ class Round13OpsSpec extends SparkSpec {
     try {
       val dir = tmpDir("ccstar_loss_ckpt")
       val labels = withCheckpointDir(dir) {
-        val (df, _) = Dedup.connectedComponentsStarWithRounds(spark, nodes,
-          edges, localFinishMaxEdges = 0L)
+        val (df, _) = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsStarWithRounds(spark, nodes, edges))
         df.as[(Long, Long)].collect().toMap
       }
       assert(labels.size == 200 && labels(149L) == 0L && labels(199L) == 150L,

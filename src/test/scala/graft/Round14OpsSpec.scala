@@ -293,12 +293,12 @@ class Round14OpsSpec extends SparkSpec {
     val nodes = docs.select(col("doc_id"))
     val hybrid = MinHash.simhashDedupGroups(spark, docs, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val minLabel = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-        localFinishMaxEdges = 0L)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val star = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-        localFinishMaxEdges = 0L)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val minLabel = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges)._1
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val star = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsStarWithRounds(spark, nodes, edges)._1
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
     assert(hybrid == minLabel && hybrid == star)
     assert(hybrid.nonEmpty)
   }
@@ -310,8 +310,8 @@ class Round14OpsSpec extends SparkSpec {
     val clique = for (a <- 400L until 410L; b <- (a + 1) until 410L) yield (a, b)
     val edges = (chain ++ clique).toDF("a_id", "b_id")
     val nodes = ((0L until 300L) ++ (400L until 412L)).toDF("doc_id")
-    val (hyb, hybRounds) = Dedup.connectedComponentsHybridWithRounds(
-      spark, nodes, edges, starSwitchAfter = 4, localFinishMaxEdges = 0L)
+    val (hyb, hybRounds) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges, starSwitchAfter = 4))
     val got = hyb.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val want = Dedup.connectedComponentsWithRounds(spark, nodes, edges)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -327,16 +327,15 @@ class Round14OpsSpec extends SparkSpec {
     // (round 3) certifies it — the hybrid must exit there, star untouched
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
     val nodes = (1L to 12L).toDF("doc_id")
-    val (df, rounds) = Dedup.connectedComponentsHybridWithRounds(
-      spark, nodes, edges, localFinishMaxEdges = 0L)
+    val (df, rounds) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges))
     assert(rounds <= 3, s"shallow graph must converge at the first check: $rounds")
     val labels = df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(labels(3L) == 1L && labels(11L) == 10L && labels(5L) == 5L)
     // a diameter-3 chain legitimately hands off at the first check and
     // star closes it in one round — correct labels, tiny budget
-    val (df2, rounds2) = Dedup.connectedComponentsHybridWithRounds(
-      spark, nodes, Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id"),
-      localFinishMaxEdges = 0L)
+    val (df2, rounds2) = DriverPull.forcingFallbacks(Dedup.connectedComponentsHybridWithRounds(
+      spark, nodes, Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_id", "b_id")))
     val l2 = df2.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(l2(4L) == 1L && rounds2 <= 5, s"chain hand-off: rounds=$rounds2")
   }
@@ -351,8 +350,8 @@ class Round14OpsSpec extends SparkSpec {
     try {
       val dir = tmpDir("cchybrid_loss_ckpt")
       val (labels, rounds) = withCheckpointDir(dir) {
-        val (df, rounds) = Dedup.connectedComponentsHybridWithRounds(
-          spark, nodes, edges, starSwitchAfter = 4, localFinishMaxEdges = 0L)
+        val (df, rounds) = DriverPull.forcingFallbacks(
+          Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges, starSwitchAfter = 4))
         (df.as[(Long, Long)].collect().toMap, rounds)
       }
       assert(rounds > 4 && labels.size == 200 && labels(199L) == 0L,

@@ -236,15 +236,15 @@ class Round15OpsSpec extends SparkSpec {
     val edges = edgeRows.toSeq.toDF("a_id", "b_id")
     def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val (ml, _) = Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-      maxIters = 100, localFinishMaxEdges = 0L)
-    val (st, _) = Dedup.connectedComponentsStarWithRounds(spark, nodes, edges,
-      localFinishMaxEdges = 0L)
+    val (ml, _) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges, maxIters = 100))
+    val (st, _) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsStarWithRounds(spark, nodes, edges))
     val want = labels(ml)
     assert(labels(st) == want, "star must agree with min-label on the sweep")
     for (sw <- Seq(1, 2, 3, 5, 8)) {
-      val (hy, _) = Dedup.connectedComponentsHybridWithRounds(spark, nodes, edges,
-        maxIters = 100, starSwitchAfter = sw, localFinishMaxEdges = 0L)
+      val (hy, _) = DriverPull.forcingFallbacks(Dedup.connectedComponentsHybridWithRounds(
+        spark, nodes, edges, maxIters = 100, starSwitchAfter = sw))
       assert(labels(hy) == want, s"hybrid(starSwitchAfter=$sw) diverged on the sweep")
     }
   }

@@ -199,10 +199,10 @@ class Round20OptSpec extends AnyFunSuite {
     def lbls(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val local = lbls(Dedup.connectedComponents(spark, nodes, edges))
-    val distMin = lbls(Dedup.connectedComponentsWithRounds(spark, nodes, edges,
-      maxIters = 200, localFinishMaxEdges = 0L)._1)
-    val distStar = lbls(Dedup.connectedComponentsStarWithRounds(spark, nodes,
-      edges, localFinishMaxEdges = 0L)._1)
+    val distMin = DriverPull.forcingFallbacks(lbls(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges, maxIters = 200)._1))
+    val distStar = DriverPull.forcingFallbacks(lbls(
+      Dedup.connectedComponentsStarWithRounds(spark, nodes, edges)._1))
     assert(local == distMin, "local finish diverged from min-label")
     assert(local == distStar, "local finish diverged from star")
     // star entry point local path too

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *      covered by the existing DedupSpec/Round11OpsSpec equivalence
   *      laws, re-run green this round; the pins here add the corpus-
   *      level identity against the banded reference at a second q.
+  *   4. Every kernel-or-fallback fork decided through [[DriverPull]]
+  *      returns the same rows on both sides: each operator runs once
+  *      plainly (kernel or local path, on these small seeded inputs) and
+  *      once under `DriverPull.forcingFallbacks` (distributed path).
   */
 class Round21OptSpec extends SparkSpec {
 
@@ -241,6 +245,96 @@ class Round21OptSpec extends SparkSpec {
       .groupBy(col("doc_id")).agg(sum(col("c")).as("score_micros")))
     assert(got == ref)
     assert(ref.nonEmpty)
+  }
+
+  // ---- 5. kernel ≡ fallback through the DriverPull hook --------------------
+
+  private def words(rnd: scala.util.Random, n: Int): String =
+    Seq.fill(n)(s"w${rnd.nextInt(40)}").mkString(" ")
+
+  /** Runs `op` plainly and with every budget forced to 0; asserts the two
+    * results are equal and that `kernel` names an expression only the
+    * plain plan holds (the hook really moved the fork). */
+  private def bothSides[A](kernel: Option[String])(
+      op: => org.apache.spark.sql.DataFrame)(rows: org.apache.spark.sql.DataFrame => A): A = {
+    val plain = op
+    val forced = DriverPull.forcingFallbacks(op)
+    kernel.foreach { k =>
+      assert(plain.queryExecution.analyzed.toString.contains(k), s"plain run lost $k")
+      assert(!forced.queryExecution.analyzed.toString.contains(k), s"forced run kept $k")
+    }
+    val want = rows(plain)
+    assert(rows(forced) == want, "the forced fallback changed the result")
+    want
+  }
+
+  test("exactCosineEdges: the kernel and the forced join return the same edges") {
+    val rnd = new scala.util.Random(5)
+    val emb = ((1L to 150L).map(i => (i, Seq.fill(12)((rnd.nextFloat() - 0.5f) * 2f))) ++
+      Seq((151L, null.asInstanceOf[Seq[Float]]))).toDF("vec_id", "embedding")
+    val got = bothSides(Some("cos_edges_above"))(
+      Similarity.exactCosineEdges(spark, emb, 0.3))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(got.nonEmpty)
+  }
+
+  test("bm25Scores: the term-table kernel and the forced explode+join agree") {
+    val rnd = new scala.util.Random(6)
+    val docs = docsDf((1L to 80L).map(i => i -> words(rnd, 3 + rnd.nextInt(20))) ++
+      Seq(81L -> "", 82L -> "w1  w2", 83L -> null.asInstanceOf[String]))
+    val terms = Seq("w1", "w2", "w3", "w7", "absent", "w1").map(Tuple1(_)).toDF("term")
+    val got = bothSides(Some("term_tf_counts"))(TextOps.bm25Scores(docs, terms))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    assert(got.size > 40)
+  }
+
+  test("containmentPairs: the df-order kernel and the forced explode+join agree") {
+    val rnd = new scala.util.Random(7)
+    val inner = (1L to 30L).map(i => i -> words(rnd, 12 + rnd.nextInt(20)))
+    // wrappers: chrome around an inner doc (contained), some mutated
+    val outer = inner.take(12).map { case (i, t) =>
+      val body = if (i % 3 == 0) t.replaceFirst("w", "x") else t
+      (100L + i) -> s"${words(rnd, 6)} $body ${words(rnd, 6)}"
+    }
+    val docs = docsDf(inner ++ outer :+ (200L -> "too short"))
+    val got = bothSides(Some("freq_order_values"))(
+      Dedup.containmentPairs(spark, docs, minC = 0.75))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+    assert(got.exists(_._2 >= 100L), "planted containments must surface")
+  }
+
+  test("editDistancePairsQGram: the prefix kernel and the forced freq join agree") {
+    val rnd = new scala.util.Random(8)
+    val alphabet = "abcdefghij klmnop"
+    def text(n: Int) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def mutate(t: String, edits: Int) = (1 to edits).foldLeft(t) { (s, _) =>
+      val at = rnd.nextInt(s.length)
+      s.substring(0, at) + alphabet(rnd.nextInt(alphabet.length)) + s.substring(at + 1)
+    }
+    val roots = (1L to 25L).map(i => i -> text(30 + rnd.nextInt(40)))
+    val twins = roots.map { case (i, t) => (100L + i) -> mutate(t, 1 + rnd.nextInt(5)) }
+    val docs = docsDf(roots ++ twins ++ Seq(300L -> "short", 301L -> "shorts"))
+    val got = bothSides(Some("prefix_top_values"))(
+      Dedup.editDistancePairsQGram(spark, docs, 4))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+    assert(got.count(_._2 >= 100L) >= 20, "planted twins must pair")
+  }
+
+  test("connectedComponents: the local finish and the forced distributed loop agree") {
+    val rnd = new scala.util.Random(9)
+    val chain = (0L until 60L).map(i => (i, i + 1))
+    val blob = Seq.fill(200)((100L + rnd.nextInt(120), 100L + rnd.nextInt(120)))
+      .filter(p => p._1 != p._2)
+    val edges = (chain ++ blob).toDF("a_id", "b_id")
+    val nodes = ((0L to 60L) ++ (100L until 220L) ++ (300L until 305L)).toDF("doc_id")
+    val got = bothSides(None)(Dedup.connectedComponents(spark, nodes, edges))(
+      _.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    assert(got.size == 186 && got.toMap.apply(60L) == 0L)
+    val (_, plainRounds) = Dedup.connectedComponentsWithRounds(spark, nodes, edges)
+    val (_, forcedRounds) = DriverPull.forcingFallbacks(
+      Dedup.connectedComponentsWithRounds(spark, nodes, edges))
+    assert(plainRounds == 0 && forcedRounds > 0,
+      s"the hook must move the graph off the local finish: $plainRounds vs $forcedRounds")
   }
 
   test("url kernels propagate NULL like the chains they replaced") {

@@ -80,7 +80,7 @@ class Round7OpsSpec extends SparkSpec {
     try {
       prev.foreach { case (k, _) => spark.conf.set(k, "-1") }
       val viaBroadcast = TextOps.ngramDecontamOf(train, eval)
-      val viaShuffle = TextOps.ngramDecontamOf(train, eval, maxBroadcastWindows = 0L)
+      val viaShuffle = DriverPull.forcingFallbacks(TextOps.ngramDecontamOf(train, eval))
       val a = viaBroadcast.collect().toSeq
       val b = viaShuffle.collect().toSeq
       assert(a == b, s"fallback changed the result:\n$a\nvs\n$b")

@@ -62,10 +62,10 @@ class Round8OpsSpec extends SparkSpec {
     val chain = spark.range(2000, 2059)
       .select($"id".as("a_id"), ($"id" + 1).as("b_id"))
     val edges = star.unionByName(chain)
-    def labels(): Map[Long, Long] =
-      Dedup.connectedComponents(spark, nodes, edges,
-        contractAbove = 1L, localFinishMaxEdges = 0L)
+    def labels(): Map[Long, Long] = DriverPull.forcingFallbacks {
+      Dedup.connectedComponents(spark, nodes, edges, contractAbove = 1L)
         .as[(Long, Long)].collect().toMap
+    }
     val dir = tmpDir("cc_reliable_ckpt")
     val reliable = withCheckpointDir(dir)(labels())
     assert(reliable == labels(), "reliable checkpoint changed the labels")
@@ -87,10 +87,12 @@ class Round8OpsSpec extends SparkSpec {
       (i.toLong, (1 to 14).map(j => s"t${i}_$j").mkString(" "))).toDF("doc_id", "text")
     val evalRows = Seq((1L, (1 to 10).map(j => s"t10_$j").mkString(" ")),
       (2L, (1 to 12).map(j => s"e$j").mkString(" ")))
-    for (maxBroadcast <- Seq(Long.MaxValue, 0L)) {
-      val acc = spark.sparkContext.longAccumulator(s"evalScans-$maxBroadcast")
+    for (forced <- Seq(false, true)) {
+      val acc = spark.sparkContext.longAccumulator(s"evalScans-forced-$forced")
       val eval = evalRows.toDS().map { r => acc.add(1); r }.toDF("doc_id", "text")
-      val out = TextOps.ngramDecontamOf(train, eval, maxBroadcastWindows = maxBroadcast)
+      val out =
+        if (forced) DriverPull.forcingFallbacks(TextOps.ngramDecontamOf(train, eval))
+        else TextOps.ngramDecontamOf(train, eval)
       val afterSizing = acc.value.longValue()
       assert(afterSizing == evalRows.size.toLong,
         s"the sizing pass must scan eval exactly once, saw $afterSizing row-visits")
@@ -99,7 +101,7 @@ class Round8OpsSpec extends SparkSpec {
         "planted contamination must surface")
       assert(acc.value.longValue() == afterSizing,
         s"executing the join re-computed the eval windows " +
-          s"(maxBroadcastWindows=$maxBroadcast): ${acc.value} row-visits")
+          s"(fallbacks forced: $forced): ${acc.value} row-visits")
     }
   }
 

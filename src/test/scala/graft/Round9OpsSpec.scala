@@ -168,8 +168,8 @@ class Round9OpsSpec extends SparkSpec {
     try {
       val dir = tmpDir("cc_loss_ckpt")
       val labels = withCheckpointDir(dir) {
-        Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
-          .as[(Long, Long)].collect().toMap
+        DriverPull.forcingFallbacks(Dedup.connectedComponents(spark, nodes, edges)
+          .as[(Long, Long)].collect().toMap)
       }
       assert(labels(149L) == 0L && labels(399L) == 150L,
         "reliable-checkpoint CC must label correctly despite block loss")
@@ -177,8 +177,8 @@ class Round9OpsSpec extends SparkSpec {
       // the same loss kills the default path: localCheckpoint blocks are
       // the ONLY copy, and their lineage is truncated
       val ex = intercept[Exception] {
-        Dedup.connectedComponents(spark, nodes, edges, localFinishMaxEdges = 0L)
-          .as[(Long, Long)].collect()
+        DriverPull.forcingFallbacks(Dedup.connectedComponents(spark, nodes, edges)
+          .as[(Long, Long)].collect())
       }
       assert(ex.getMessage != null)
     } finally Dedup.testBlockLossHook = None
