@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
 /** The "pull a small table to the driver if it fits, else keep the
   * distributed shape" decision, shared by the operator forks that make
   * it: kernel tables shipped as plan literals (cosine edges, BM25 terms,
-  * gram/shingle frequency fits), the connected-components local finish,
-  * and the broadcast guards on probe, gram and window sides.
+  * gram/shingle frequency fits, bloom-join bitmaps, the domain gate's
+  * `isin` lists), the connected-components local finish, and the
+  * broadcast guards on probe, gram and window sides.
   *
   * Each fork keeps its own cap constant (sized to what its kernel or
   * broadcast can hold) and reads it through [[budget]]; none of those

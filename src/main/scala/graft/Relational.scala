@@ -227,9 +227,9 @@ object Relational {
     * Sizing/guard: the filter is sized to the ACTUAL key count (one
     * cheap count on the keys frame — a fixed expectedNumItems would
     * embed a ~1.2 MB literal at every scale); when the projected bitmap
-    * exceeds `maxBytes` ([[maxBloomBytes]] default) the operator
-    * returns the plain semi join instead — identical rows, no
-    * driver-side bitmap, no bloated task binaries.
+    * exceeds `DriverPull.budget(maxBloomBytes)` the operator returns the
+    * plain semi join instead — identical rows, no driver-side bitmap, no
+    * bloated task binaries.
     */
   /** Shared C6b/C6c plumbing: validate the key typing (see
     * [[bloomSemiJoin]]'s scaladoc), size and build the driver-held Bloom
@@ -237,10 +237,11 @@ object Relational {
     * when the guard admitted a build — the `might_contain` probe Column
     * over `big`'s key. `None` when the keys frame is empty (Spark's
     * `stat.bloomFilter` NPEs on a zero-row frame) or the projected bitmap
-    * exceeds `maxBytes`; callers fall back to the plain join either way.
+    * exceeds `DriverPull.budget(maxBloomBytes)`; callers fall back to the
+    * plain join either way.
     */
   private def bloomProbe(big: DataFrame, bigKey: String, keys: DataFrame,
-      keysKey: String, fpp: Double, maxBytes: Long,
+      keysKey: String, fpp: Double,
       op: String): (DataFrame, Option[org.apache.spark.sql.Column]) = {
     import org.apache.spark.sql.types._
     functions.VectorFunctions.register(big.sparkSession)
@@ -263,7 +264,7 @@ object Relational {
     val nKeys = k.count()
     val n = math.max(1000L, nKeys)
     val probe =
-      if (nKeys == 0L || bloomBitmapBytes(n, fpp) > maxBytes) None
+      if (nKeys == 0L || bloomBitmapBytes(n, fpp) > DriverPull.budget(maxBloomBytes)) None
       else {
         val bf = k.select(probeCol(col(keysKey)).as("__h"))
           .stat.bloomFilter("__h", n, fpp)
@@ -279,10 +280,8 @@ object Relational {
   }
 
   def bloomSemiJoin(big: DataFrame, bigKey: String, keys: DataFrame,
-      keysKey: String, fpp: Double = 0.01,
-      maxBytes: Long = maxBloomBytes): DataFrame = {
-    val (k, probe) = bloomProbe(big, bigKey, keys, keysKey, fpp, maxBytes,
-      "bloomSemiJoin")
+      keysKey: String, fpp: Double = 0.01): DataFrame = {
+    val (k, probe) = bloomProbe(big, bigKey, keys, keysKey, fpp, "bloomSemiJoin")
     val pruned = probe.fold(big)(big.filter)
     pruned.join(k.select(col(keysKey).as(s"__bsj_$keysKey")),
       col(bigKey) === col(s"__bsj_$keysKey"), "left_semi")
@@ -319,10 +318,8 @@ object Relational {
     * themselves before calling.
     */
   def bloomAntiJoin(big: DataFrame, bigKey: String, keys: DataFrame,
-      keysKey: String, fpp: Double = 0.01,
-      maxBytes: Long = maxBloomBytes): DataFrame = {
-    val (k, probe) = bloomProbe(big, bigKey, keys, keysKey, fpp, maxBytes,
-      "bloomAntiJoin")
+      keysKey: String, fpp: Double = 0.01): DataFrame = {
+    val (k, probe) = bloomProbe(big, bigKey, keys, keysKey, fpp, "bloomAntiJoin")
     val rhs = k.select(col(keysKey).as(s"__baj_$keysKey"))
     def anti(df: DataFrame) =
       df.join(rhs, col(bigKey) === col(s"__baj_$keysKey"), "left_anti")

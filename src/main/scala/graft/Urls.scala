@@ -166,13 +166,13 @@ object Urls {
     // right plan when the list no longer belongs in the plan tree.
     val afterBlock =
       if (blocked.isEmpty) withDom
-      else if (blocked.size <= MaxLiteralGateList)
+      else if (blocked.size <= DriverPull.budget(MaxLiteralGateList))
         withDom.filter(!coalesce(
           col("__gate_dom").isin(blocked: _*), lit(false)))
       else Relational.bloomAntiJoin(withDom, "__gate_dom",
         blocked.toDF("__blocked_dom"), "__blocked_dom")
     val afterAllow = allowed.fold(afterBlock)(a =>
-      if (a.size <= MaxLiteralGateList)
+      if (a.size <= DriverPull.budget(MaxLiteralGateList))
         afterBlock.filter(coalesce(
           col("__gate_dom").isin(a: _*), lit(false)))
       else Relational.bloomSemiJoin(afterBlock, "__gate_dom",

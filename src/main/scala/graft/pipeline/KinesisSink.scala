@@ -5,8 +5,14 @@ import java.math.BigInteger
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.KinesisShard
 
 /** Kinesis `PutRecords` semantics, rebuilt for Spark (SURVEY.md §2.A A7,
   * §2.B B3–B6). No AWS connectivity exists in this environment, so the
@@ -20,10 +26,12 @@ import org.apache.spark.sql.functions._
   *   - per-record success/failure: only the failed subset is retried, with
   *     exponential backoff and a bounded attempt count
   *
-  * Batching happens inside `foreachPartition` on the executors — the driver
-  * never materializes records — so the sink scales with the number of
-  * partitions, and repartitioning by shard upstream gives per-shard file
-  * locality at any scale.
+  * One executor-side loop, [[ShardWriter]], does all of it: routing, the
+  * request cuts, pacing and retry. Both sink surfaces feed it row by row —
+  * `deliver` (foreachBatch and backfill) from each shuffled partition, the
+  * DataSourceV2 writer (`KinesisV2.scala`) from each input partition — so
+  * the driver never materializes records and a task holds at most one
+  * pending request per shard.
   */
 object KinesisSink {
 
@@ -51,30 +59,6 @@ object KinesisSink {
     */
   def recordBytes(r: KinesisRecord): Long =
     r.data.length.toLong + r.partitionKey.getBytes(UTF_8).length
-
-  /** Chunk an iterator into PutRecords-legal requests (≤500 records,
-    * ≤5 MiB). Oversized single records are rejected eagerly.
-    */
-  def batches(records: Iterator[KinesisRecord]): Iterator[Seq[KinesisRecord]] =
-    new Iterator[Seq[KinesisRecord]] {
-      private val it = records.buffered
-      override def hasNext: Boolean = it.hasNext
-      override def next(): Seq[KinesisRecord] = {
-        val buf = Vector.newBuilder[KinesisRecord]
-        var n = 0
-        var bytes = 0L
-        var full = false
-        while (!full && it.hasNext) {
-          val r = it.head
-          val sz = recordBytes(r)
-          require(sz <= MaxBytesPerRecord,
-            s"record for key ${r.partitionKey} exceeds 1 MiB ($sz bytes)")
-          if (n + 1 > MaxRecordsPerRequest || bytes + sz > MaxBytesPerRequest) full = true
-          else { buf += it.next(); n += 1; bytes += sz }
-        }
-        buf.result()
-      }
-    }
 
   /** One record's delivery outcome — mirrors PutRecordsResultEntry. */
   final case class PutResult(sequenceNumber: Option[Long], errorCode: Option[String])
@@ -253,19 +237,22 @@ object KinesisSink {
     def putRecords(shard: Int, records: Seq[KinesisRecord]): Seq[PutResult]
   }
 
-  /** Local-directory stream emulation: shard=<n>/<name>.krf files of
-    * length-prefixed records. Files are named by the caller (batch id +
-    * partition id), so re-delivery after a restart overwrites rather than
-    * duplicates — idempotent within a Structured Streaming batch.
+  /** Local-directory stream emulation: shard=<n>/<fileTag>.krf files of
+    * length-prefixed records. A client truncates its file on its first
+    * `putRecords` and appends after that; [[ShardWriter]] makes one client
+    * per (task, shard) and callers tag files by batch or epoch and
+    * partition, so a re-run task or a replayed batch overwrites its own
+    * file instead of duplicating it.
     */
   final class DirectoryClient(baseDir: String, fileTag: String) extends PutRecordsClient {
     private var seq = 0L
+    private var append = false
     override def putRecords(shard: Int, records: Seq[KinesisRecord]): Seq[PutResult] = {
       val dir = new File(baseDir, s"shard=$shard")
       dir.mkdirs()
       val f = new File(dir, s"$fileTag.krf")
-      val append = f.exists()
       val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f, append)))
+      append = true
       try records.map { r =>
         val pk = r.partitionKey.getBytes(UTF_8)
         out.writeInt(pk.length); out.write(pk)
@@ -283,9 +270,9 @@ object KinesisSink {
     * Re-submissions are charged against `throttle` too: a retried record
     * crosses the wire again, so leaving retries unmetered would let a
     * flaky shard sustain ingress above its limit exactly when it is
-    * already struggling (round-4 advisor). The caller charges the FIRST
-    * attempt (before batching the request); this loop charges attempts
-    * 2+, sized to the surviving subset only.
+    * already struggling (round-4 advisor). [[ShardWriter]] charges the
+    * FIRST attempt before it submits; this loop charges attempts 2+, sized
+    * to the surviving subset only.
     */
   def putWithRetry(
       client: PutRecordsClient,
@@ -315,18 +302,68 @@ object KinesisSink {
     delivered
   }
 
-  /** Deliver a batch DataFrame of (partitionKey: String, data: Binary) to
-    * the "stream": route to shards, repartition so each task owns whole
-    * shards, then batch + retry inside the executors. `fileTag` must be
-    * unique per (streaming batch, partition) for idempotent re-delivery —
-    * the foreachBatch wrapper passes the batchId.
+  /** The one delivery loop behind both sink surfaces, run inside an
+    * executor task. `write` routes each record with `KinesisShard.route`
+    * (the codegen'd twin of [[shardFor]]), checks the 1 MiB record limit
+    * and appends the record to its shard's single pending request; a
+    * request that would pass 500 records or 5 MiB is submitted first. A
+    * submit charges the shard's throttle, then hands the request to
+    * [[putWithRetry]] on the shard's client. `flush` submits what is left
+    * and returns the number of records written.
     *
-    * Routing is the codegen'd `kinesis_shard` expression (plan-auditable,
-    * no per-row UDF), and delivery STREAMS: the partition arrives sorted
-    * by shard, so each shard's records form a contiguous run that is
-    * consumed lazily into ≤5 MiB request batches — at no point does a
-    * task hold more than one request batch on the heap, which is what
-    * lets a shard's full 100 TB-scale backlog flow through a single task.
+    * `clientFor(shard, fileTag)` runs on a shard's first submit, so a
+    * writer holds one client per shard. `throttleFor(shard)` runs before
+    * every submit, on the executor: return [[ShardThrottle.resident]] from
+    * it, so the bucket's state survives across tasks and micro-batches
+    * instead of arriving as a serialized copy with a full bucket.
+    */
+  final class ShardWriter(
+      numShards: Int,
+      clientFor: (Int, String) => PutRecordsClient,
+      fileTag: String,
+      throttleFor: Int => Option[ShardThrottle]) {
+    private val pending = Array.fill(numShards)(mutable.ArrayBuffer.empty[KinesisRecord])
+    private val pendingBytes = new Array[Long](numShards)
+    private val clients = new Array[PutRecordsClient](numShards)
+    private var written = 0L
+
+    def write(pk: UTF8String, data: Array[Byte]): Unit = {
+      val shard = KinesisShard.route(pk, numShards)
+      val sz = data.length.toLong + pk.numBytes()
+      require(sz <= MaxBytesPerRecord, s"record for key $pk exceeds 1 MiB ($sz bytes)")
+      if (pending(shard).size == MaxRecordsPerRequest ||
+          pendingBytes(shard) + sz > MaxBytesPerRequest) submit(shard)
+      pending(shard) += KinesisRecord(pk.toString, data)
+      pendingBytes(shard) += sz
+      written += 1
+    }
+
+    def flush(): Long = {
+      (0 until numShards).foreach(submit)
+      written
+    }
+
+    private def submit(shard: Int): Unit = if (pending(shard).nonEmpty) {
+      if (clients(shard) == null) clients(shard) = clientFor(shard, fileTag)
+      val throttle = throttleFor(shard)
+      // pace BEFORE submitting — throttled producers don't burn their
+      // retry budget discovering the shard limit
+      throttle.foreach(_.acquire(pending(shard).size, pendingBytes(shard)))
+      putWithRetry(clients(shard), shard, pending(shard).toSeq, throttle = throttle)
+      pending(shard).clear()
+      pendingBytes(shard) = 0L
+    }
+  }
+
+  /** Deliver a batch DataFrame of (partitionKey: String, data: Binary) to
+    * the "stream". The frame is repartitioned by the codegen'd
+    * `kinesis_shard` expression (plan-auditable, no per-row UDF), so one
+    * task owns each shard's records for the batch — the granularity of the
+    * throttle registry and of the shard files — and each partition then
+    * streams through a [[ShardWriter]] with the tag `<fileTag>-p<partition>`.
+    * `fileTag` names the batch (the foreachBatch wrapper passes its
+    * batchId): delivering a batch again under the same tag overwrites its
+    * files, so a replayed batch does not double.
     */
   def deliver(
       df: DataFrame,
@@ -338,38 +375,14 @@ object KinesisSink {
     import spark.implicits._
     graft.functions.VectorFunctions.register(spark)
     df.select(col("partitionKey"), col("data"))
-      .withColumn("shard", call_function("kinesis_shard", col("partitionKey"), lit(numShards)))
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions(col("shard"))
-      .as[(String, Array[Byte], Int)]
-      .foreachPartition { (it: Iterator[(String, Array[Byte], Int)]) =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val shard = buf.head._3
-          // lazy view of this shard's contiguous run — `batches` pulls
-          // from it one record at a time, so memory is one batch, not
-          // the partition
-          val run: Iterator[KinesisRecord] = new Iterator[KinesisRecord] {
-            override def hasNext: Boolean = buf.hasNext && buf.head._3 == shard
-            override def next(): KinesisRecord = {
-              val (pk, data, _) = buf.next()
-              KinesisRecord(pk, data)
-            }
-          }
-          val client = clientFor(shard, s"$fileTag-p$pid")
-          // throttleFor runs HERE, on the executor — return
-          // ShardThrottle.resident(...) from it so bucket state survives
-          // across tasks and micro-batches instead of arriving as a fresh
-          // serialized copy with a full bucket each batch
-          val throttle = throttleFor(shard)
-          batches(run).foreach { b =>
-            // pace BEFORE submitting — throttled producers don't burn
-            // their retry budget discovering the shard limit
-            throttle.foreach(_.acquire(b.size, b.iterator.map(recordBytes).sum))
-            putWithRetry(client, shard, b, throttle = throttle)
-          }
-        }
+      .repartition(numShards, call_function("kinesis_shard", col("partitionKey"), lit(numShards)))
+      .as[(String, Array[Byte])]
+      .foreachPartition { (it: Iterator[(String, Array[Byte])]) =>
+        val w = new ShardWriter(numShards, clientFor,
+          s"$fileTag-p${TaskContext.getPartitionId()}", throttleFor)
+        it.foreach { case (pk, data) => w.write(UTF8String.fromString(pk), data) }
+        w.flush()
+        ()
       }
   }
 }

@@ -1,9 +1,7 @@
 package graft.pipeline
 
-import java.io.File
 import java.util.{Map => JMap}
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,25 +13,16 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.functions.KinesisShard
-import KinesisSink.{KinesisRecord, MaxBytesPerRecord, MaxBytesPerRequest, MaxRecordsPerRequest}
-
 /** DataSourceV2 connector surface for the Kinesis-semantics sink
   * (SURVEY.md §2.A A7, §7.3): `df.writeStream.format(<this class>)
   * .option("baseDir", …).option("numShards", …)` — the connector-API form
-  * the reference's sink surface maps to, alongside the foreachBatch path
-  * (`KinesisSink.deliver`) and the facade pipeline.
-  *
-  * Executor-side, each [[KinesisV2Writer]] routes rows with the same
-  * codegen'd 128-bit MD5 math as the expression (`KinesisShard.route`),
-  * accumulates at most ONE in-flight PutRecords batch per shard
-  * (≤500 records / ≤5 MiB — flushed through `putWithRetry`, so the
-  * per-record failure/backoff contract is identical to the batch sink),
-  * and never holds more than numShards × 5 MiB regardless of partition
-  * size. Re-delivery is idempotent per (epoch, partition): the writer
-  * truncates its own `.krf` files on first touch, so a retried task
-  * overwrites instead of duplicating — the same file-naming contract the
-  * foreachBatch path uses.
+  * the reference's sink surface maps to. It is the second surface over the
+  * one delivery loop: each [[KinesisV2Writer]] feeds its input partition's
+  * rows to a [[KinesisSink.ShardWriter]], the same routing, request cuts,
+  * pacing and retry that `KinesisSink.deliver` runs for foreachBatch. Files
+  * are tagged by (epoch, partition) and each `DirectoryClient` truncates
+  * its file on first write, so a retried task overwrites instead of
+  * duplicating.
   */
 class KinesisTableProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -185,63 +174,28 @@ private[pipeline] final case class KinesisWriterFactory(baseDir: String,
 
 private[pipeline] final case class KinesisCommit(records: Long) extends WriterCommitMessage
 
+/** A thin `DataWriter` over [[KinesisSink.ShardWriter]]: rows go straight
+  * into the shared delivery loop, files land under `baseDir` tagged by
+  * (epoch, partition), and pacing uses the executor-resident bucket keyed
+  * by (stream baseDir, shard). This writer object is re-created every
+  * task and epoch, so a bucket held here would reset each micro-batch and
+  * grant one free burst per epoch; specs pre-seed the registry with
+  * fake-clock instances via `ShardThrottle.register`.
+  */
 private[pipeline] class KinesisV2Writer(baseDir: String, numShards: Int,
     pkIdx: Int, dataIdx: Int, fileTag: String,
     throttle: Option[(Int, Long)] = None) extends DataWriter[InternalRow] {
 
-  private val pending = Array.fill(numShards)(mutable.ArrayBuffer.empty[KinesisRecord])
-  private val pendingBytes = new Array[Long](numShards)
-  private val clients = mutable.Map.empty[Int, KinesisSink.DirectoryClient]
-  private var total = 0L
-
-  private def clientFor(shard: Int): KinesisSink.DirectoryClient =
-    clients.getOrElseUpdate(shard, {
-      // idempotent task retry: truncate this writer's file before the
-      // first append so a re-run overwrites instead of duplicating
-      val f = new File(new File(baseDir, s"shard=$shard"), s"$fileTag.krf")
-      if (f.exists()) f.delete()
-      new KinesisSink.DirectoryClient(baseDir, fileTag)
+  private val shards = new KinesisSink.ShardWriter(numShards,
+    (_, tag) => new KinesisSink.DirectoryClient(baseDir, tag), fileTag,
+    shard => throttle.map { case (rps, bps) =>
+      KinesisSink.ShardThrottle.resident(baseDir, shard, rps, bps)
     })
 
-  // EXECUTOR-RESIDENT bucket, keyed by (stream baseDir, shard): this
-  // writer object is re-created every task and epoch, so holding the
-  // bucket here would reset the balance each micro-batch and grant one
-  // free burst per epoch — the foreachBatch path's round-4 advisor bug,
-  // avoided in the connector from the start. Specs pre-seed the registry
-  // with fake-clock instances via ShardThrottle.register.
-  private def throttleFor(shard: Int): Option[KinesisSink.ShardThrottle] =
-    throttle.map { case (rps, bps) =>
-      KinesisSink.ShardThrottle.resident(baseDir, shard, rps, bps)
-    }
+  override def write(row: InternalRow): Unit =
+    shards.write(row.getUTF8String(pkIdx), row.getBinary(dataIdx))
 
-  private def flush(shard: Int): Unit = if (pending(shard).nonEmpty) {
-    val t = throttleFor(shard)
-    // pace BEFORE submitting; retried subsets are re-charged inside
-    t.foreach(_.acquire(pending(shard).size, pendingBytes(shard)))
-    KinesisSink.putWithRetry(clientFor(shard), shard, pending(shard).toSeq,
-      throttle = t)
-    pending(shard).clear()
-    pendingBytes(shard) = 0L
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val pk = row.getUTF8String(pkIdx)
-    val data = row.getBinary(dataIdx)
-    val shard = KinesisShard.route(pk, numShards)
-    val sz = data.length.toLong + pk.numBytes()
-    require(sz <= MaxBytesPerRecord,
-      s"record for key $pk exceeds 1 MiB ($sz bytes)")
-    if (pending(shard).size + 1 > MaxRecordsPerRequest ||
-        pendingBytes(shard) + sz > MaxBytesPerRequest) flush(shard)
-    pending(shard) += KinesisRecord(pk.toString, data)
-    pendingBytes(shard) += sz
-    total += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    (0 until numShards).foreach(flush)
-    KinesisCommit(total)
-  }
+  override def commit(): WriterCommitMessage = KinesisCommit(shards.flush())
   override def abort(): Unit = ()
   override def close(): Unit = ()
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 class DriverPullSpec extends SparkSpec {
 
   Seq("q_bm25_topk", "q_f47_containment", "q_edit_dedup_groups",
-      "q_f21_semantic_dedup", "q_f40b_rrf_bm25_dense").foreach { name =>
+      "q_f21_semantic_dedup", "q_f40b_rrf_bm25_dense", "q_f60b_domain_gate").foreach { name =>
     test(s"$name returns the same rows with every fallback forced") {
       def run() = Golden.canon(SparkEntry.queries(name)(spark, sf001))
       val plain = run()
@@ -95,7 +95,9 @@ class DriverPullSpec extends SparkSpec {
     assert(strayProbes.isEmpty,
       strayProbes.mkString("overflow probe outside DriverPull.collect:\n", "\n", ""))
     val capParam = """\b(localFinishMaxEdges|maxBroadcastProbes|maxBroadcastWindows)\s*:""".r
-    val strayCaps = mainSources.flatMap(hits(_, capParam))
+    val bloomCap = """\bmaxBytes\s*:""".r
+    val strayCaps = mainSources.flatMap(hits(_, capParam)) ++
+      mainSources.filter(_.getFileName.toString == "Relational.scala").flatMap(hits(_, bloomCap))
     assert(strayCaps.isEmpty,
       strayCaps.mkString("cap parameter instead of DriverPull.budget:\n", "\n", ""))
   }

@@ -65,20 +65,76 @@ class KinesisSinkSpec extends SparkSpec {
   }
 
   test("batches respect the 500-record limit") {
-    val bs = batches(Iterator.fill(1200)(rec("k"))).toVector
+    val bs = RecordingClient.requests(Iterator.fill(1200)(rec("k")))
     assert(bs.map(_.size) == Vector(500, 500, 200))
   }
 
   test("batches respect the 5 MiB limit") {
     // 1 MB each (legal per-record): 5 fit in 5 MiB, the 6th starts a new batch
     val big = KinesisRecord("k", Array.fill[Byte](1000000)(0))
-    val bs = batches(Iterator.fill(7)(big)).toVector
+    val bs = RecordingClient.requests(Iterator.fill(7)(big))
     assert(bs.map(_.size) == Vector(5, 2))
   }
 
   test("a record over 1 MiB is rejected") {
     val over = KinesisRecord("k", Array.fill[Byte](1024 * 1024 + 1)(0))
-    assertThrows[IllegalArgumentException](batches(Iterator(over)).toVector)
+    assertThrows[IllegalArgumentException](RecordingClient.requests(Iterator(over)))
+  }
+
+  test("ShardWriter retries each shard's rejected subset once, throttled, and lands every record once") {
+    // the loop runV2 and runCurateStream run: 3,000 keys over 4 shards, a
+    // seeded client that rejects ~15 % of records on first sight, and one
+    // fake-clock bucket per shard at 1 record/s, where every charge is
+    // whole seconds of debt: after a last zero-size acquire pays it off,
+    // seconds slept + the 1-record bucket == records charged
+    val numShards = 4
+    val keys = (0 until 3000).map(i => s"k$i")
+    def rejectsOnce(pk: String): Boolean =
+      java.lang.Math.floorMod(scala.util.hashing.MurmurHash3.productHash((17L, pk)), 1000) < 150
+    val seen = mutable.Set.empty[String]
+    val outstanding = mutable.Set.empty[String] // rejected, not yet delivered
+    val delivered = mutable.Buffer.empty[(Int, String)]
+    val retried = Array.fill(numShards)(0)
+    val flaky = new PutRecordsClient {
+      override def putRecords(shard: Int, records: Seq[KinesisRecord]): Seq[PutResult] = {
+        val pks = records.map(_.partitionKey)
+        if (pks.exists(seen.contains)) {
+          assert(pks.forall(outstanding.contains),
+            s"a re-submission carried records never rejected: ${pks.filterNot(outstanding.contains)}")
+          retried(shard) += pks.size
+        } else seen ++= pks
+        pks.map { pk =>
+          if (!outstanding.contains(pk) && rejectsOnce(pk)) {
+            outstanding += pk
+            PutResult(None, Some("ProvisionedThroughputExceededException"))
+          } else {
+            outstanding -= pk
+            delivered += ((shard, pk))
+            PutResult(Some(delivered.size.toLong), None)
+          }
+        }
+      }
+    }
+    val slept = Array.fill(numShards)(0L)
+    val throttles = (0 until numShards).map { s =>
+      var now = 0L
+      new ShardThrottle(recordsPerSec = 1, bytesPerSec = Long.MaxValue / 4,
+        nanoTime = () => now, sleep = ms => { slept(s) += ms; now += ms * 1000000L })
+    }
+    val w = new ShardWriter(numShards, (_, _) => flaky, "retry", s => Some(throttles(s)))
+    keys.foreach(k => w.write(org.apache.spark.unsafe.types.UTF8String.fromString(k), Array[Byte](1)))
+    assert(w.flush() == keys.size)
+    assert(outstanding.isEmpty && delivered.size == keys.size, "a record was lost or doubled")
+    assert(delivered.map(_._2).sorted == keys.sorted)
+    assert(delivered.forall { case (s, pk) => shardFor(pk, numShards) == s })
+    assert(retried.forall(_ > 0), s"every shard must retry, got ${retried.toSeq}")
+    assert(retried.sum == keys.count(rejectsOnce))
+    val routed = delivered.groupBy(_._1).view.mapValues(_.size).toMap
+    (0 until numShards).foreach { s =>
+      throttles(s).acquire(0, 0L)
+      assert(slept(s) / 1000 + 1 == routed(s) + retried(s),
+        s"shard $s: charged ${slept(s) / 1000 + 1} records for ${routed(s)} sent + ${retried(s)} retried")
+    }
   }
 
   test("putWithRetry re-submits only the failed subset and backs off") {
@@ -422,6 +478,47 @@ class KinesisSinkSpec extends SparkSpec {
     }
   }
 
+  test("a replayed deliver batch overwrites its files instead of doubling") {
+    val out = tmpDir("ksink_replay")
+    import spark.implicits._
+    val df = (1 to 100)
+      .map(i => (i.toString, s"payload-$i".getBytes(UTF_8)))
+      .toDF("partitionKey", "data")
+    (1 to 2).foreach { _ =>
+      KinesisSink.deliver(df, numShards = 4,
+        (shard, tag) => new DirectoryClient(out, tag), fileTag = "replay")
+    }
+    val all = readShardDir(out).toSeq.flatMap { case (s, rs) => rs.map { case (pk, _) => (s, pk) } }
+    assert(all.size == 100, s"the replay left ${all.size} records")
+    assert(all.forall { case (s, pk) => shardFor(pk, 4) == s })
+    assert(all.map(_._2).toSet == (1 to 100).map(_.toString).toSet)
+  }
+
+  test("one delivery loop: putWithRetry is called only by ShardWriter, and the pipeline never sorts") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    def hits(p: Path, needle: String): Seq[(Path, Int)] =
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) && !line.contains(s"def $needle") => (p, i)
+      }.toSeq
+    val sink = Paths.get("src/main/scala/graft/pipeline/KinesisSink.scala")
+    val lines = Files.readAllLines(sink).asScala
+    val start = lines.indexWhere(_.contains("final class ShardWriter("))
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    assert(start >= 0 && end > start, "ShardWriter is missing from KinesisSink.scala")
+    val calls = sources.flatMap(hits(_, "putWithRetry("))
+    val (inWriter, stray) = calls.partition { case (p, i) => p == sink && i > start && i < end }
+    assert(stray.isEmpty, stray.map { case (p, i) => s"$p:${i + 1}" }
+      .mkString("putWithRetry called outside KinesisSink.ShardWriter:\n", "\n", ""))
+    assert(inWriter.size == 1, s"ShardWriter must submit through putWithRetry once, found ${inWriter.size}")
+    val sorts = sources.filter(_.toString.contains("graft/pipeline/"))
+      .flatMap(hits(_, "sortWithinPartitions"))
+    assert(sorts.isEmpty, sorts.map { case (p, i) => s"$p:${i + 1}" }
+      .mkString("sortWithinPartitions under graft/pipeline/:\n", "\n", ""))
+  }
+
   test("deliver routes every record to its md5 shard (end to end)") {
     val out = tmpDir("ksink")
     import spark.implicits._
@@ -435,6 +532,31 @@ class KinesisSinkSpec extends SparkSpec {
     assert(all.size == 100)
     assert(all.forall { case (s, pk, _) => shardFor(pk, 4) == s })
     assert(all.map(_._2).toSet == (1 to 100).map(_.toString).toSet)
+  }
+}
+
+/** A `PutRecordsClient` that accepts every record and keeps each request
+  * it is sent, in order: how the specs see where [[KinesisSink.ShardWriter]]
+  * cut its requests.
+  */
+final class RecordingClient extends KinesisSink.PutRecordsClient {
+  val requests = mutable.Buffer.empty[Seq[KinesisSink.KinesisRecord]]
+  override def putRecords(shard: Int,
+      records: Seq[KinesisSink.KinesisRecord]): Seq[KinesisSink.PutResult] = {
+    requests += records
+    records.map(_ => KinesisSink.PutResult(Some(requests.size.toLong), None))
+  }
+}
+
+object RecordingClient {
+  /** The requests a one-shard writer cuts from `records`. */
+  def requests(records: Iterator[KinesisSink.KinesisRecord]): Vector[Seq[KinesisSink.KinesisRecord]] = {
+    val client = new RecordingClient
+    val w = new KinesisSink.ShardWriter(1, (_, _) => client, "rec", _ => None)
+    records.foreach(r =>
+      w.write(org.apache.spark.unsafe.types.UTF8String.fromString(r.partitionKey), r.data))
+    w.flush()
+    client.requests.toVector
   }
 }
 

@@ -14,7 +14,7 @@ object SinkProps extends Properties("KinesisSink") {
 
   property("batches never exceed 500 records / 5 MiB and preserve order") =
     Prop.forAll(Gen.listOfN(60, recGen)) { recs =>
-      val bs = batches(recs.iterator).toVector
+      val bs = RecordingClient.requests(recs.iterator)
       bs.forall(_.size <= MaxRecordsPerRequest) &&
         bs.forall(_.map(r => r.data.length.toLong + r.partitionKey.length).sum <= MaxBytesPerRequest) &&
         bs.flatten == recs

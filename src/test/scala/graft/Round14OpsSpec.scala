@@ -60,8 +60,8 @@ class Round14OpsSpec extends SparkSpec {
     // asserts below would see no filter either way
     val big = spark.range(0, 1000).select(col("id").as("k"), (col("id") % 13).as("m"))
     val keys = (0L until 1000L by 11L).toDF("k")
-    // maxBytes = 0 forces the guard for ANY key count
-    val guarded = Relational.bloomSemiJoin(big, "k", keys, "k", maxBytes = 0L)
+    // a forced budget of 0 trips the guard for ANY key count
+    val guarded = DriverPull.forcingFallbacks(Relational.bloomSemiJoin(big, "k", keys, "k"))
     assert(!guarded.queryExecution.executedPlan.toString.contains("might_contain"),
       "guard tripped but a bloom probe survived in the plan")
     val got = guarded.collect().map(_.getLong(0)).sorted.toSeq
@@ -95,7 +95,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(got == want && got.contains(999L),
       s"NULL-keyed row must survive the anti join: ${got.take(5)}...")
     // guard fallback: identical rows with no bloom built
-    val guarded = Relational.bloomAntiJoin(big, "k", keys, "k", maxBytes = 0L)
+    val guarded = DriverPull.forcingFallbacks(Relational.bloomAntiJoin(big, "k", keys, "k"))
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(guarded == want)
     // empty keys: everything survives
