@@ -12,7 +12,10 @@ object Graft {
 
   /** Recommended session. `shufflePartitions` should track cluster
     * parallelism (set to 2–3× total executor cores in production; AQE
-    * coalesces the excess at runtime).
+    * coalesces the excess at runtime in batch queries). AQE does not
+    * coalesce a stateful streaming stage: each state partition is a task
+    * on every trigger. [[runCurateStream]] therefore sizes its own state
+    * to `defaultParallelism` instead of this value.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
       appName: String = "graft"): SparkSession = {
@@ -1330,6 +1333,15 @@ object Graft {
     * epoch-tagged files keep a restart re-delivery idempotent — the same
     * exactly-once contract PipelineSpec proves for the event pipeline,
     * now carrying curated documents.
+    *
+    * The near-dup state is as wide as the cluster: a fresh checkpoint
+    * starts with `defaultParallelism` state partitions, whatever the
+    * session's `spark.sql.shuffle.partitions` says, because every trigger
+    * (the no-data ones too) loads, updates and commits each state
+    * partition. The width is fixed at first start: a restart keeps the
+    * width recorded in the checkpoint, so a checkpoint written at 32
+    * partitions stays at 32. The caller's session is untouched; its
+    * `spark.sql.shuffle.partitions` is the same after this returns.
     */
   def runCurateStream(docs: DataFrame, screenPhrases: Seq[String],
       streamDir: String, checkpointDir: String, numShards: Int = 4,
@@ -1350,7 +1362,7 @@ object Graft {
       html: Option[HtmlExtract] = None,
       urlGate: Option[UrlGate] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions.col
-    curateStream(docs, screenPhrases, quality, minEst, ttlMillis,
+    val writer = curateStream(docs, screenPhrases, quality, minEst, ttlMillis,
       watermarkDelay, useTws, twsTtl, normalize, langGate, classifier,
       corpusFp, calibrated, dsir, html, urlGate)
       .select(col("partitionKey"), col("data"))
@@ -1360,7 +1372,15 @@ object Graft {
       .option("baseDir", streamDir)
       .option("numShards", numShards.toString)
       .trigger(trigger)
-      .start()
+    // the query clones the session while start() builds it, so the width
+    // set here reaches the stream's state and nothing else; a restart
+    // replaces it with the width recorded in the checkpoint's offset log
+    val spark = docs.sparkSession
+    val key = "spark.sql.shuffle.partitions"
+    val callers = spark.conf.getAll.get(key)
+    spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
+    try writer.start()
+    finally callers.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** The named intermediate frames of the curation pipeline, in order:

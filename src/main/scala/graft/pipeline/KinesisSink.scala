@@ -356,11 +356,14 @@ object KinesisSink {
   }
 
   /** Deliver a batch DataFrame of (partitionKey: String, data: Binary) to
-    * the "stream". The frame is repartitioned by the codegen'd
-    * `kinesis_shard` expression (plan-auditable, no per-row UDF), so one
-    * task owns each shard's records for the batch — the granularity of the
-    * throttle registry and of the shard files — and each partition then
-    * streams through a [[ShardWriter]] with the tag `<fileTag>-p<partition>`.
+    * the "stream". The codegen'd `kinesis_shard` expression (plan-auditable,
+    * no per-row UDF) is the partition id itself (`repartitionById`), so
+    * shard s is partition s: each of the `numShards` tasks owns exactly one
+    * shard's records for the batch — the granularity of the throttle
+    * registry and of the shard files — and streams them through a
+    * [[ShardWriter]] with the tag `<fileTag>-p<s>`. (Hashing the shard id
+    * instead would pile several shards into one task and leave others
+    * idle.)
     * `fileTag` names the batch (the foreachBatch wrapper passes its
     * batchId): delivering a batch again under the same tag overwrites its
     * files, so a replayed batch does not double.
@@ -375,7 +378,7 @@ object KinesisSink {
     import spark.implicits._
     graft.functions.VectorFunctions.register(spark)
     df.select(col("partitionKey"), col("data"))
-      .repartition(numShards, call_function("kinesis_shard", col("partitionKey"), lit(numShards)))
+      .repartitionById(numShards, call_function("kinesis_shard", col("partitionKey"), lit(numShards)))
       .as[(String, Array[Byte])]
       .foreachPartition { (it: Iterator[(String, Array[Byte])]) =>
         val w = new ShardWriter(numShards, clientFor,

@@ -533,6 +533,21 @@ class KinesisSinkSpec extends SparkSpec {
     assert(all.forall { case (s, pk, _) => shardFor(pk, 4) == s })
     assert(all.map(_._2).toSet == (1 to 100).map(_.toString).toSet)
   }
+
+  test("deliver gives each shard its own task: shard s is written by partition s alone") {
+    val out = tmpDir("ksink_byid")
+    import spark.implicits._
+    val df = (1 to 100)
+      .map(i => (i.toString, s"payload-$i".getBytes(UTF_8)))
+      .toDF("partitionKey", "data")
+    KinesisSink.deliver(df, numShards = 4,
+      (shard, tag) => new DirectoryClient(out, tag), fileTag = "byid")
+    val files = (0 until 4).map { s =>
+      s -> Option(new File(out, s"shard=$s").list()).map(_.toSeq.sorted).getOrElse(Nil)
+    }.toMap
+    assert(files == (0 until 4).map(s => s -> Seq(s"byid-p$s.krf")).toMap,
+      s"shard files by shard: $files")
+  }
 }
 
 /** A `PutRecordsClient` that accepts every record and keeps each request

@@ -100,6 +100,13 @@ class SourcesSpec extends SparkSpec {
         numShards = 2, trigger = Trigger.AvailableNow())
       q.awaitTermination()
       assert(m.totalRows(q.id) == 4, s"metered ${m.batches(q.id)}")
+      // the per-trigger fields: a batch that read input took measurable
+      // time; the pipeline holds no state and sets no watermark, so those
+      // read empty
+      val bs = m.batches(q.id)
+      assert(bs.filter(_.numInputRows > 0).forall(_.triggerExecutionMs > 0), s"untimed trigger in $bs")
+      assert(bs.forall(b => b.watermarkMs.isEmpty && b.stateRows == 0 &&
+        b.stateMemoryBytes == 0 && b.stateShufflePartitions == 0), s"metered $bs")
     } finally Metering.detach(spark, m)
   }
 }

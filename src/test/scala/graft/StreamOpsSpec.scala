@@ -4,8 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
+import graft.pipeline.Metering
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.Ev
 
@@ -582,6 +583,101 @@ class StreamOpsSpec extends SparkSpec {
     run()
     assert(delivered().sorted == Seq(2L, 5L),
       s"after restart: ${delivered().sorted} (2 not re-delivered; 3 and 4 screened)")
+  }
+
+  private val WidthKey = "spark.sql.shuffle.partitions"
+
+  /** Runs `body` with the session's shuffle width at `n`, then restores it. */
+  private def atSessionWidth[A](n: Int)(body: => A): A = {
+    val prev = spark.conf.get(WidthKey)
+    spark.conf.set(WidthKey, n.toString)
+    try body finally spark.conf.set(WidthKey, prev)
+  }
+
+  /** The first `n` metered batches that read input under `q`'s id (a
+    * restart keeps the id), once the listener bus has delivered them:
+    * progress events reach listeners asynchronously. */
+  private def dataBatches(m: Metering, q: StreamingQuery, n: Int = 1): Seq[m.BatchMetric] = {
+    val deadline = System.nanoTime() + 30000000000L
+    def got = m.batches(q.id).filter(_.numInputRows > 0)
+    while (got.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+    got.take(n)
+  }
+
+  test("runCurateStream starts fresh near-dup state at defaultParallelism, not the session's width") {
+    import graft.streaming.StreamOps.Doc
+    val width = spark.sparkContext.defaultParallelism
+    assert(width != 32, "the spec needs a cluster narrower than the session width")
+    def words(tag: String): String = (1 to 25).map(k => s"${tag}w$k").mkString(" ")
+    val in = MemoryStream[Doc]
+    in.addData(Doc(1L, ts(1), words("a")), Doc(2L, ts(2), words("a")), Doc(3L, ts(3), words("b")))
+    val m = Metering.attach(spark)
+    try atSessionWidth(32) {
+      val q = Graft.runCurateStream(in.toDF(), Nil, tmpDir("width_stream"),
+        tmpDir("width_ckpt"), numShards = 3, trigger = Trigger.ProcessingTime(0L))
+      try {
+        assert(spark.conf.get(WidthKey) == "32", "start() must restore the caller's width")
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.head.numShufflePartitions == width)
+      } finally q.stop()
+      val metered = dataBatches(m, q)
+      assert(metered.nonEmpty && metered.forall(_.stateShufflePartitions == width),
+        s"metered state widths ${metered.map(_.stateShufflePartitions)}, want $width")
+      assert(metered.forall(b => b.stateRows > 0 && b.stateMemoryBytes > 0 && b.watermarkMs.nonEmpty),
+        s"metered $metered")
+    } finally Metering.detach(spark, m)
+  }
+
+  test("a checkpoint written at the session's 32 state partitions restarts through runCurateStream at 32, every doc once") {
+    // a checkpoint whose state took the session's width (the same query
+    // started straight through writeStream). A restart through
+    // runCurateStream must keep that width (the state is laid out by it)
+    // and lose or repeat no doc.
+    def words(tag: String): String = (1 to 25).map(k => s"${tag}w$k").mkString(" ")
+    def line(id: Long, min: Int, text: String): String =
+      f"""{"doc_id":$id,"ts":"2024-01-01T00:$min%02d:00Z","text":"$text"}"""
+    def drop(dir: String, name: String, lines: Seq[String]): Unit = {
+      val tmp = new java.io.File(tmpDir("width_stage"), name)
+      java.nio.file.Files.write(tmp.toPath, lines.mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, name).toPath)
+    }
+    val schema = "doc_id LONG, ts TIMESTAMP, text STRING"
+    val phrases = Seq("contraband phrase")
+    val inbox = tmpDir("width_in"); val stream = tmpDir("width_rs_stream")
+    val ckpt = tmpDir("width_rs_ckpt")
+    def docs() = spark.readStream.schema(schema).json(inbox)
+    drop(inbox, "a.json", Seq(
+      line(1L, 1, words("a")),
+      line(2L, 2, words("a")),                         // dup of 1
+      line(3L, 3, words("b")),
+      line(4L, 3, "too short"),                        // quality gate
+      line(5L, 4, words("c") + " contraband phrase"))) // screen
+    val m = Metering.attach(spark)
+    try atSessionWidth(32) {
+      val first = Graft.curateStream(docs(), phrases)
+        .select(col("partitionKey"), col("data"))
+        .writeStream.format(Graft.KinesisSinkFormat)
+        .option("checkpointLocation", ckpt).option("baseDir", stream)
+        .option("numShards", "3").trigger(Trigger.ProcessingTime(0L)).start()
+      first.processAllAvailable(); first.stop()
+      assert(dataBatches(m, first).map(_.stateShufflePartitions) == Seq(32L))
+      drop(inbox, "b.json", Seq(
+        line(10L, 11, words("a")),  // dup of 1, across the restart
+        line(11L, 12, words("z")),
+        line(12L, 13, words("b")),  // dup of 3, across the restart
+        line(13L, 14, words("y"))))
+      val second = Graft.runCurateStream(docs(), phrases, stream, ckpt,
+        numShards = 3, trigger = Trigger.ProcessingTime(0L))
+      second.processAllAvailable(); second.stop()
+      assert(dataBatches(m, second, 2).map(_.stateShufflePartitions) == Seq(32L, 32L),
+        "a restart must keep the width recorded in the checkpoint")
+    } finally Metering.detach(spark, m)
+    val delivered = ShardFiles.deliveredDocIds(stream)
+    assert(delivered.size == delivered.distinct.size, s"a doc was delivered twice: ${delivered.sorted}")
+    val batch = Graft.curateStream(spark.read.schema(schema).json(inbox), phrases)
+      .select("doc_id").as[Long].collect().toSet
+    assert(delivered.toSet == batch, s"stream ${delivered.sorted} vs batch ${batch.toSeq.sorted}")
+    assert(batch == Set(1L, 3L, 11L, 13L))
   }
 
   test("gram-less docs bypass near-dup state and always pass") {
