@@ -1462,7 +1462,7 @@ object Dedup {
     * reproduce the edge set exactly, and any non-fixpoint round changes
     * it (the paper's "no new pairs" condition in aggregate form).
     *
-    * MEASURED RESULT (CcProf, recorded in BASELINE.md round 13): on the
+    * MEASURED RESULT (recorded in BASELINE.md round 13): on the
     * q_f21b LSH graph (2k vectors, 17-round diameter for propagation)
     * two-phase converges in FEWER driver rounds but each round costs two
     * groupBy+join+distinct edge rewrites (vs one slim label join), so

@@ -1075,9 +1075,10 @@ object Graft {
     * copies → shard/order shuffle → per-shard sequence packing — with
     * the ledger, StageCounts, token meter, and release diff attached.
     * Every stage is the audited operator the graded queries pin; this
-    * call proves they COMPOSE without a hand-written driver (`Adhoc
-    * release20` certifies the composition at 1.1M docs with exact
-    * ledger↔audit↔diff reconciliation).
+    * call proves they COMPOSE without a hand-written driver
+    * (Round20OpsSpec reconciles ledger↔audit↔diff exactly through the URL
+    * gate and HTML front door; the 1.1M-doc run is in BASELINE.md, mode
+    * release20 of `git show 5efa239:src/test/scala/graft/Adhoc.scala`).
     *
     * The returned `packed` frame is the manifest order materialized as
     * token-offset sequence spans: per shard, cumulative n_toks over pos

@@ -787,9 +787,9 @@ object Multimodal {
     * comparisons reduce to single-value comparisons of the SAME values
     * the primary envelope already compared — near-vacuous as an
     * independent verify (the media19 cert's 65-frame videos: +18 video
-    * chance merges survived the frame-granular secondary; `Adhoc
-    * media20` reruns the identical corpus with the byte-granular
-    * secondary and the video residual drops to 0).
+    * chance merges survived the frame-granular secondary; BASELINE.md
+    * records the byte-granular rerun of that corpus at a video residual
+    * of 0, mode media20 of `git show 5efa239:src/test/scala/graft/Adhoc.scala`).
     */
   private[graft] val MinSecondaryValues: Int = 130
 
@@ -869,12 +869,13 @@ object Multimodal {
     * stream is long enough ([[MinSecondaryValues]]) and the cell-local
     * parity hash over the RAW BYTE stream ([[cellHashBits]]) otherwise.
     *
-    * Short-stream design, MEASURED not assumed (`Adhoc media20probe`,
-    * 120k 65-frame streams): the first cut — a byte-granular DERIVATIVE
-    * ENVELOPE — was rejected because its 65 cells align byte-exactly
-    * with the 65 frames, so each secondary cell is a per-frame |delta|
-    * mean: a second linear functional of the very frame bytes whose
-    * sums the primary compares. On primary-colliding pairs the two
+    * Short-stream design, MEASURED not assumed (BASELINE.md round 20,
+    * 120k 65-frame streams, mode media20probe of `git show
+    * 5efa239:src/test/scala/graft/Adhoc.scala`): the first cut — a
+    * byte-granular DERIVATIVE ENVELOPE — was rejected because its 65
+    * cells align byte-exactly with the 65 frames, so each secondary cell
+    * is a per-frame |delta| mean: a second linear functional of the
+    * very frame bytes whose sums the primary compares. On primary-colliding pairs the two
     * families' descent patterns stayed correlated (chance secondary
     * distances centered ~15 bits instead of ~32, 61 pairs within the
     * k₂ = 6 cut → +45 chance merges at 770k — WORSE than the
@@ -882,7 +883,7 @@ object Multimodal {
     * no linear structure to couple through: the same probe measures
     * chance candidates at ~32 ± 4 bits with 0 pairs ≤ 6, while a
     * one-frame dent spans ≤ 2 cells (Round20OpsSpec pins ≤ 2 bits) and
-    * planted recall stays exact (`Adhoc media20`). A real keyframe
+    * planted recall stays exact (Round20OpsSpec). A real keyframe
     * extractor swaps into the FRAME side only; the byte-stream
     * fallback reads the container bytes, which exist in any deployment.
     */
@@ -1004,8 +1005,8 @@ object Multimodal {
     * their bytes/samples with primary cells — so the cut is set by
     * MEASUREMENT, not an independence assumption: on the 770k media19
     * cert corpus, planted local edits sit at secondary distance ≤ 2
-    * while primary-colliding CHANCE pairs start at 7 (`Adhoc
-    * media19probe` prints the full histogram), so the default
+    * while primary-colliding CHANCE pairs start at 7 (BASELINE.md round 19
+    * has the full histogram; Round20OpsSpec pins the cut), so the default
     * verifyHamming = 6 keeps every true edge with 3× headroom and kills
     * every measured chance merge. Within an identical (sig, sig2) group
     * the verify is trivially satisfied (0 bits in both); star edges

@@ -48,7 +48,7 @@ object Similarity {
     * an n² pair join: a tiny parquet corpus arrives as ONE input split,
     * and a nested-loop join streams its non-broadcast side with the
     * input's parallelism — one thread grinding n²/2 dot products (the
-    * round-12 KnnProf finding: q_f4's 2.0 s wall and worst-in-suite
+    * round-12 finding in BASELINE.md: q_f4's 2.0 s wall and worst-in-suite
     * spread were mostly this starvation). The partition count must be
     * EXPLICIT: AQE coalesces a bare repartition(col) of a tiny input
     * right back to one partition — its cost model sees bytes, not the n²
@@ -129,7 +129,7 @@ object Similarity {
       |ORDER BY q_id, rn""".stripMargin) { (s, d) =>
     // [[spread]]: the previous 2.0 s wall (and its 0.8 s spread, the
     // suite's worst) was mostly the 1-split scan starving the pair join
-    // — KnnProf measured every mirror variant at ~0.6 s warm once spread.
+    // — BASELINE.md round 12: every mirror variant ~0.6 s warm once spread.
     val n = spread(s, normed(s, d))
     // each unordered pair's dot product is computed once (a < b), then
     // mirrored — cosine is symmetric, so this halves the expensive half
@@ -149,7 +149,7 @@ object Similarity {
     // join runs ONCE. Round 3 measured the two-branch union faster and
     // blamed the Generate for breaking codegen — that comparison was
     // confounded by the same 1-partition starvation; re-measured with the
-    // scan parallelized (KnnProf, round 12), the single-pass mirror wins
+    // scan parallelized (BASELINE.md round 12), the single-pass mirror wins
     // at 2k (0.55 vs 0.60 s warm) and clearly at 10k vectors (8–11 s vs
     // 10–19 s for union / 9–16 s for a persisted half-join), because not
     // recomputing the n² join dominates the Generate's interpreted row.

@@ -2862,7 +2862,7 @@ object TextOps {
     * run-count, and row-level joins), and each reference would re-run
     * the full scoring explode — the checkpoint pays the corpus pass
     * ONCE (intra-query reuse; the self-containment rule constrains only
-    * cross-query sharing). TimeQ A/B in BASELINE.md.
+    * cross-query sharing). A/B in BASELINE.md.
     */
   val qCcnetBuckets = Q(
     "q_f19c_ccnet_buckets",

@@ -178,8 +178,8 @@ object KinesisSink {
       * with CHANGED limits replaces the bucket rather than silently
       * pacing at the old rates forever; a restart with the same limits
       * keeps the balance, so a stopped stream's debt cannot be dodged by
-      * bouncing the query. Entries live for the executor JVM (evict via
-      * [[evictScope]] on teardown if the scope is ephemeral).
+      * bouncing the query. Entries live for the executor JVM until the
+      * idle sweep below drops them.
       */
     def resident(scope: String, shard: Int,
         recordsPerSec: Int = ShardRecordsPerSec,
@@ -201,10 +201,9 @@ object KinesisSink {
     /** Drop every bucket idle past its debt horizon. Semantically a
       * no-op — such a bucket refills to full before it could charge
       * again (see [[ShardThrottle.idleBeyondHorizon]]) — but it bounds
-      * registry growth on long-lived EXECUTORS cycling many ephemeral
-      * throttled streams, which the driver-side ThrottleJanitor cannot
-      * reach. Runs on every `resident` lookup: an executor that still
-      * writes throttled streams keeps its own registry trim.
+      * registry growth on long-lived executors cycling many ephemeral
+      * throttled streams. Runs on every `resident` lookup: an executor
+      * that still writes throttled streams keeps its own registry trim.
       */
     def sweepIdle(): Unit =
       registry.entrySet.removeIf(e => e.getValue.idleBeyondHorizon())
@@ -215,7 +214,7 @@ object KinesisSink {
     def register(scope: String, shard: Int, t: ShardThrottle): Unit =
       registry.put((scope, shard), t)
 
-    /** Drop a scope's buckets (stream teardown / spec isolation). */
+    /** Drop a scope's buckets (spec isolation). */
     def evictScope(scope: String): Unit =
       registry.keySet.removeIf(_._1 == scope)
 

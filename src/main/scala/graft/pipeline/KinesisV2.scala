@@ -67,85 +67,10 @@ private[pipeline] class KinesisTable(properties: Map[String, String])
       if (recPerSec.isEmpty && bytesPerSec.isEmpty) None
       else Some((recPerSec.getOrElse(KinesisSink.ShardRecordsPerSec),
         bytesPerSec.getOrElse(KinesisSink.ShardBytesPerSec)))
-    // round-6 ADVICE #3: resident throttle buckets lived for the executor
-    // JVM with nothing evicting them, so ephemeral streams leaked one
-    // bucket per (baseDir, shard). Watch this query and drop the scope
-    // when it terminates.
-    if (throttle.isDefined)
-      ThrottleJanitor.watch(org.apache.spark.sql.SparkSession.active,
-        info.queryId(), baseDir)
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
           new KinesisStreamingWrite(baseDir, numShards, pkIdx, dataIdx, throttle)
-      }
-    }
-  }
-}
-
-/** Evicts a stream's resident throttle scope when the stream terminates.
-  *
-  * The DataSourceV2 streaming write API has no end-of-stream hook (commit/
-  * abort are per-EPOCH, and evicting there would hand every micro-batch a
-  * fresh full bucket — the exact free-burst bug the resident registry
-  * exists to prevent), so teardown rides the SparkContext's shared
-  * listener bus: one SparkListener per context, a watch table from query
-  * id/runId to throttle scope, eviction on QueryTerminatedEvent (clean
-  * stop AND failure). NOT a per-session StreamingQueryListener — the
-  * write builder runs on the stream's CLONED session, whose
-  * StreamingQueryManager filters events down to queries it started
-  * (none), so a listener registered there never hears the termination.
-  *
-  * Scope of the guarantee: the listener runs on the DRIVER, so it empties
-  * this JVM's registry — exact in local deployments (the test/bench
-  * environment) and for any `deliver`/foreachBatch caller. On a multi-node
-  * cluster, executor-side registries are untouched by the driver; their
-  * entries are bounded-stale rather than harmful — a bucket idle longer
-  * than its debt horizon (≤ 5 s at default rates: one 5 MiB overdraw at
-  * 1 MiB/s, plus 1 s of refill) is indistinguishable from a fresh one, so
-  * a leaked bucket costs only its map entry (~100 bytes per (baseDir,
-  * shard)). Callers cycling MANY throttled scopes through long-lived
-  * executors should reuse scope names or call
-  * `ShardThrottle.evictScope` from a cleanup task of their own.
-  */
-private[pipeline] object ThrottleJanitor {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent
-
-  // query id/runId (either may match the write's queryId) → throttle scope
-  private val watched = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // one listener per context; weak keys so a stopped context unpins it
-  private val installed = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.SparkContext, Boolean]())
-
-  def watch(spark: SparkSession, queryId: String, baseDir: String): Unit = {
-    watched.put(queryId, baseDir)
-    val sc = spark.sparkContext
-    installed.synchronized {
-      if (!installed.containsKey(sc)) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onOtherEvent(
-              event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-            event match {
-              case e: QueryTerminatedEvent =>
-                Seq(e.id.toString, e.runId.toString).foreach { k =>
-                  val scope = watched.remove(k)
-                  // evict only when NO other live watched query shares the
-                  // scope: two concurrent streams writing the same baseDir
-                  // share its buckets, and the first termination evicting
-                  // them would hand the survivor a fresh full bucket — the
-                  // free-burst bug the resident registry exists to prevent.
-                  // The listener bus delivers events serially, so the
-                  // check-then-evict pair cannot interleave with another
-                  // termination; containsValue is O(watched), which is
-                  // tiny (one entry per live throttled query).
-                  if (scope != null && !watched.containsValue(scope))
-                    KinesisSink.ShardThrottle.evictScope(scope)
-                }
-              case _ => ()
-            }
-        })
-        installed.put(sc, true)
       }
     }
   }
@@ -179,8 +104,11 @@ private[pipeline] final case class KinesisCommit(records: Long) extends WriterCo
   * (epoch, partition), and pacing uses the executor-resident bucket keyed
   * by (stream baseDir, shard). This writer object is re-created every
   * task and epoch, so a bucket held here would reset each micro-batch and
-  * grant one free burst per epoch; specs pre-seed the registry with
-  * fake-clock instances via `ShardThrottle.register`.
+  * grant one free burst per epoch. The bucket also outlives the query:
+  * a stopped and restarted stream on the same baseDir pays the debt it
+  * left, and `ShardThrottle.resident`'s idle sweep drops a bucket only
+  * once it is indistinguishable from a fresh one. Specs pre-seed the
+  * registry with fake-clock instances via `ShardThrottle.register`.
   */
 private[pipeline] class KinesisV2Writer(baseDir: String, numShards: Int,
     pkIdx: Int, dataIdx: Int, fileTag: String,

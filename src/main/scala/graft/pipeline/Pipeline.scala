@@ -41,10 +41,21 @@ object Pipeline {
   private val scanOptions = Map("columnNameOfCorruptRecord" -> "raw")
 
   /** Re-packs the scan's flat columns as the `(raw, ev)` frame that
-    * [[decoded]] and [[quarantined]] take.
+    * [[decoded]] and [[quarantined]] take. The reader keeps the fields it
+    * parsed before a fault, so a line whose only fault is a non-id type
+    * mismatch still carries both ids; here they read null whenever the
+    * scan set `raw`, and [[validFilter]] rejects the line. Nulling them by
+    * `+ 0` (null when `raw` is set) rather than nulling `ev` keeps the
+    * addition null-intolerant, so Catalyst still infers IsNotNull on both
+    * id columns and pushes them into the scan.
     */
-  private def packed(scan: DataFrame): DataFrame =
-    scan.select(col("raw"), struct(rawEventSchema.fieldNames.toSeq.map(col): _*).as("ev"))
+  private def packed(scan: DataFrame): DataFrame = {
+    val unlessCorrupt = when(col("raw").isNull, lit(0L))
+    scan.select(col("raw"), struct(rawEventSchema.fieldNames.toSeq.map {
+      case id @ ("event_id" | "user_id") => (col(id) + unlessCorrupt).as(id)
+      case f => col(f)
+    }: _*).as("ev"))
+  }
 
   /** A4 + B1: watch a directory of JSON-lines files. Spark's JSON file
     * source parses each line once, straight from its bytes; a malformed

@@ -17,6 +17,14 @@ class BenchContractSpec extends SparkSpec {
     assert(ghosts.isEmpty, s"headline references missing queries: $ghosts")
   }
 
+  test("freshJvmReps forks a child JVM and parses its reps") {
+    // the floorGate specs feed the decision logic synthetic reps; this
+    // runs the fork itself: this JVM's classpath and options, one cheap
+    // query, the sentinel line parsed back
+    val r = Bench.freshJvmReps("q12_distinct", sf001, 1, timeoutSec = 300)
+    assert(r.exists(x => x.secs.length == 1 && x.errors == 0 && x.median > 0), s"reps: $r")
+  }
+
   test("median-of-reps rejects a one-rep stall; spread reports it") {
     // the round-4 failure mode: one rep inflated ~2× by ambient load.
     // the median of 3 ignores it; the spread field records that it happened

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * budget forced to 0 (the distributed fallbacks) as on their default
   * paths; the cosine probe sizes a corpus by floats before any vector
   * reaches the driver; and `src/main` holds no overflow probe outside the
-  * helper and none of the retired cap parameters.
+  * helper and none of the retired cap parameters. The source scan also
+  * keeps test scope free of one-off `main` programs: an assertion that
+  * matters belongs in a suite, where every run checks it.
   */
 class DriverPullSpec extends SparkSpec {
 
@@ -100,5 +102,17 @@ class DriverPullSpec extends SparkSpec {
       mainSources.filter(_.getFileName.toString == "Relational.scala").flatMap(hits(_, bloomCap))
     assert(strayCaps.isEmpty,
       strayCaps.mkString("cap parameter instead of DriverPull.budget:\n", "\n", ""))
+  }
+
+  test("test scope declares no main but the smoke and golden entry points") {
+    val entryPoints = Set("SmokeMain.scala", "Golden.scala")
+    val mainDecl = """\bdef main\(""".r
+    val (kept, rest) = Files.walk(Paths.get("src/test")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .toSeq.partition(p => entryPoints(p.getFileName.toString))
+    // the pattern really matches the two entry points' own mains
+    assert(kept.size == 2 && kept.forall(hits(_, mainDecl).nonEmpty))
+    val strays = rest.flatMap(hits(_, mainDecl))
+    assert(strays.isEmpty, strays.mkString("a main in test scope:\n", "\n", ""))
   }
 }

@@ -232,81 +232,63 @@ class KinesisSinkSpec extends SparkSpec {
     assert(all.map(_._2).toSet == (1 to 100).map(_.toString).toSet)
   }
 
-  test("V2 stream teardown evicts the resident throttle scope (janitor listener)") {
+  test("a restarted V2 stream pays the throttle debt its stopped run left") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val out = tmpDir("ksinkv2_evict")
+    val out = tmpDir("ksinkv2_restart")
+    val ckpt = tmpDir("ksinkv2_restart_ckpt")
+    var nowNs = 0L
+    val sleeps = mutable.Buffer.empty[Long]
+    // 10-record fake-clock bucket: run 1's 25 records overdraw it to −15
+    // free of sleep; the restart's first flush must sleep that debt out.
+    // A fresh bucket at the restart would admit it free.
+    KinesisSink.ShardThrottle.register(out, 0, new KinesisSink.ShardThrottle(
+      recordsPerSec = 10, bytesPerSec = KinesisSink.ShardBytesPerSec,
+      nanoTime = () => nowNs,
+      sleep = ms => { sleeps += ms; nowNs += ms * 1000000L }))
     val in = MemoryStream[(String, Array[Byte])]
-    val q = in.toDF().toDF("partitionKey", "data")
+    def start() = in.toDF().toDF("partitionKey", "data")
+      .coalesce(1)
       .writeStream
       .format(classOf[graft.pipeline.KinesisTableProvider].getName)
-      .option("checkpointLocation", tmpDir("ksinkv2_evict_ckpt"))
+      .option("checkpointLocation", ckpt)
       .option("baseDir", out)
-      .option("numShards", "2")
-      .option("throttleRecordsPerSec", "1000000") // pacing on, never sleeps
+      .option("numShards", "1")
+      .option("throttleRecordsPerSec", "10")
       .start()
+    def send(ids: Range): Unit =
+      in.addData(ids.map(i => (i.toString, s"v$i".getBytes(UTF_8))): _*)
     try {
-      in.addData((1 to 40).map(i => (i.toString, s"v$i".getBytes(UTF_8))): _*)
-      q.processAllAvailable()
-      assert(KinesisSink.ShardThrottle.scopes.contains(out),
-        "throttled writers must hold resident buckets while the stream runs")
-      q.stop()
-      q.awaitTermination()
-      // QueryTerminatedEvent is delivered on the async listener bus
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (KinesisSink.ShardThrottle.scopes.contains(out) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(!KinesisSink.ShardThrottle.scopes.contains(out),
-        "stream teardown must evict its throttle scope from the registry")
+      val q1 = start()
+      send(1 to 25)
+      q1.processAllAvailable()
+      assert(sleeps.isEmpty, s"the first flush rides the burst, got $sleeps")
+      // the termination event reaches every listener on the shared bus,
+      // in order; this one hears it only after any earlier listener has
+      val terminated = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case t: QueryTerminatedEvent if t.id == q1.id => terminated.countDown()
+          case _ => ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        q1.stop()
+        assert(terminated.await(30, java.util.concurrent.TimeUnit.SECONDS),
+          "no termination event")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val q2 = start()
+      send(26 to 50)
+      q2.processAllAvailable()
+      q2.stop()
+      assert(sleeps.toList == List(1500),
+        s"the restart must pay run 1's 15-record debt at 10 rec/s, got $sleeps")
+      assert(readShardDir(out).values.map(_.size).sum == 50)
     } finally KinesisSink.ShardThrottle.evictScope(out)
-  }
-
-  test("janitor keeps a shared throttle scope alive until its LAST query terminates") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // round-7 ADVICE: two concurrent throttled streams writing the SAME
-    // baseDir share its resident buckets; the first termination used to
-    // evict the whole scope, handing the survivor a fresh full bucket
-    // (the free-burst bug). The janitor now evicts only when no other
-    // watched query references the scope.
-    val out = tmpDir("ksinkv2_shared_scope")
-    def startOne(tag: Int): (MemoryStream[(String, Array[Byte])],
-        org.apache.spark.sql.streaming.StreamingQuery) = {
-      val in = MemoryStream[(String, Array[Byte])]
-      val q = in.toDF().toDF("partitionKey", "data")
-        .writeStream
-        .format(classOf[graft.pipeline.KinesisTableProvider].getName)
-        .option("checkpointLocation", tmpDir(s"ksinkv2_shared_ckpt$tag"))
-        .option("baseDir", out)
-        .option("numShards", "2")
-        .option("throttleRecordsPerSec", "1000000")
-        .start()
-      in.addData((1 to 10).map(i => (s"$tag-$i", s"v$i".getBytes(UTF_8))): _*)
-      q.processAllAvailable()
-      (in, q)
-    }
-    val (_, q1) = startOne(1)
-    val (_, q2) = startOne(2)
-    try {
-      assert(KinesisSink.ShardThrottle.scopes.contains(out))
-      q1.stop(); q1.awaitTermination()
-      // the termination event is async — give it time to land, then
-      // assert the scope SURVIVED q1's teardown because q2 still runs
-      Thread.sleep(1500)
-      assert(KinesisSink.ShardThrottle.scopes.contains(out),
-        "first termination must not evict a scope another live query shares")
-      q2.stop(); q2.awaitTermination()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (KinesisSink.ShardThrottle.scopes.contains(out) &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-      assert(!KinesisSink.ShardThrottle.scopes.contains(out),
-        "last termination must evict the shared scope")
-    } finally {
-      Seq(q1, q2).foreach(q => if (q.isActive) q.stop())
-      KinesisSink.ShardThrottle.evictScope(out)
-    }
   }
 
   test("shard throttle paces to the record limit with one-request burst debt") {
@@ -430,7 +412,7 @@ class KinesisSinkSpec extends SparkSpec {
   }
 
   test("idle sweep evicts only buckets past their debt horizon") {
-    // executor-side counterpart of the janitor: a bucket idle longer than
+    // the registry's only eviction: a bucket idle longer than
     // max(5 MiB/bytesPerSec, 500/recordsPerSec) + refill is provably a
     // fresh bucket, so resident() sweeps it; a recently-touched one stays
     val scopeOld = "sweep_old_scope"
@@ -576,7 +558,7 @@ object RecordingClient {
 }
 
 /** Shared shard-file readers for every suite that drives the
-  * file-backed Kinesis sink (KinesisSinkSpec, StreamOpsSpec, Adhoc).
+  * file-backed Kinesis sink (KinesisSinkSpec, StreamOpsSpec, PipelineSpec).
   */
 object ShardFiles {
 

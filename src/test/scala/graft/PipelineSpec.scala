@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.Pipeline
 
@@ -65,6 +66,40 @@ class PipelineSpec extends SparkSpec {
     assert(ids3.size == 8, "no duplicate deliveries across restarts")
   }
 
+  test("a stop mid-flight and a replayed batch still deliver every event exactly once") {
+    // 4 objects of 50 events, one object per trigger. Each query is
+    // stopped after its first batch, and the newest batch's commit is
+    // removed, so the resume must replay a batch the sink already saw;
+    // run's batch-tagged files and runV2's epoch-tagged files must both
+    // overwrite on the replay
+    val bucket = tmpDir("bucket_stop")
+    val nEv = 200L
+    (0 until 4).foreach(f => writeLines(bucket, f"obj-$f%03d.jsonl", (0 until 50).map { i =>
+      s"""{"event_id":${f * 50 + i},"ts":"2024-01-01T00:00:00Z","user_id":${i % 7},""" +
+        """"event_type":"view","value":1.5,"props":"{}"}"""
+    }))
+    def stopAndReplay(start: Trigger => StreamingQuery, ckpt: String, stream: String): Unit = {
+      val q1 = start(Trigger.ProcessingTime(0L))
+      while (q1.lastProgress == null) Thread.sleep(10)
+      q1.stop()
+      assert(deliveredIds(stream).size < nEv, "the first query finished before the stop")
+      val last = new File(ckpt, "offsets").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      Seq(s"$last", s".$last.crc").foreach(f => new File(ckpt, s"commits/$f").delete())
+      val q2 = start(Trigger.AvailableNow())
+      q2.awaitTermination()
+      assert(q2.recentProgress.head.batchId == last, "the resume did not replay the newest batch")
+      val ids = deliveredIds(stream)
+      assert(ids.toSet.size == nEv && ids.size == nEv,
+        s"${ids.toSet.size} distinct of $nEv events, ${ids.size} delivered")
+    }
+    val (stream, quarantine, ckpt) = (tmpDir("stream_stop"), tmpDir("quar_stop"), tmpDir("ckpt_stop"))
+    stopAndReplay(t => Pipeline.run(spark, bucket, stream, quarantine, ckpt, numShards = 4,
+      trigger = t, maxFilesPerTrigger = 1), ckpt, stream)
+    val (streamV2, ckptV2) = (tmpDir("stream_stop_v2"), tmpDir("ckpt_stop_v2"))
+    stopAndReplay(t => Pipeline.runV2(spark, bucket, streamV2, ckptV2, numShards = 4,
+      trigger = t, maxFilesPerTrigger = 1), ckptV2, streamV2)
+  }
+
   test("runV2 delivers the pipeline through the DataSourceV2 connector sink") {
     val bucket = tmpDir("bucket_v2"); val stream = tmpDir("stream_v2")
     val checkpoint = tmpDir("ckpt_v2")
@@ -101,21 +136,25 @@ class PipelineSpec extends SparkSpec {
     val truncated = """{"event_id":102,"ts":"2024-01-01T00:00:00Z","""
     val noUser = """{"event_id": 103, "extra": true, "event_type": "click"}"""
     val badType = """{"event_id":"x","ts":"2024-01-01T00:00:00Z","user_id":5}"""
+    // both ids parse; only `value` mismatches its type
+    val badValue = """{"event_id":10,"user_id":3,"value":"abc"}"""
     writeLines(bucket, "obj-001.jsonl", Seq(
       eventJson(1, user = 1), notJson, eventJson(2, user = 2), truncated,
-      noUser, "", badType, eventJson(3, user = 0)))
+      noUser, "", badType, badValue, eventJson(3, user = 0)))
 
     Pipeline.run(spark, bucket, stream, quarantine, checkpoint, numShards = 2)
       .awaitTermination()
 
     assert(deliveredIds(stream).sorted == Seq(1L, 2L, 3L))
-    // malformed lines (not JSON, truncated, type-mismatched) keep their
-    // original text; the well-formed line without user_id has no corrupt
+    // malformed lines (not JSON, truncated, a type mismatch in an id or
+    // in any other field) keep their original text and are never
+    // delivered; the well-formed line without user_id has no corrupt
     // record, so it is quarantined as to_json(ev): schema order, unknown
     // fields dropped, null fields omitted. The JSON reader skips the blank
     // line, so no empty quarantine row appears.
     assert(quarantineLines(quarantine).sorted == Seq(
-      notJson, truncated, badType, """{"event_id":103,"event_type":"click"}""").sorted)
+      notJson, truncated, badType, badValue,
+      """{"event_id":103,"event_type":"click"}""").sorted)
   }
 
   test("runV2 parses each line once, in the scan, with the id checks pushed into it") {

@@ -286,6 +286,36 @@ class Round14OpsSpec extends SparkSpec {
     assert(groups(100L) == 100L && groups(101L) == 101L)
   }
 
+  test("simhash twins beside a dup blob: exactly the signature-near twins, every blob pair, one blob cluster") {
+    // 1,000 synthetic titles, a one-token-mutated twin of every 10th and
+    // 60 copies of one page. Banding recall is exact (pigeonhole), so the
+    // twins found are exactly those whose signatures sit within 3 bits
+    val n = 1000L
+    def textOf(mutPos: Int) = concat_ws(" ",
+      transform(sequence(lit(0), (pmod(hash(col("id")), lit(8)) + lit(11)).cast("int")), { i =>
+        val tok = concat(lit("w"),
+          lower(conv(pmod(hash(col("id") * 31 + i), lit(50000)).cast("string"), 10, 36)))
+        if (mutPos >= 0) when(i === mutPos, lit("ZMUTX")).otherwise(tok) else tok
+      }))
+    val corpus = spark.range(0, n).select(col("id").as("doc_id"), textOf(-1).as("text"))
+      .unionByName(spark.range(0, n).filter(col("id") % 10 === 0)
+        .select((col("id") + 10000000L).as("doc_id"), textOf(2).as("text")))
+      .unionByName(spark.range(0, 60).select((col("id") + 20000000L).as("doc_id"),
+        lit("copy of the one hot boilerplate page body").as("text")))
+      .localCheckpoint(eager = true)
+    val sig = corpus.select(col("doc_id"), call_function("simhash64", col("text")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val near = (0L until n by 10)
+      .filter(k => java.lang.Long.bitCount(sig(k) ^ sig(k + 10000000L)) <= 3)
+    val pairs = MinHash.simhashPairsOf(corpus, 3).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(near.nonEmpty)
+    assert(pairs.collect { case (a, b) if b == a + 10000000L => a }.sorted.toSeq == near)
+    assert(pairs.count { case (a, b) => a >= 20000000L && b >= 20000000L } == 60 * 59 / 2)
+    val blob = MinHash.simhashDedupGroups(spark, corpus, 3).filter(col("doc_id") >= 20000000L)
+      .select("cluster_id").distinct().collect().map(_.getLong(0))
+    assert(blob.toSeq == Seq(20000000L))
+  }
+
   test("simhashDedupGroups labels ≡ both pure CC formulations on the graded corpus") {
     val docs = Tables.documents(spark, sf001)
     val edges = MinHash.simhashPairsOf(docs, 3).select(col("a_id"), col("b_id"))

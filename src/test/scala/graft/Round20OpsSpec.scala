@@ -267,4 +267,104 @@ class Round20OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(groups(1L) === groups(2L) && groups(1L) === groups(3L), groups.toString)
   }
+
+  test("short-audio verify over a population: every dent merges, no shift or chance pair does") {
+    // 2,000 random 120-sample stub clips, a one-sample dent of every 5th
+    // and a +5-level shift of every 7th. A shift shares its base's
+    // primary by construction, so only the secondary can keep it apart
+    val n = 2000L
+    def clip(seed: Long): Array[Byte] = Array.tabulate(120) { j =>
+      var v = seed * 2654435761L + j * 40503L
+      v ^= v >>> 33; v *= -49064778989728563L; v ^= v >>> 33
+      (Math.floorMod(v, 150L) + 30L).toByte // [30, 179]: +5 never wraps
+    }
+    def rec(id: Long, b: Array[Byte]) = Multimodal.MediaRecord(id, "audio", b, stubAudioMeta)
+    val recs = (0L until n).flatMap { i =>
+      val b = clip(i * 31 + 7)
+      val dent = b.clone(); dent(40) = (dent(40) + 90).toByte
+      Seq(rec(i, b)) ++ (if (i % 5 == 0) Seq(rec(10000000L + i, dent)) else Nil) ++
+        (if (i % 7 == 0) Seq(rec(20000000L + i, b.map(v => (v + 5).toByte))) else Nil)
+    }.toDS()
+    // primary-colliding pairs between (sig, sig2) representatives; a dent
+    // whose secondary did not move collapses into its base's rep
+    val reps = Multimodal.mediaSigs2(recs).groupBy("sig", "sig2")
+      .agg(min(col("id")).as("doc_id")).localCheckpoint(eager = true)
+    val sig2 = reps.collect().map(r => r.getLong(2) -> r.getLong(1)).toMap
+    val pairs = MinHash.hammingPairs64(reps, 3).collect().map(r => (r.getLong(0), r.getLong(1)))
+    def h2(p: (Long, Long)) = java.lang.Long.bitCount(sig2(p._1) ^ sig2(p._2))
+    val (dents, rest) = pairs.partition(p => p._2 - p._1 == 10000000L && p._1 < 10000000L)
+    val (shifts, chance) = rest.partition(p => p._2 - p._1 == 20000000L)
+    assert(dents.nonEmpty && dents.forall(h2(_) <= 2), dents.map(h2).mkString(","))
+    assert(shifts.length == (n + 6) / 7 && shifts.forall(h2(_) > 6), shifts.map(h2).mkString(","))
+    assert(chance.forall(h2(_) > 6), s"chance pairs inside the cut: ${chance.filter(h2(_) <= 6).toSeq}")
+    val cluster = Multimodal.mediaDedupGroupsVerified(spark, recs, 3, 6)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def merged(offset: Long) = (0L until n).count(i => cluster.get(offset + i).contains(cluster(i)))
+    assert(merged(10000000L) == n / 5 && merged(20000000L) == 0)
+  }
+
+  test("buildRelease from container files through the URL gate and HTML front door reconciles exactly") {
+    // 1,000 wrapped pages plus an exact twin of every 10th: domain
+    // d(id % 4) with domain 2 blocked (300 URL drops, twins included),
+    // 50 sub-minTokens shorts (id % 20 == 1), 40 screened pages
+    // (id % 25 == 2, 10 of them URL-blocked first)
+    val n = 1000L
+    def textOf(idc: org.apache.spark.sql.Column) = concat_ws(" ",
+      transform(sequence(lit(0), (pmod(hash(idc), lit(8)) + lit(11)).cast("int")),
+        i => concat(lit("u"), idc, lit("_"), pmod(hash(idc * 31 + i), lit(997)))))
+    def pageOf(body: org.apache.spark.sql.Column) = concat(
+      lit("<script>var x = 1;</script><p>"), body,
+      lit("</p><nav><a href=\"/\">home</a></nav>trailing junk"))
+    val body = when(pmod(col("id"), lit(20)) === 1, concat(lit("tiny doc "), col("id")))
+      .when(pmod(col("id"), lit(25)) === 2, concat(lit("zz_screened_phrase_zz "), textOf(col("id"))))
+      .otherwise(textOf(col("id")))
+    val pages = spark.range(0, n).select(col("id").as("doc_id"), pageOf(body).as("text"))
+      .unionByName(spark.range(0, n).filter(pmod(col("id"), lit(10)) === 0)
+        .select((col("id") + 10000000L).as("doc_id"), pageOf(textOf(col("id"))).as("text")))
+    val cdir = tmpDir("release_containers")
+    graft.sources.Containers.writeContainers(
+      pages.select(col("doc_id"), col("text").cast("binary").as("body")), cdir, recordsPerFile = 300)
+    val domains = Seq("good.example.com", "fine.example.net", "blocked.example.co.uk", "ok.example.org")
+    val docs = graft.sources.Containers.readContainers(spark, s"$cdir/*.gcn")
+      .select(col("doc_id"), col("body").cast("string").as("text"))
+      .withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(3))))
+      .withColumn("url", concat(lit("http://"),
+        element_at(typedLit(domains), pmod(col("doc_id"), lit(4)).cast("int") + 1),
+        lit("/p/"), col("doc_id")))
+    val r = Graft.buildRelease(spark, docs, screenPhrases = Seq("zz_screened_phrase_zz"),
+      quality = Graft.QualityGate(minTokens = 5, maxTokens = 10000, maxStopwordRatio = 1.0),
+      epochsMicros = Map("s0" -> 1000000L, "s1" -> 2000000L, "s2" -> 1500000L),
+      nShards = 4, seed = 11L, seqLen = 1024, previous = Some(pages),
+      html = Some(Graft.HtmlExtract()), urlGate = Some(Graft.UrlGate(blocked = Seq("example.co.uk"))))
+    val nIn = n + n / 10
+    val dropped = r.audit.map(a => a.stage -> a.dropped).toMap
+    assert(r.audit.head.kept == nIn)
+    assert(dropped("url_gate") == 300L && dropped("html_extract") == 0L &&
+      dropped("quality_gate") == 50L && dropped("exact_dedup") >= 50L &&
+      dropped("contamination") == 30L, r.audit.toString)
+    // ledger ↔ audit: one row per input doc, per-stage drops equal
+    val ledger = r.ledger.localCheckpoint(eager = true)
+    assert(ledger.count() == nIn && ledger.select("doc_id").distinct().count() == nIn)
+    val droppedL = ledger.filter(col("verdict") === "dropped").groupBy("stage").count()
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    r.audit.tail.foreach(sc => assert(droppedL.getOrElse(sc.stage, 0L) == sc.dropped, sc.toString))
+    val kept = r.audit.last.kept
+    assert(ledger.filter(col("verdict") === "kept").count() == kept)
+    // epoch copies: s0 once, s1 twice, s2 once or twice
+    val copies = r.manifest.groupBy("doc_id", "source").count()
+      .collect().map(x => (x.getString(1), x.getLong(2)))
+    assert(copies.forall { case (s, c) => s match {
+      case "s0" => c == 1L; case "s1" => c == 2L; case _ => c == 1L || c == 2L } })
+    // packing law per shard, and the manifest's tokens all packed
+    r.packed.groupBy("shard").agg(count(lit(1)), min("pos"), max("pos"),
+        sum("n_toks"), max("seq_last")).collect().foreach { x =>
+      assert(x.getLong(2) == 0L && x.getLong(3) == x.getLong(1) - 1L, s"pos not dense: $x")
+      assert(x.getLong(5) == (x.getLong(4) - 1L) / 1024L, s"pack law: $x")
+    }
+    assert(r.manifest.agg(sum("n_toks")).head() == r.packed.agg(sum("n_toks")).head())
+    // diff ↔ ledger: extraction rewrote every kept page, the rest are removed
+    val diff = r.diff.get.groupBy("status").count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(diff == Map("removed" -> (nIn - kept), "changed" -> kept), diff.toString)
+  }
 }

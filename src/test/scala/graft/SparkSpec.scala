@@ -15,9 +15,18 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** Runs `body` with `dir` as the session's checkpoint directory, so
-    * every [[Lineage.cut]] inside it is a reliable checkpoint. */
-  def withCheckpointDir[A](dir: String)(body: => A): A =
-    SparkSpec.withCheckpointDir(spark, dir)(body)
+    * every [[Lineage.cut]] inside it is a reliable checkpoint. The
+    * directory is cleared afterwards, even when `body` throws: it is
+    * context-wide, and a leaked one would turn every later cut in the
+    * JVM reliable. `setCheckpointDir(null)` stores `Option(null)`, the
+    * no-directory state a fresh context starts in. */
+  def withCheckpointDir[A](dir: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    require(sc.getCheckpointDir.isEmpty,
+      s"a checkpoint directory is already set: ${sc.getCheckpointDir}")
+    sc.setCheckpointDir(dir)
+    try body finally sc.setCheckpointDir(null)
+  }
 }
 
 object SparkSpec {
@@ -37,18 +46,5 @@ object SparkSpec {
     // points that normally register on first touch
     graft.functions.VectorFunctions.register(s)
     s
-  }
-
-  /** Sets `dir` as `s`'s checkpoint directory for the length of `body`
-    * and clears it afterwards, even when `body` throws: the directory is
-    * context-wide, and a leaked one would turn every later cut in the
-    * JVM reliable. `setCheckpointDir(null)` stores `Option(null)`, the
-    * no-directory state a fresh context starts in. */
-  def withCheckpointDir[A](s: SparkSession, dir: String)(body: => A): A = {
-    val sc = s.sparkContext
-    require(sc.getCheckpointDir.isEmpty,
-      s"a checkpoint directory is already set: ${sc.getCheckpointDir}")
-    sc.setCheckpointDir(dir)
-    try body finally sc.setCheckpointDir(null)
   }
 }

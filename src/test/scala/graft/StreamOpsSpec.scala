@@ -680,6 +680,49 @@ class StreamOpsSpec extends SparkSpec {
     assert(batch == Set(1L, 3L, 11L, 13L))
   }
 
+  test("streamed curation, then the batch global stages over the delivered corpus ≡ one batch pass") {
+    import graft.streaming.StreamOps.Doc
+    // 12 graded texts × 4 exact copies, two micro-batches. The gate is
+    // permissive and the screen empty, so the only stream-side drops are
+    // near-dup suppressions; the batch pass over what the sink delivered
+    // (jaccard CC, semantic dedup, eval decontamination) must land on the
+    // rows one batch pass over the whole input computes
+    val texts = Tables.documents(spark, sf001).filter(col("text").isNotNull)
+      .orderBy("doc_id").limit(12).select("text").as[String].collect()
+    val (copies, perBatch) = (4, 2)
+    def batch(b: Int): Seq[Doc] = for {
+      src <- texts.indices; c <- 0 until perBatch
+    } yield Doc(src.toLong * copies + b * perBatch + c, ts(b), texts(src))
+    val allDocs = (0 until copies / perBatch).flatMap(batch).toDF()
+    val gate = Graft.QualityGate(minTokens = 1, maxTokens = 1000000, maxStopwordRatio = 1.0)
+    // source s and s + 6 share one 64-dim hash vector: semantic dups that
+    // only the corpus-global pass can see
+    val emb = spark.range(0, texts.length.toLong * copies).select(col("id").as("doc_id"),
+      transform(sequence(lit(0), lit(63)), j => ((pmod(hash(pmod(floor(col("id") / copies),
+        lit(6L)) * 64 + j), lit(2001)) - 1000) / lit(1000.0)).cast("float")).as("embedding"))
+    val evalDocs = texts.take(5).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toSeq
+      .toDF("doc_id", "text")
+    def curateBatch(docs: org.apache.spark.sql.DataFrame): Seq[String] =
+      Graft.curateCorpus(spark, docs, screenPhrases = Seq(), quality = gate,
+        evalDocs = Some(evalDocs), semantic = Some(Graft.SemanticDedup(emb, minCos = 0.9)))
+        .collect().map(_.toString).sorted.toSeq
+    val in = MemoryStream[Doc]
+    val stream = tmpDir("bridge_stream")
+    val q = Graft.runCurateStream(in.toDF(), Seq(), stream, tmpDir("bridge_ckpt"),
+      numShards = 2, quality = gate, trigger = Trigger.ProcessingTime(0L))
+    (0 until copies / perBatch).foreach { b => in.addData(batch(b)); q.processAllAvailable() }
+    q.stop()
+    val delivered = ShardFiles.read(stream).values.flatten
+      .map { case (_, data) => new String(data, java.nio.charset.StandardCharsets.UTF_8) }
+      .toSeq.toDF("json")
+      .select(from_json(col("json"), org.apache.spark.sql.types.StructType
+        .fromDDL("doc_id LONG, ts TIMESTAMP, text STRING")).as("r"))
+      .select("r.doc_id", "r.text")
+    val composed = curateBatch(delivered)
+    assert(composed.nonEmpty, "no survivors: the setup is broken")
+    assert(composed == curateBatch(allDocs))
+  }
+
   test("gram-less docs bypass near-dup state and always pass") {
     import graft.streaming.StreamOps.Doc
     // < 3 tokens → NULL signature; the old sentinel signature made all of
