@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-facing entry points: a session factory with the configs this engine
-  * relies on, table registration for the SQL surface, and the query
-  * catalog. A user of the reference switches by building (or reusing) a
-  * session and calling the operators, or registering the tables and
-  * writing SQL.
+  * relies on, table registration for the SQL surface, and the curation,
+  * streaming and release pipelines composed from the operator modules. A
+  * user of the reference switches by building (or reusing) a session and
+  * calling the operators on their modules (the graded queries are
+  * [[SparkEntry.queries]]), or registering the tables and writing SQL.
   */
 object Graft {
 
@@ -49,57 +50,8 @@ object Graft {
     }
   }
 
-  /** The graded operator catalog (name → query). */
-  def catalog: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries
-
-  // ---- convenience façade over the training-data-pipeline operators ----
-
-  /** Edit-distance near-dup pairs (F24) over any (doc_id, text) frame —
-    * BYTE-level Levenshtein (≡ char level on ASCII; the DuckDB dialect).
-    * `atScale = false` is the length-banded path — right for small or
-    * length-diverse corpora; `atScale = true` swaps in the q-gram
-    * count/prefix/position-filter candidate join (frequency-ordered
-    * value-closed prefixes + positional banding, the Gravano/Ed-Join
-    * family), the graded q_edit_neardup plan and the shape that holds on
-    * length-clustered corpora at scale. Identical output either way.
-    */
-  def editNearDupPairs(spark: SparkSession, docs: DataFrame, maxDist: Int = 2,
-      atScale: Boolean = false, q: Int = 4): DataFrame =
-    if (atScale) Dedup.editDistancePairsQGram(spark, docs, maxDist, q)
-    else Dedup.editDistancePairsOf(docs, maxDist)
-
-  /** Fuzzy dedup GROUPS: connected components over the F24 edit-distance
-    * edge list (duplicates chain — A≈B≈C is one group, same reason the
-    * Jaccard path clusters). doc_id → cluster_id (min doc_id in the
-    * component); singletons label themselves. Same CC machinery (and
-    * the same [[Lineage.cut]] durability) as [[Dedup.connectedComponents]].
-    */
-  def editDedupGroups(spark: SparkSession, docs: DataFrame, maxDist: Int = 2,
-      atScale: Boolean = false, q: Int = 4): DataFrame =
-    Dedup.connectedComponents(spark,
-      docs.select(org.apache.spark.sql.functions.col("doc_id")),
-      editNearDupPairs(spark, docs, maxDist, atScale, q)
-        .select(org.apache.spark.sql.functions.col("a_id"),
-          org.apache.spark.sql.functions.col("b_id")))
-
-  /** C6b: bloom-pruned semi join — keep `big`'s rows whose `bigKey` is in
-    * `keys.keysKey`, with the non-members dropped by a driver-built Bloom
-    * probe BEFORE the join shuffle (result identical to a plain semi
-    * join). For key sets that arrive outside a join: allowlists,
-    * contamination keys, prior-stage survivors. */
-  def bloomSemiJoin(big: DataFrame, bigKey: String, keys: DataFrame,
-      keysKey: String, fpp: Double = 0.01): DataFrame =
-    Relational.bloomSemiJoin(big, bigKey, keys, keysKey, fpp)
-
-  /** C6c: bloom-accelerated ANTI join — keep `big`'s rows whose `bigKey`
-    * is NOT in `keys.keysKey`; `NOT might_contain` proves absence for
-    * the typical majority straight off the scan, and only the
-    * might-contain minority enters the exact anti join (result identical
-    * to a plain left-anti join). The decontamination / delta-dedup
-    * screen shape. */
-  def bloomAntiJoin(big: DataFrame, bigKey: String, keys: DataFrame,
-      keysKey: String, fpp: Double = 0.01): DataFrame =
-    Relational.bloomAntiJoin(big, bigKey, keys, keysKey, fpp)
+  // ---- compositions over the operator modules; a single-call operator
+  // is called on its module (Dedup, TextOps, Similarity, Pq, ...) ----
 
   /** The standing-corpus fingerprint frame the F28 streaming screen
     * joins against: one `fp` column, md5 of each distinct text. Write
@@ -112,117 +64,6 @@ object Graft {
       .select(org.apache.spark.sql.functions.md5(
         org.apache.spark.sql.functions.col("text")).as("fp"))
       .distinct()
-
-  /** Media dedup as a curation stage (round 18, VERDICT r17 item 4):
-    * drop near-dup non-representatives from a mixed image/audio corpus,
-    * one exemplar kept per perceptual cluster, with the same audited
-    * (kept, dropped) counts as [[curateCorpusAudited]]. Images cluster
-    * by dHash, audio by energy envelope — in SEPARATE signature spaces
-    * (a pixel-grid hash never joins an envelope hash); other modalities
-    * pass through untouched. Since round 19 every merge is VERIFIED by a
-    * second independent hash family within `verifyHamming` bits (the
-    * chance-merge guard), and the audit counts run over a slim
-    * fingerprint-width frame. See [[Multimodal.mediaDedupAudited]].
-    */
-  def mediaDedupAudited(spark: SparkSession,
-      records: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      maxHamming: Int = 3, verifyHamming: Int = 6)
-      : (org.apache.spark.sql.Dataset[Multimodal.MediaRecord], Seq[StageCount]) =
-    Multimodal.mediaDedupAudited(spark, records, maxHamming, verifyHamming)
-
-  /** The delivered-corpus media signature frame ([[mediaDedupStream]]'s
-    * static side) — (modality, sig) distinct; the media sibling of
-    * [[corpusFingerprints]]. */
-  def mediaSigFingerprints(
-      records: org.apache.spark.sql.Dataset[Multimodal.MediaRecord])
-      : DataFrame =
-    Multimodal.mediaSigFingerprints(records)
-
-  /** Streaming media screen — [[curateStream]]'s media sibling, the F28
-    * standing-corpus pattern: drop arrivals whose (modality, sig) is
-    * already delivered, via a stateless stream-static anti join; ≤ k-bit
-    * near-matches stay batch-side. See [[Multimodal.mediaDedupStream]]. */
-  def mediaDedupStream(
-      arrivals: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      corpusSigs: DataFrame)
-      : org.apache.spark.sql.Dataset[Multimodal.MediaRecord] =
-    Multimodal.mediaDedupStream(arrivals, corpusSigs)
-
-  /** The banded delivered-corpus frame for the NEAR-match media screen
-    * (round 19) — [[mediaSigFingerprints]] exploded into Manku bands. */
-  def mediaSigBands(
-      records: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      maxHamming: Int = 3): DataFrame =
-    Multimodal.mediaSigBands(records, maxHamming)
-
-  /** Streaming NEAR-match media screen (round 19): drop arrivals within
-    * `maxHamming` bits of any delivered same-modality signature — the
-    * stateful banded upgrade over [[mediaDedupStream]]'s exact screen.
-    * See [[Multimodal.mediaDedupStreamNear]]. */
-  def mediaDedupStreamNear(
-      arrivals: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      corpusBands: DataFrame, maxHamming: Int = 3)
-      : org.apache.spark.sql.Dataset[Multimodal.MediaRecord] =
-    Multimodal.mediaDedupStreamNear(arrivals, corpusBands, maxHamming)
-
-  /** Incremental (delta) dedup: admit only the increment docs that are
-    * neither exact nor near duplicates of the standing corpus or of a
-    * smaller-id increment doc — the daily-ingest screen, at |Δ| probe +
-    * bipartite Δ×C prefix-join cost instead of a corpus-wide re-dedup.
-    * [[Dedup.incrementalDedupVerdicts]] is the labeled-reasons form. */
-  def dedupIncrement(spark: SparkSession, corpus: DataFrame,
-      increment: DataFrame, minJaccard: Double = 0.6): DataFrame =
-    Dedup.dedupIncrement(spark, corpus, increment, minJaccard)
-
-  /** F30: duplicated-span removal (Lee et al. ExactSubstr dedup at
-    * token-window granularity) — every token inside a corpus-duplicated
-    * `windowTokens`-gram is removed; returns (doc_id, clean_text,
-    * n_removed). Span-level boilerplate stripping, complementing F1's
-    * whole-doc dedup. */
-  def stripDuplicatedSpans(docs: DataFrame, windowTokens: Int = 8): DataFrame =
-    TextOps.stripDuplicatedSpans(docs, windowTokens)
-
-  /** F31: near-dup dedup keeping the BEST-quality representative per
-    * cluster — (weight DESC, doc_id ASC) argmax over the F11 Jaccard
-    * connected components; one partial+final struct-max agg, never a
-    * window sort. */
-  def dedupKeepBest(spark: SparkSession, docs: DataFrame, minJaccard: Double,
-      weight: org.apache.spark.sql.Column): DataFrame =
-    Dedup.dedupKeepBest(spark, docs, minJaccard, weight)
-
-  /** F33: token-budget mix construction — subsample each source to a
-    * token budget in the deterministic md5 fill order (mixtures are
-    * specified in tokens, not docs); distributed prefix sum, never a
-    * single-partition window. */
-  def tokenBudgetMix(docs: DataFrame, budgets: Map[String, Long],
-      sourceCol: String = "source", idCol: String = "doc_id"): DataFrame =
-    TextOps.tokenBudgetMix(docs, budgets, sourceCol, idCol)
-
-  /** F34: epoch-weighted mix materialization — the UPSAMPLING half of
-    * mixture construction (F33 subsamples down; this replicates up).
-    * Per-source epoch weights in integer MICROS (1_500_000 = 1.5
-    * epochs): every doc appears `e div 10⁶` times plus one more on a
-    * deterministic md5 draw. Zero shuffles — a per-row map + explode. */
-  def epochMix(docs: DataFrame, epochsMicros: Map[String, Long],
-      sourceCol: String = "source", idCol: String = "doc_id"): DataFrame =
-    TextOps.epochMix(docs, epochsMicros, sourceCol, idCol)
-
-  /** F35: deterministic training-order shuffle — every doc gets a shard
-    * and an exact intra-shard position as a pure function of (corpus,
-    * seed); bucketed two-level rank, never a shard-sized single-window
-    * sort. Feed the output order into [[TextOps.packSequencesOf]] for
-    * final training batches. */
-  def shuffleShards(docs: DataFrame, nShards: Int, seed: Long = 0L,
-      idCol: String = "doc_id"): DataFrame =
-    TextOps.shuffleShards(docs, nShards, seed, idCol)
-
-  /** F39: curriculum-ordered training shards — shard + exact intra-shard
-    * position with a coarse integer quality LEVEL as the primary order
-    * (descending; ties broken by the seeded draw). The staged/annealed
-    * data-order sibling of [[shuffleShards]]. */
-  def curriculumShards(docs: DataFrame, nShards: Int, levelCol: String,
-      seed: Long = 0L, idCol: String = "doc_id"): DataFrame =
-    TextOps.curriculumShards(docs, nShards, levelCol, seed, idCol)
 
   /** Composed mixture materialization: F33 budget subsample (when
     * `budgets` is non-empty) → F34 epoch upsample (when `epochsMicros`
@@ -250,8 +91,8 @@ object Graft {
     * it is cut lazily ([[Lineage.cut]]): no job at construction, the
     * first action materializes it and the second side reuses it (the
     * mix18 cert's 55→31 s win, round 19).
-    */
-  /** `fill` (optimization round 21): a caller who has ALREADY materialized
+    *
+    * `fill` (optimization round 21): a caller who has ALREADY materialized
     * `TextOps.tokenBudgetMix(docs, budgets, ...)` — e.g. to derive epoch
     * weights from the kept token mass, the exact q_mix_manifest shape —
     * passes it here so the F33 bucketed-prefix-sum fill executes once
@@ -296,78 +137,6 @@ object Graft {
         col("shard"), col("pos"))
   }
 
-  /** F32: fit a reusable multinomial-NB text classifier on a labeled
-    * `(label, text)` frame — the seed-trained quality filter of the
-    * published curation pipelines (GPT-3 curated-vs-crawl, CCNet /
-    * fastText). The model is driver-held KBs; score any corpus with
-    * `model.scoreCol` / `model.predictCol` (zero-shuffle codegen
-    * kernel), or gate the curation pipeline with [[ClassifierGate]]. */
-  def nbFit(labeled: DataFrame, vocabN: Int = 200): TextOps.NbTextModel =
-    TextOps.nbFit(labeled, vocabN)
-
-  /** F29: BM25 relevance scores for `docs` against a query-term frame —
-    * micro-quantized long scores (engine- and order-exact); broadcast
-    * term restriction before the tf shuffle. */
-  def bm25(docs: DataFrame, terms: DataFrame, k1: Double = 1.25,
-      b: Double = 0.75): DataFrame =
-    TextOps.bm25Scores(docs, terms, k1, b)
-
-  /** F40: reciprocal-rank fusion of per-query ranked retrieval runs
-    * (BM25 ⊕ dense cosine, or any N systems) — Σ 1/(k₀ + rank), integer-
-    * quantized so the fused order is engine-exact; runs are bounded
-    * top-k result lists by contract. */
-  def rrfFuse(runs: DataFrame, k0: Int = 60): DataFrame =
-    TextOps.rrfFuse(runs, k0)
-
-  /** F41: hard-negative mining — per query vector, the top-k most-
-    * cosine-similar corpus vectors with a DIFFERENT label; the query
-    * batch broadcasts, the corpus streams once through a bounded-heap
-    * top-k. */
-  def hardNegatives(spark: SparkSession, queries: DataFrame,
-      corpus: DataFrame, k: Int): DataFrame =
-    Similarity.hardNegatives(spark, queries, corpus, k)
-
-  /** F52: fit a frozen BPE merge table (one corpus word-count pass +
-    * bounded pull + driver learning); `model.countCol`/`encodeCol` are
-    * zero-shuffle per-row kernels. See [[TextOps.bpeFit]]. */
-  def bpeFit(corpus: DataFrame, numMerges: Int,
-      vocabN: Int = 50000): TextOps.BpeModel =
-    TextOps.bpeFit(corpus, numMerges, vocabN)
-
-  /** F53: perceptual-dHash image near-dup pairs / dedup groups over a
-    * media-record corpus. See [[Multimodal.imageNearDupPairs]]. */
-  def imageNearDupPairs(records: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      maxHamming: Int = 3): DataFrame =
-    Multimodal.imageNearDupPairs(records, maxHamming)
-  def imageDedupGroups(spark: SparkSession,
-      records: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-      maxHamming: Int = 3): DataFrame =
-    Multimodal.imageDedupGroups(spark, records, maxHamming)
-
-  /** F42: leakage-safe grouped split — train/test assigned at the GROUP
-    * level (near-dup cluster, URL family, source) by an exact integer
-    * md5 draw on the group id, so duplicates never straddle the split. */
-  /** F51: D4 / SSL-prototype diversification — k-means the embedding
-    * space and drop the `dropMillionths` fraction of each cluster closest
-    * to its centroid. See [[Similarity.prototypeDiversify]].
-    */
-  def diversify(spark: SparkSession, emb: DataFrame, dropMillionths: Long,
-      k: Int = 0, iters: Int = 2): DataFrame =
-    Similarity.prototypeDiversify(spark, emb, dropMillionths, k, iters)
-
-  def splitByGroup(labeled: DataFrame, testMillionths: Long,
-      groupCol: String = "cluster_id", seed: Long = 0L): DataFrame =
-    Dedup.splitByGroup(labeled, testMillionths, groupCol, seed)
-
-  /** F2c GROUPS (round 14): SimHash dedup clusters — connected components
-    * over the banded hamming pair list, because near-dup pairs CHAIN
-    * (same lesson as [[editDedupGroups]]); doc_id →
-    * cluster_id (min doc_id in the component), singletons label
-    * themselves. */
-  def simhashDedupGroups(spark: SparkSession, docs: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    MinHash.simhashDedupGroups(spark, docs, maxHamming)
-
   /** F25 compression-ratio signal over any (doc_id, text) frame. */
   def compressionSignals(spark: SparkSession, docs: DataFrame): DataFrame = {
     functions.VectorFunctions.register(spark)
@@ -377,52 +146,10 @@ object Graft {
       call_function("deflate_ratio", col("text")).as("deflate_ratio"))
   }
 
-  /** Streaming near-dup suppression at ingest, state bounded by an
-    * event-time TTL (see StreamOps.nearDupSuppress).
-    */
-  def nearDupSuppress(docs: DataFrame, minEst: Double = 0.8,
-      ttlMillis: Long = Long.MaxValue) =
-    streaming.StreamOps.nearDupSuppress(docs, minEst, ttlMillis)
-
-  /** Full-recall streaming variant: fans out to every LSH band, verdict
-    * matches the batch clustering semantics. On a streaming input this
-    * needs the stateful-operator correctness check disabled session-wide
-    * (safe for THIS chain, not restorable for others) — the caller must
-    * opt in via `allowUnsafeChain`, ideally on a dedicated
-    * `spark.newSession()`.
-    */
-  def nearDupSuppressAllBands(docs: DataFrame, minEst: Double = 0.8,
-      allowUnsafeChain: Boolean = false) =
-    streaming.StreamOps.nearDupSuppressAllBands(docs, minEst,
-      allowUnsafeChain = allowUnsafeChain)
-
   /** The `writeStream.format(...)` name of the Kinesis-semantics
     * DataSourceV2 sink (options: baseDir, numShards).
     */
   val KinesisSinkFormat: String = classOf[pipeline.KinesisTableProvider].getName
-
-  /** Fit the IVF cell structure once (eager k-means); probe it with
-    * [[Similarity.ivfProbe]] as many times as needed. The iterative fit runs on a
-    * bounded deterministic sample (`fitSample`, round 10 — sub-bound
-    * corpora are untouched; `<= 0` forces the full-corpus fit) and the
-    * full corpus is assigned in one broadcast pass. */
-  def annFit(spark: SparkSession, emb: DataFrame, k: Int = 16,
-      fitSample: Long = Similarity.DefaultFitSample,
-      nHint: Long = 0L, fitMaxIter: Int = 20,
-      fitInitMode: String = "k-means||"): Similarity.IvfFitted =
-    Similarity.ivfFit(spark, emb, k, fitSample, nHint, fitMaxIter, fitInitMode)
-
-  /** Append new vectors to a fitted index without a refit — the
-    * growing-corpus serving shape; see [[Similarity.ivfAssign]] for the
-    * when-to-refit guidance (centroid drift). */
-  def annAssign(fitted: Similarity.IvfFitted, newVecs: DataFrame): Similarity.IvfFitted =
-    Similarity.ivfAssign(fitted, newVecs)
-
-  /** Re-open an index persisted with `annFit(...).save(dir)` — the
-    * cross-job serving shape: one indexing job fits and saves, later
-    * jobs load and probe at probe cost. */
-  def annLoad(spark: SparkSession, dir: String): Similarity.IvfFitted =
-    Similarity.ivfLoad(spark, dir)
 
   /** Compress a fitted index for serving (IVF-PQ): fit the per-subspace
     * codebooks (bounded sample) and encode the assignment table to m
@@ -432,7 +159,8 @@ object Graft {
     * IVFADC) — worth it when within-cell ranking binds, pure overhead
     * when cell routing does (see [[Pq.pqFitResidual]]); `dim` is the
     * embedding dimension (must divide by `m`). Save with
-    * `index.save(dir)`, re-open with [[annLoadCompressed]].
+    * `index.save(dir)`, re-open with [[Pq.ivfPqLoad]] and probe with
+    * [[Pq.ivfPqProbeVectors]].
     */
   def annCompress(fitted: Similarity.IvfFitted, dim: Int, m: Int = 8,
       ksub: Int = 256, residual: Boolean = false,
@@ -445,28 +173,6 @@ object Graft {
     Pq.ivfPqBuild(fitted, model, residual)
   }
 
-  /** Probe a compressed index with external (q_id, embedding) queries —
-    * ADC ranking over the m-byte codes (LUT-amortized); pass
-    * `rerank = Some(corpus)` to re-score the PQ top-(refine·topK) by
-    * exact cosine. */
-  def annProbeCompressed(index: Pq.IvfPqIndex, queries: DataFrame,
-      nprobe: Int = 0, topK: Int = 10, refine: Int = 4,
-      rerank: Option[DataFrame] = None): DataFrame =
-    Pq.ivfPqProbeVectors(index, queries, nprobe, topK, refine, rerank)
-
-  /** Re-open a compressed index persisted with `index.save(dir)`. */
-  def annLoadCompressed(spark: SparkSession, dir: String): Pq.IvfPqIndex =
-    Pq.ivfPqLoad(spark, dir)
-
-  /** DSIR importance weights (F46, round 16): per raw doc, the integer-
-    * micro log-likelihood ratio of the target hashed-n-gram model vs the
-    * raw model. Feed to [[TextOps.weightedBernoulli]] (resampling — the
-    * paper's consumption) or per-source [[CalibratedKeep]] after joining
-    * the weight onto the docs. */
-  def dsirWeights(raw: DataFrame, target: DataFrame,
-      buckets: Int = 1024): DataFrame =
-    TextOps.dsirWeights(raw, target, buckets)
-
   /** Quality-gate knobs for [[curateCorpus]]: token-count bounds and the
     * stopword lexicon/ratio a real curation run tunes per corpus.
     *
@@ -474,8 +180,8 @@ object Graft {
     * six words in round 5 — a behavior change for default-knob callers
     * (more stopword-heavy docs drop at the gate). Documented in
     * README "Behavior changes"; pass an explicit lexicon to pin output.
-    */
-  /** `deflateRatioRange`: optional (lo, hi) bounds on the F25 compression
+    *
+    * `deflateRatioRange`: optional (lo, hi) bounds on the F25 compression
     * ratio — the published curation heuristic that drops BOTH extremes
     * (ratio below lo = machine-repetitive boilerplate, above hi =
     * high-entropy gibberish/binary paste). None (the default) skips the
@@ -1181,7 +887,8 @@ object Graft {
     *  3. near-dup suppression — MinHash signatures in
     *     flatMapGroupsWithState state with an event-time TTL
     *     ([[streaming.StreamOps.nearDupSuppress]]); the only stateful
-    *     stage
+    *     stage, and replay-deterministic: a backfill admits the same
+    *     docs as the live run
     *
     * The admitted docs come back with `partitionKey` (doc_id) and `data`
     * (JSON bytes) columns appended, ready for the Kinesis-semantics V2
@@ -1208,9 +915,6 @@ object Graft {
       quality: QualityGate = QualityGate(), minEst: Double = 0.8,
       ttlMillis: Long = Long.MaxValue,
       watermarkDelay: String = "0 seconds",
-      useTws: Boolean = false,
-      twsTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE,
       normalize: Option[Normalize] = None,
       langGate: Option[LangGate] = None,
       classifier: Option[ClassifierGate] = None,
@@ -1290,7 +994,7 @@ object Graft {
     // Runs BEFORE the suppressor so already-ingested docs never occupy
     // dedup state; the near-dup (Jaccard) half of F28 stays batch-side
     // by design — it needs the bipartite prefix join's whole-increment
-    // candidate structure ([[dedupIncrement]] over each delivered batch).
+    // candidate structure ([[Dedup.dedupIncrement]] over each delivered batch).
     // Contract: one string column `fp` = md5 of the CANONICAL text (the
     // caller fingerprints normalized text when `normalize` is on) —
     // [[corpusFingerprints]] builds exactly that frame.
@@ -1312,16 +1016,7 @@ object Graft {
           }
           .toDF()
       }
-    // suppressor choice (mirrors the two E8 deployment shapes): fMGWS
-    // with an EVENT-time TTL is the replay-deterministic default; the
-    // transformWithState variant (useTws) runs on the RocksDB store —
-    // call StreamOps.useRocksDbStateStore first — with a native
-    // PROCESSING-time TTLConfig, the self-bounding operational cap for
-    // state larger than heap. Same admission semantics per batch.
-    val admitted =
-      if (useTws) streaming.StreamOps.nearDupSuppressTws(screened, minEst, twsTtl)
-      else streaming.StreamOps.nearDupSuppress(screened, minEst, ttlMillis, watermarkDelay)
-    admitted
+    streaming.StreamOps.nearDupSuppress(screened, minEst, ttlMillis, watermarkDelay)
       .toDF()
       .withColumn("partitionKey", col("doc_id").cast("string"))
       .withColumn("data",
@@ -1351,9 +1046,6 @@ object Graft {
       watermarkDelay: String = "0 seconds",
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      useTws: Boolean = false,
-      twsTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE,
       normalize: Option[Normalize] = None,
       langGate: Option[LangGate] = None,
       classifier: Option[ClassifierGate] = None,
@@ -1364,8 +1056,8 @@ object Graft {
       urlGate: Option[UrlGate] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions.col
     val writer = curateStream(docs, screenPhrases, quality, minEst, ttlMillis,
-      watermarkDelay, useTws, twsTtl, normalize, langGate, classifier,
-      corpusFp, calibrated, dsir, html, urlGate)
+      watermarkDelay, normalize, langGate, classifier, corpusFp, calibrated,
+      dsir, html, urlGate)
       .select(col("partitionKey"), col("data"))
       .writeStream
       .format(KinesisSinkFormat)

@@ -62,7 +62,11 @@ object MinHash {
 
   /** doc_id, sh (string) — distinct word-3-gram shingles. Reference
     * string-level form (used by the ScalaTest cross-checks); production
-    * paths use [[hashedShingles]], which never materializes gram strings.
+    * paths hash the shingles inside the codegen `shingle_hashes` kernel
+    * (functions.ShingleHashes, one pass per document), which never
+    * materializes gram strings — the declarative
+    * split/transform/array_distinct/explode formulation below measured
+    * 4+ s at sf0.1 purely in interpreted lambda overhead.
     */
   def shingles(docs: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
@@ -70,17 +74,6 @@ object MinHash {
       sequence(lit(0), size(toks) - 3),
       i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))
     docs.select(col("doc_id"), explode(array_distinct(grams)).as("sh"))
-  }
-
-  /** doc_id, shh (bigint) — distinct hashed word-3-gram shingles, one
-    * codegen'd pass per document (functions.ShingleHashes). The
-    * declarative split/transform/array_distinct/explode formulation
-    * measured 4+ s at sf0.1 purely in interpreted lambda overhead.
-    */
-  def hashedShingles(docs: DataFrame): DataFrame = {
-    VectorFunctions.registered(docs)
-    docs.select(col("doc_id"),
-      explode(call_function("shingle_hashes", col("text"), lit(GramLen))).as("shh"))
   }
 
   /** doc_id, sig: array of NumPerms min-hashes — a pure per-row map

@@ -1088,7 +1088,10 @@ object Multimodal {
     * near-dup NON-representative (cluster member with id above the
     * min), keeping one exemplar per perceptual cluster — the media
     * sibling of the text pipeline's exact/near-dup stages, with the
-    * same audited (kept, dropped) counts.
+    * same audited (kept, dropped) counts. Each hashed modality (image,
+    * audio, video) clusters in its OWN signature space — a pixel-grid
+    * hash never joins an envelope hash — and records of any other
+    * modality pass through untouched.
     *
     * Round 19 reshape (VERDICT r18 items 3 + 6):
     *   - VERIFIED merges: every banded candidate pair must also agree in

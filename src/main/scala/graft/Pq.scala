@@ -268,6 +268,9 @@ object Pq {
     }
   }
 
+  /** Re-open a compressed index persisted by [[IvfPqIndex.save]]
+    * (centroids, m-byte codes, codebook and the residual flag); probe it
+    * with [[ivfPqProbeVectors]]. */
   def ivfPqLoad(s: SparkSession, dir: String): IvfPqIndex = {
     VectorFunctions.register(s)
     val centroids = s.read.parquet(s"$dir/centroids")

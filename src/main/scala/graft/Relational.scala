@@ -205,32 +205,6 @@ object Relational {
   def bloomBitmapBytes(n: Long, fpp: Double): Long =
     (math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))) / 8.0).toLong + 16
 
-  /** The generic C6b operator over any (big frame, key) × (keys frame,
-    * key): bloom-prune, then exact semi join. Result ≡ `big SEMI JOIN
-    * keys` always (no false negatives); the pruning only changes WHERE
-    * non-members die — before the shuffle instead of inside the join.
-    *
-    * Key typing (round 14, per ADVICE): `BloomFilterMightContain`
-    * accepts exactly (binary, long), and `stat.bloomFilter` widens
-    * integral keys through putLong — so INTEGRAL keys on both sides are
-    * cast to long for build and probe (exact widening; the byte/short/
-    * int cases previously passed the guard but exploded at the probe).
-    * NON-integral keys (strings — URLs, doc ids — the common case for
-    * external allowlists) are hashed to long with `xxhash64` on BOTH
-    * sides; equal values hash equal, so no false negatives, and a
-    * 64-bit collision adds ~n/2⁶⁴ to the effective fpp — negligible
-    * against any practical `fpp`, and the exact semi join scrubs either
-    * kind of false positive anyway. Mixed non-integral types are
-    * rejected up front: xxhash64 hashes by PHYSICAL type, so an
-    * int-vs-string key pair would silently never match.
-    *
-    * Sizing/guard: the filter is sized to the ACTUAL key count (one
-    * cheap count on the keys frame — a fixed expectedNumItems would
-    * embed a ~1.2 MB literal at every scale); when the projected bitmap
-    * exceeds `DriverPull.budget(maxBloomBytes)` the operator returns the
-    * plain semi join instead — identical rows, no driver-side bitmap, no
-    * bloated task binaries.
-    */
   /** Shared C6b/C6c plumbing: validate the key typing (see
     * [[bloomSemiJoin]]'s scaladoc), size and build the driver-held Bloom
     * filter over the keys frame, and return the keys projection plus —
@@ -279,6 +253,34 @@ object Relational {
     (k, probe)
   }
 
+  /** The generic C6b operator over any (big frame, key) × (keys frame,
+    * key): bloom-prune, then exact semi join. Result ≡ `big SEMI JOIN
+    * keys` always (no false negatives); the pruning only changes WHERE
+    * non-members die — before the shuffle instead of inside the join. For
+    * key sets that arrive outside a join: allowlists, contamination keys,
+    * prior-stage survivors.
+    *
+    * Key typing (round 14, per ADVICE): `BloomFilterMightContain`
+    * accepts exactly (binary, long), and `stat.bloomFilter` widens
+    * integral keys through putLong — so INTEGRAL keys on both sides are
+    * cast to long for build and probe (exact widening; the byte/short/
+    * int cases previously passed the guard but exploded at the probe).
+    * NON-integral keys (strings — URLs, doc ids — the common case for
+    * external allowlists) are hashed to long with `xxhash64` on BOTH
+    * sides; equal values hash equal, so no false negatives, and a
+    * 64-bit collision adds ~n/2⁶⁴ to the effective fpp — negligible
+    * against any practical `fpp`, and the exact semi join scrubs either
+    * kind of false positive anyway. Mixed non-integral types are
+    * rejected up front: xxhash64 hashes by PHYSICAL type, so an
+    * int-vs-string key pair would silently never match.
+    *
+    * Sizing/guard: the filter is sized to the ACTUAL key count (one
+    * cheap count on the keys frame — a fixed expectedNumItems would
+    * embed a ~1.2 MB literal at every scale); when the projected bitmap
+    * exceeds `DriverPull.budget(maxBloomBytes)` the operator returns the
+    * plain semi join instead — identical rows, no driver-side bitmap, no
+    * bloated task binaries.
+    */
   def bloomSemiJoin(big: DataFrame, bigKey: String, keys: DataFrame,
       keysKey: String, fpp: Double = 0.01): DataFrame = {
     val (k, probe) = bloomProbe(big, bigKey, keys, keysKey, fpp, "bloomSemiJoin")

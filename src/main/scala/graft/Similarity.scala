@@ -375,10 +375,11 @@ object Similarity {
     }
   }
 
-  /** Re-open an index persisted by [[IvfFitted.save]]. `k` is recovered
-    * from the centroid table's row count (k rows — a parquet-footer
-    * count, no shuffle). No k-means work happens here or in any
-    * subsequent probe.
+  /** Re-open an index persisted by [[IvfFitted.save]] — the cross-job
+    * serving shape: one indexing job fits and saves, later jobs load and
+    * probe at probe cost. `k` is recovered from the centroid table's row
+    * count (k rows — a parquet-footer count, no shuffle). No k-means work
+    * happens here or in any subsequent probe.
     */
   def ivfLoad(s: SparkSession, dir: String): IvfFitted = {
     // the load-then-probe session never went through ivfFit, so the

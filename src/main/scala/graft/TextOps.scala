@@ -3135,7 +3135,9 @@ object TextOps {
     * ratio table rides as a plan literal (fine to ~10⁴ buckets — the
     * kmeans_best_q boundary); past that, put it in a broadcast frame.
     * Feed the weights to [[dsirResample]] — DSIR's published consumption
-    * is exactly importance RESAMPLING (composed there, round 17).
+    * is exactly importance RESAMPLING (composed there, round 17) — or
+    * join them onto the docs and gate per source with
+    * [[Graft.CalibratedKeep]].
     * Every pass is a single scan, so no lineage cut is taken.
     */
   def dsirWeights(raw: org.apache.spark.sql.DataFrame,
@@ -4157,7 +4159,8 @@ object TextOps {
     * (KBs at any corpus size). A naive `row_number() OVER (PARTITION BY
     * shard ORDER BY draw)` would sort each shard — corpus/nShards rows —
     * in ONE window partition; at 100 TB that single-task sort is the
-    * bottleneck this operator exists to avoid.
+    * bottleneck this operator exists to avoid. Feed the output order into
+    * [[packSequencesOf]] for the final training batches.
     */
   def shuffleShards(docs: org.apache.spark.sql.DataFrame, nShards: Int,
       seed: Long = 0L, idCol: String = "doc_id", buckets: Int = 256)
@@ -4428,7 +4431,8 @@ object TextOps {
     * pulls are the label table, the vocabN-row vocabulary, and the ≤
     * vocab × labels conditional counts — the pqFit/langIdFit model-fit
     * boundary, KBs at any corpus size. Scoring is the zero-shuffle
-    * per-row `nb_score` kernel.
+    * per-row `nb_score` kernel (`model.scoreCol` / `model.predictCol`);
+    * [[Graft.ClassifierGate]] gates the curation pipeline with the fit.
     */
   def nbFit(labeled: org.apache.spark.sql.DataFrame, vocabN: Int = 200,
       seedPred: Column = lit(true)): NbTextModel = {

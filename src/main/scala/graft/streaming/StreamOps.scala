@@ -160,6 +160,60 @@ object StreamOps {
     m.toDouble / a.length
   }
 
+  /** `docs` with the codegen `minhash_sig` column, split into the rows
+    * that carry a signature and the (doc_id, ts, text) rows that do not:
+    * docs with fewer than GramLen tokens can never collide, so every
+    * suppressor unions them back past its state untouched.
+    */
+  private def signed(docs: DataFrame): (DataFrame, Dataset[Doc]) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    graft.functions.VectorFunctions.register(spark)
+    val withSig = docs.withColumn("sig", call_function("minhash_sig", col("text"),
+      lit(graft.MinHash.NumPerms), lit(graft.MinHash.GramLen)))
+    (withSig.filter(col("sig").isNotNull),
+      withSig.filter(col("sig").isNull)
+        .select(col("doc_id"), col("ts"), col("text")).as[Doc])
+  }
+
+  /** LSH band `b`'s bucket key over the `sig` column. */
+  private def bandBucket(b: Int): org.apache.spark.sql.Column = {
+    val rows = graft.MinHash.BandRows
+    xxhash64((lit(b) +: (0 until rows).map(r => col("sig").getItem(b * rows + r))): _*)
+  }
+
+  /** Signed rows keyed by their first-band bucket, in KeyedDoc order. */
+  private def firstBandKeyed(withSig: DataFrame): DataFrame =
+    withSig.withColumn("bucket", bandBucket(0))
+      .select(col("bucket"), col("doc_id"), col("ts"), col("text"), col("sig"))
+
+  /** A bucket's retained entries minus those aged past the event-time TTL
+    * horizon (watermark − ttl); nothing ages out before the first
+    * watermark or under an infinite TTL.
+    */
+  private def unexpired(state: GroupState[BucketState], wm: Long,
+      ttlMillis: Long): List[BucketEntry] = {
+    val horizon =
+      if (ttlMillis == Long.MaxValue || wm <= 0L) Long.MinValue
+      else wm - ttlMillis
+    state.getOption.getOrElse(BucketState(Nil)).entries.filter(_.tsMs > horizon)
+  }
+
+  /** Re-arm a streaming bucket's event-time timeout one TTL past its
+    * newest arrival `maxTs`, and always past the watermark `wm`.
+    */
+  private def rearm(state: GroupState[BucketState], streaming: Boolean,
+      ttlMillis: Long, maxTs: Long, wm: Long): Unit =
+    if (streaming && ttlMillis != Long.MaxValue && maxTs != Long.MinValue) {
+      // saturating add: a finite-but-huge TTL must mean "far future",
+      // never a wrapped-negative timer that evicts live state on the
+      // next watermark tick
+      val expiry =
+        if (ttlMillis > Long.MaxValue - maxTs) Long.MaxValue
+        else maxTs + ttlMillis
+      state.setTimeoutTimestamp(math.max(expiry, wm + 1))
+    }
+
   /** Streaming near-duplicate suppression at ingest: each arriving doc's
     * MinHash signature is computed INLINE by the codegen `minhash_sig`
     * kernel (a per-row map — no shuffle added to the stream), the doc is
@@ -181,23 +235,13 @@ object StreamOps {
   def nearDupSuppress(docs: DataFrame, minEst: Double = 0.8,
       ttlMillis: Long = Long.MaxValue,
       watermarkDelay: String = "0 seconds"): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
-    val nPerms = graft.MinHash.NumPerms
-    val bandRows = graft.MinHash.BandRows
+    import docs.sparkSession.implicits._
     val streaming = docs.isStreaming
-    val withSig = docs.withColumn("sig",
-      call_function("minhash_sig", col("text"), lit(nPerms), lit(graft.MinHash.GramLen)))
-    val noSig = withSig.filter(col("sig").isNull)
-      .select(col("doc_id"), col("ts"), col("text")).as[Doc]
-    val keyed = withSig.filter(col("sig").isNotNull)
-      .withColumn("bucket",
-        xxhash64((lit(0) +: (0 until bandRows).map(r => col("sig").getItem(r))): _*))
-      .select(col("bucket"), col("doc_id"), col("ts"), col("text"), col("sig"))
+    val (withSig, noSig) = signed(docs)
+    val admitted = firstBandKeyed(withSig)
       .withWatermark("ts", watermarkDelay)
       .as[KeyedDoc]
-    val admitted = keyed.groupByKey(_.bucket)
+      .groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, Doc](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (_: Long, rows: Iterator[KeyedDoc], state: GroupState[BucketState]) =>
@@ -207,12 +251,7 @@ object StreamOps {
             Iterator.empty
           } else {
             val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MinValue
-            // evict individual sigs that have aged past the TTL horizon
-            val horizon =
-              if (ttlMillis == Long.MaxValue || wm <= 0L) Long.MinValue
-              else wm - ttlMillis
-            var seen = state.getOption.getOrElse(BucketState(Nil)).entries
-              .filter(_.tsMs > horizon)
+            var seen = unexpired(state, wm, ttlMillis)
             val out = List.newBuilder[Doc]
             var maxTs = Long.MinValue
             rows.toArray.sortInPlaceBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
@@ -223,15 +262,7 @@ object StreamOps {
               }
             }
             state.update(BucketState(seen))
-            if (streaming && ttlMillis != Long.MaxValue && maxTs != Long.MinValue) {
-              // saturating add: a finite-but-huge TTL must mean "far
-              // future", never a wrapped-negative timer that evicts live
-              // state on the next watermark tick
-              val expiry =
-                if (ttlMillis > Long.MaxValue - maxTs) Long.MaxValue
-                else maxTs + ttlMillis
-              state.setTimeoutTimestamp(math.max(expiry, wm + 1))
-            }
+            rearm(state, streaming, ttlMillis, maxTs, wm)
             out.result().iterator
           }
       }
@@ -277,21 +308,11 @@ object StreamOps {
     */
   def nearDupSuppressTws(docs: DataFrame, minEst: Double = 0.8,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
-    val nPerms = graft.MinHash.NumPerms
-    val bandRows = graft.MinHash.BandRows
-    val withSig = docs.withColumn("sig",
-      call_function("minhash_sig", col("text"), lit(nPerms), lit(graft.MinHash.GramLen)))
-    val noSig = withSig.filter(col("sig").isNull)
-      .select(col("doc_id"), col("ts"), col("text")).as[Doc]
+    import docs.sparkSession.implicits._
+    val (withSig, noSig) = signed(docs)
     val timeMode =
       if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    val admitted = withSig.filter(col("sig").isNotNull)
-      .withColumn("bucket",
-        xxhash64((lit(0) +: (0 until bandRows).map(r => col("sig").getItem(r))): _*))
-      .select(col("bucket"), col("doc_id"), col("ts"), col("text"), col("sig"))
+    val admitted = firstBandKeyed(withSig)
       .as[KeyedDoc]
       .groupByKey(_.bucket)
       .transformWithState(new NearDupProcessor(minEst, ttl),
@@ -325,10 +346,7 @@ object StreamOps {
       allowUnsafeChain: Boolean = false): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
-    val nPerms = graft.MinHash.NumPerms
-    val bandRows = graft.MinHash.BandRows
-    val nBands = nPerms / bandRows
+    val nBands = graft.MinHash.NumPerms / graft.MinHash.BandRows
     val streaming = docs.isStreaming
     // Spark's global-watermark checker conservatively rejects ANY
     // event-time-timeout fMGWS feeding a stateful agg, because a handler
@@ -359,16 +377,10 @@ object StreamOps {
           "(caller opted in via allowUnsafeChain=true)")
       spark.conf.set(checkConf, "false")
     }
-    val withSig = docs.withColumn("sig",
-      call_function("minhash_sig", col("text"), lit(nPerms), lit(graft.MinHash.GramLen)))
-    val noSig = withSig.filter(col("sig").isNull)
-      .select(col("doc_id"), col("ts"), col("text")).as[Doc]
-    val bucketKeys = array((0 until nBands).map(b =>
-      xxhash64((lit(b) +: (0 until bandRows).map(r =>
-        col("sig").getItem(b * bandRows + r))): _*)): _*)
-    val banded = withSig.filter(col("sig").isNotNull)
+    val (withSig, noSig) = signed(docs)
+    val banded = withSig
       .select(col("doc_id"), col("ts"), col("text"), col("sig"),
-        posexplode(bucketKeys).as(Seq("band", "bucket")))
+        posexplode(array((0 until nBands).map(bandBucket): _*)).as(Seq("band", "bucket")))
       .select(col("band"), col("bucket"), col("doc_id"), col("ts"), col("text"), col("sig"))
       .withWatermark("ts", watermarkDelay)
       .as[BandedDoc]
@@ -382,11 +394,7 @@ object StreamOps {
             Iterator.empty
           } else {
             val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MinValue
-            val horizon =
-              if (ttlMillis == Long.MaxValue || wm <= 0L) Long.MinValue
-              else wm - ttlMillis
-            var seen = state.getOption.getOrElse(BucketState(Nil)).entries
-              .filter(_.tsMs > horizon)
+            var seen = unexpired(state, wm, ttlMillis)
             val out = List.newBuilder[BandVerdict]
             var maxTs = Long.MinValue
             rows.toArray.sortInPlaceBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
@@ -396,15 +404,7 @@ object StreamOps {
               out += BandVerdict(d.doc_id, d.ts, d.text, matched)
             }
             state.update(BucketState(seen))
-            if (streaming && ttlMillis != Long.MaxValue && maxTs != Long.MinValue) {
-              // saturating add: a finite-but-huge TTL must mean "far
-              // future", never a wrapped-negative timer that evicts live
-              // state on the next watermark tick
-              val expiry =
-                if (ttlMillis > Long.MaxValue - maxTs) Long.MaxValue
-                else maxTs + ttlMillis
-              state.setTimeoutTimestamp(math.max(expiry, wm + 1))
-            }
+            rearm(state, streaming, ttlMillis, maxTs, wm)
             out.result().iterator
           }
       }

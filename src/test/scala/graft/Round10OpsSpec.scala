@@ -117,7 +117,7 @@ class Round10OpsSpec extends SparkSpec {
       val before = Similarity.kmeansFitCount.get()
       // 20 appended vectors: exact copies of members 0..19 under ids ≥ 5000
       val newVecs = vecs(20).select(($"vec_id" + 5000).as("vec_id"), $"embedding")
-      val grown = Graft.annAssign(fitted, newVecs) // facade alias of ivfAssign
+      val grown = Similarity.ivfAssign(fitted, newVecs)
       assert(grown.k == 8 && grown.centroids.eq(fitted.centroids),
         "append must reuse the frozen centroid table")
       // the appended members are probe-able corpus rows: each finds its

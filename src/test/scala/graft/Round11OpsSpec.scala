@@ -228,12 +228,12 @@ class Round11OpsSpec extends SparkSpec {
     assert(kept(auditRange) == 1, s"range gate must drop the boilerplate doc: $auditRange")
   }
 
-  test("facade editNearDupPairs: both paths, identical output") {
+  test("edit-distance pairs: banded and q-gram paths, identical output") {
     val docs = Seq((1L, "hello world"), (2L, "hello worlds"), (3L, "bye"))
       .toDF("doc_id", "text")
-    val a = Graft.editNearDupPairs(spark, docs, maxDist = 1)
+    val a = Dedup.editDistancePairsOf(docs, maxDist = 1)
       .collect().map(_.toString).sorted.toSeq
-    val b = Graft.editNearDupPairs(spark, docs, maxDist = 1, atScale = true)
+    val b = Dedup.editDistancePairsQGram(spark, docs, maxDist = 1)
       .collect().map(_.toString).sorted.toSeq
     assert(a == b && a.nonEmpty)
   }
@@ -254,7 +254,7 @@ class Round11OpsSpec extends SparkSpec {
     assert(out.isStreaming && out.columns.contains("doc_id"))
   }
 
-  test("editDedupGroups clusters transitive edit chains") {
+  test("edit-distance dedup groups cluster transitive edit chains") {
     // A~B (1 edit), B~C (1 edit), but A~C is 2 edits > maxDist=1 —
     // clustering must still put all three in one group (chaining),
     // which a keep-one-of-each-pair policy would get wrong
@@ -262,11 +262,15 @@ class Round11OpsSpec extends SparkSpec {
       (10L, "abcdef"), (11L, "abcdeX"), (12L, "abcdYX"),
       (20L, "totally unrelated")
     ).toDF("doc_id", "text")
-    for (atScale <- Seq(false, true)) {
-      val m = Graft.editDedupGroups(spark, docs, maxDist = 1, atScale = atScale)
+    val paths = Seq(
+      "banded" -> Dedup.editDistancePairsOf(docs, maxDist = 1),
+      "q-gram" -> Dedup.editDistancePairsQGram(spark, docs, maxDist = 1))
+    for ((path, pairs) <- paths) {
+      val m = Dedup.connectedComponents(spark, docs.select($"doc_id"),
+          pairs.select($"a_id", $"b_id"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(m(10L) == 10L && m(11L) == 10L && m(12L) == 10L,
-        s"chain must collapse to min id (atScale=$atScale): $m")
+        s"chain must collapse to min id ($path pairs): $m")
       assert(m(20L) == 20L, "singleton labels itself")
     }
   }

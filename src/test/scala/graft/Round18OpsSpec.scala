@@ -294,7 +294,7 @@ class Round18OpsSpec extends SparkSpec {
 
   test("MediaDedup stage keeps exactly the per-modality cluster representatives, audited") {
     val recs = mediaCorpus.toDS()
-    val (kept, audit) = Graft.mediaDedupAudited(spark, recs, maxHamming = 3)
+    val (kept, audit) = Multimodal.mediaDedupAudited(spark, recs, maxHamming = 3)
     val keptIds = kept.collect().map(_.id).toSet
     // images {1,2,3} cluster (copy + ≤3-bit perturb) → rep 1; audio
     // {5,6,7} cluster (stereo re-layout + sign flip share the |s|
@@ -315,7 +315,7 @@ class Round18OpsSpec extends SparkSpec {
 
   test("media streaming screen drops delivered signatures, admits fresh and unscorable arrivals") {
     val corpus = mediaCorpus.toDS()
-    val delivered = Graft.mediaSigFingerprints(
+    val delivered = Multimodal.mediaSigFingerprints(
       corpus.filter(r => r.id <= 5L || r.id == 10L)).localCheckpoint()
     // batch-frame equivalence first (how the contract is pinned): 6 and
     // 7 hash to delivered 5's sig → dropped; 11 hashes to delivered
@@ -323,7 +323,7 @@ class Round18OpsSpec extends SparkSpec {
     // exact-sig screening admits it (near-dups stay batch-side, the F28
     // split); 8 is fresh; 9's NULL sig and frameless 13 pass through
     val arrivals = corpus.filter(r => r.id >= 6L && r.id != 10L)
-    val admitted = Graft.mediaDedupStream(arrivals, delivered)
+    val admitted = Multimodal.mediaDedupStream(arrivals, delivered)
       .collect().map(_.id).toSet
     assert(admitted == Set(8L, 9L, 12L, 13L), admitted.toString)
     // cross-modality isolation: an AUDIO arrival must never be screened
@@ -333,13 +333,13 @@ class Round18OpsSpec extends SparkSpec {
       when(col("modality") === "audio", lit("image"))
         .when(col("modality") === "image", lit("video"))
         .otherwise(lit("audio")))
-    val admittedX = Graft.mediaDedupStream(arrivals, crossed)
+    val admittedX = Multimodal.mediaDedupStream(arrivals, crossed)
       .collect().map(_.id).toSet
     assert(admittedX == Set(6L, 7L, 8L, 9L, 11L, 12L, 13L), admittedX.toString)
     // and on a REAL stream: same arrivals through a MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Multimodal.MediaRecord]
-    val q = Graft.mediaDedupStream(in.toDS(), delivered)
+    val q = Multimodal.mediaDedupStream(in.toDS(), delivered)
       .writeStream.format("memory").queryName("media_screen18")
       .outputMode("append").start()
     in.addData(mediaCorpus.filter(r => r.id >= 6L && r.id != 10L): _*)

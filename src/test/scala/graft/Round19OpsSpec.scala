@@ -290,7 +290,7 @@ class Round19OpsSpec extends SparkSpec {
       .agg(max(col("cluster_size"))).head().getLong(0)
     assert(unverified === 2L && verified === 1L)
     // and the audited stage (verify on by default) keeps BOTH exemplars
-    val (kept, audit) = Graft.mediaDedupAudited(spark, recs)
+    val (kept, audit) = Multimodal.mediaDedupAudited(spark, recs)
     assert(kept.collect().map(_.id).toSet === Set(1L, 2L))
     assert(audit.last.kept === 2L)
   }
@@ -422,7 +422,7 @@ class Round19OpsSpec extends SparkSpec {
         vidMeta), // NULL sig — passes through
       Multimodal.MediaRecord(14L, "image", base.clone(),
         Multimodal.MediaMeta("fake/raw", 9, 8))) // other modality: isolated
-    val bands = Graft.mediaSigBands(delivered, 3).localCheckpoint()
+    val bands = Multimodal.mediaSigBands(delivered, 3).localCheckpoint()
     // ground truth from the brute verdicts: admitted iff NULL sig or no
     // delivered same-modality sig within 3 bits
     val deliveredSigs = Multimodal.mediaSigs(delivered)
@@ -442,7 +442,7 @@ class Round19OpsSpec extends SparkSpec {
     assert(batch === want, batch.toString)
     // the exact screen ADMITS the 1-3-bit re-encode (the gap this closes)
     val exact = Multimodal.mediaDedupStream(arrivals.toDS(),
-      Graft.mediaSigFingerprints(delivered))
+      Multimodal.mediaSigFingerprints(delivered))
       .collect().map(_.id).toSet
     assert(exact === want + 11L, exact.toString)
     // MemoryStream run ≡ batch

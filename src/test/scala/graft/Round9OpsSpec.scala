@@ -101,7 +101,7 @@ class Round9OpsSpec extends SparkSpec {
     // because only ivfFit had ever registered the probe plan's temp
     // functions and this session never ran it.
     val freshSession = spark.newSession()
-    val loaded = Graft.annLoad(freshSession, dir) // facade alias of Similarity.ivfLoad
+    val loaded = Similarity.ivfLoad(freshSession, dir)
     assert(loaded.k == 8, s"k recovered from centroid rows: ${loaded.k}")
     val pred = col("vec_id") < 10
     val direct = Similarity.ivfProbe(fitted, pred, nprobe = 3, topK = 5).collect()
